@@ -1,0 +1,108 @@
+#!/usr/bin/env python
+"""State-change checks between two checkouts of this repo.
+
+TREE is the checkout whose src/ is imported, so one copy of this script
+drives both the parent tree (exported with `git archive`) and the
+changed tree. All legs read the 400-doc fixture of the streaming tests,
+.scratch/pages_stream_400 of the tree this script lives in.
+
+    python scripts/state_compat.py TREE checksum
+        BENCH/scaling_job._determinism_checksum of TREE: xxhash of every
+        column of every update-mode emission, per epoch. Must print the
+        same value for the parent and the change.
+    python scripts/state_compat.py PARENT resume 0 WORK
+    python scripts/state_compat.py CHANGE resume 1 WORK
+    python scripts/state_compat.py CHANGE verify WORK
+        Leg 0 drains the first 4 fixture files through the per-key and
+        bucketed tumbling and the bucketed pane builders into
+        checkpoints under WORK; leg 1 adds the other 4 files and resumes
+        the same checkpoints; verify matches the union of both legs'
+        emissions against the batch oracles.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import sys
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PAGES = os.path.join(HERE, ".scratch", "pages_stream_400")
+TREE = os.path.abspath(sys.argv[1])
+sys.path[:0] = [os.path.join(TREE, "src"), os.path.join(TREE, "BENCH")]
+os.environ["PYTHONPATH"] = os.path.join(TREE, "src")
+
+import pandas as pd  # noqa: E402
+
+from glcmstream import state, stream  # noqa: E402
+from glcmstream.session import get_spark  # noqa: E402
+
+BUILDERS = {
+    "per_key": state.stateful_glcm_agg,
+    "bucketed": lambda s: state.stateful_glcm_agg_bucketed(s, buckets=16),
+    "pane_bucketed": lambda s: state.stateful_glcm_pane_agg_bucketed(
+        s, buckets=16),
+}
+KEY = ["lang", "host", "window_start"]
+
+
+def _drain(df, ckpt: str) -> pd.DataFrame:
+    rows: list = []
+    q = (df.writeStream.outputMode("update")
+         .foreachBatch(lambda d, eid: rows.append(d.toPandas()))
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return pd.concat(rows, ignore_index=True)
+
+
+def resume(spark, leg: int, work: str) -> None:
+    files = sorted(os.listdir(PAGES))
+    for name, fn in BUILDERS.items():
+        src = os.path.join(work, f"src_{name}")
+        os.makedirs(src, exist_ok=True)
+        for f in files[:4] if leg == 0 else files[4:]:
+            # copy2 keeps the fixture's increasing mtimes: the file
+            # source replays new files in mtime order
+            shutil.copy2(os.path.join(PAGES, f), src)
+        rows = _drain(fn(stream.pages_stream(spark, src)),
+                      os.path.join(work, f"ckpt_{name}"))
+        rows.to_pickle(os.path.join(work, f"rows_{name}_{leg}.pkl"))
+        print(name, "leg", leg, "emitted", len(rows), "rows")
+
+
+def verify(spark, work: str) -> None:
+    pages = stream.read_pages_batch(spark, PAGES)
+    for name in BUILDERS:
+        rows = pd.concat([pd.read_pickle(
+            os.path.join(work, f"rows_{name}_{leg}.pkl")) for leg in (0, 1)],
+            ignore_index=True)
+        if name.startswith("pane"):
+            got = state.sliding_windows_from_emissions(spark.createDataFrame(
+                rows, state.PANE_OUTPUT_SCHEMA)).toPandas()
+            exp = state.batch_glcm_agg_sliding(pages).toPandas()
+        else:
+            got = rows.sort_values("n_docs").groupby(KEY, dropna=False) \
+                .tail(1).drop(columns="n_batches")
+            exp = state.batch_glcm_agg(pages).drop("n_batches").toPandas()
+        got = got[exp.columns].sort_values(KEY).reset_index(drop=True)
+        exp = exp.sort_values(KEY).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, exp)
+        print(name, "matches the batch oracle:", len(got), "windows,",
+              int(got["n_docs"].sum()), "docs")
+
+
+def main() -> None:
+    spark = get_spark(app="state-compat")
+    mode = sys.argv[2]
+    if mode == "checksum":
+        import scaling_job
+        print(scaling_job._determinism_checksum(spark, PAGES))
+    elif mode == "resume":
+        resume(spark, int(sys.argv[3]), sys.argv[4])
+    else:
+        verify(spark, sys.argv[3])
+
+
+if __name__ == "__main__":
+    main()

@@ -96,10 +96,7 @@ def match_pattern(key, pdfs: Iterator[pd.DataFrame],
         buf_ts, buf_code, last_click, last_error = [], [], -1, -1
 
     out: list[tuple[int, int, int]] = []
-    try:
-        wm_ms = state.getCurrentWatermarkMs()
-    except Exception:
-        wm_ms = 0
+    wm_ms = state.getCurrentWatermarkMs()
     wm_us = wm_ms * 1000
 
     if state.hasTimedOut:
@@ -150,17 +147,11 @@ def match_pattern(key, pdfs: Iterator[pd.DataFrame],
     click_alive = last_click >= 0 and last_click + WINDOW_US > wm_us
     if keep_ts:
         state.update((keep_ts, keep_code, int(last_click), int(last_error)))
-        try:
-            state.setTimeoutTimestamp(max(max(keep_ts) // 1000, wm_ms + 1))
-        except Exception:
-            pass  # NoTimeout config (batch-style tests)
+        state.setTimeoutTimestamp(max(max(keep_ts) // 1000, wm_ms + 1))
     elif click_alive:
         state.update(([], [], int(last_click), int(last_error)))
-        try:
-            state.setTimeoutTimestamp(
-                max((last_click + WINDOW_US) // 1000 + 1, wm_ms + 1))
-        except Exception:
-            pass
+        state.setTimeoutTimestamp(
+            max((last_click + WINDOW_US) // 1000 + 1, wm_ms + 1))
     else:
         state.remove()
     if out:

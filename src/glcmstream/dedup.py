@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 MINHASH_PERMS = 32
 LSH_BANDS = 8          # default: 8 bands x 4 rows (parameterizable below)
@@ -167,21 +167,6 @@ def simhash_udf(text: pd.Series) -> pd.Series:
         sig = np.packbits((vote > 0), bitorder="little") \
             .view(np.uint64)[0]
         out[i] = np.int64(sig.astype(np.int64))
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def jaccard_shingles_udf(t1: pd.Series, t2: pd.Series) -> pd.Series:
-    """Exact shingle-set Jaccard for candidate verification."""
-    h1 = _token_hashes(t1)
-    h2 = _token_hashes(t2)
-    out = np.zeros(len(t1))
-    for i, (x, y) in enumerate(zip(h1, h2)):
-        if x.size == 0 and y.size == 0:
-            out[i] = 1.0
-        else:
-            inter = np.intersect1d(x, y).size
-            out[i] = inter / (x.size + y.size - inter)
     return pd.Series(out)
 
 

@@ -10,6 +10,30 @@ accumulation").
 State schema is kept primitive (packed binary counts + two longs) for
 checkpoint schema stability across restarts (SURVEY.md §7 watch list).
 
+Layout. Four applyInPandasWithState state functions, two per window
+kind and grouping strategy:
+
+- `_window_fn` (one group per (lang, host, window start)) and
+  `_bucket_window_fn` (one group per xxhash64 bucket of those keys,
+  all of the bucket's count matrices in one packed blob) serve BOTH
+  tumbling windows and sliding-window panes. Each is parameterized only
+  by the window length and by what it emits: Haralick features
+  (OUTPUT_SCHEMA) or the packed running counts (PANE_OUTPUT_SCHEMA).
+  A pane is the tumbling window of the slide duration, so the pane
+  builders run the tumbling state at window=slide.
+- `_session_fn` and `_bucket_session_fn` hold open session fragments;
+  their bucket blob stores [start, last, n_docs] where the window blob
+  stores [start, n_docs, n_batches], so they stay separate.
+
+All seven public builders are thin wrappers over one input helper,
+`_stateful_glcm` (watermark, try_parse_url host, window/pane/timestamp
+column, map-side gvec UDF, optional bucket hash). Every state operator
+runs under GroupStateTimeout.EventTimeTimeout; there is no NoTimeout
+mode. The event-time timeout is what evicts state once the watermark
+passes a key's window end (plus RETAIN_US, or the session gap), and it
+also switches on Spark's late-row filter in front of the state function,
+so no row older than the watermark ever reaches evicted state.
+
 Cost model (measured at 55k docs / 13.4k (lang,host,window) keys x 2
 epochs, local[32]): the python state function itself is ~1.4s of wall
 (balanced across workers; per-key input conversion + vector sum +
@@ -30,6 +54,7 @@ not ship.
 from __future__ import annotations
 
 import os
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -43,6 +68,11 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
 from . import config, kernel
 
 L2 = config.GRAY_LEVELS * config.GRAY_LEVELS
+
+# the one timeout mode of every state operator (see module docstring)
+TIMEOUT = GroupStateTimeout.EventTimeTimeout
+# a window key leaves state once the watermark passes its end + 1 h
+RETAIN_US = 3_600_000_000
 
 STATE_SCHEMA = StructType([
     # packed little-endian int64 counts: a BinaryType state value crosses
@@ -64,64 +94,133 @@ OUTPUT_SCHEMA = StructType([
     *[StructField(n, DoubleType()) for n in config.HARALICK_FEATURES],
 ])
 
+# A sliding window of length L and slide S (S divides L) is the sum of
+# L/S contiguous PANES of duration S. The GLCM count matrix is a sum
+# monoid, so accumulating per PANE and summing panes at emission is
+# exact — and each document's 4 KiB count vector crosses the state
+# exchange ONCE (keyed by its pane) instead of L/S times (the naive
+# F.window sliding duplication), which at 100 TB is the difference
+# between one corpus-sized exchange and L/S of them. Features are a
+# nonlinear function of counts, so a pane emits its running COUNTS and
+# features are computed once per assembled window.
+PANE_OUTPUT_SCHEMA = StructType([
+    StructField("lang", StringType()),
+    StructField("host", StringType()),
+    StructField("pane_start", TimestampType()),
+    StructField("counts", BinaryType()),
+    StructField("n_docs", LongType()),
+    StructField("n_batches", LongType()),
+])
 
-def _features_of_counts(counts: np.ndarray) -> dict[str, float]:
-    P = kernel.normalize_glcm(counts.reshape(1, config.GRAY_LEVELS,
-                                             config.GRAY_LEVELS))
-    f = kernel.haralick_batch(P)
-    return {k: float(v[0]) for k, v in f.items()}
+
+def _duration_us(spec: str) -> int:
+    n, unit = spec.split()
+    mult = {"second": 1_000_000, "seconds": 1_000_000,
+            "minute": 60_000_000, "minutes": 60_000_000,
+            "hour": 3_600_000_000, "hours": 3_600_000_000}[unit]
+    return int(n) * mult
 
 
-def accumulate_glcm(key, pdfs: Iterator[pd.DataFrame],
-                    state: GroupState) -> Iterator[pd.DataFrame]:
-    """State function: add this batch's per-doc GLCM count vectors into
-    the group's accumulated matrix; emit the features of the running total.
+def _features(mats: np.ndarray) -> dict[str, np.ndarray]:
+    """(n, L2) integer-valued count matrices -> the n Haralick feature
+    rows (float64 conversion is exact: counts < 2^53)."""
+    return kernel.haralick_batch(kernel.normalize_glcm(
+        mats.astype(np.float64).reshape(len(mats), config.GRAY_LEVELS,
+                                        config.GRAY_LEVELS)))
 
-    key = (lang, host, window_start). Input rows carry `gvec` — the
-    per-document flattened L² count vector, computed MAP-SIDE by
-    glcm_vec_udf before the state exchange. The raw html never crosses
-    the shuffle (round-1 verdict: shuffling page bodies into 32 state
-    partitions serializes the whole corpus per window at 10^12 docs and
-    concentrates kernel compute on hot keys); the state function is a
-    pure vector sum, exact in any accumulation order because counts are
-    integer-valued float64.
-    """
-    lang, host, window_start = key
-    if state.hasTimedOut:
-        # watermark passed window end: final emission already happened on
-        # the last data batch; just drop the state.
-        state.remove()
-        return
-    if state.exists:
-        counts_buf, n_docs, n_batches = state.get
-        counts = np.frombuffer(counts_buf, dtype="<i8").copy()
-    else:
-        counts = np.zeros(L2, dtype=np.int64)
-        n_docs = 0
-        n_batches = 0
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-            .reshape(len(pdf), L2)
-        counts += vecs.sum(axis=0, dtype=np.int64)
-        n_docs += len(pdf)
-        n_batches += 1
-    state.update((counts.astype("<i8").tobytes(),
-                  int(n_docs), int(n_batches)))
-    # evict 1h after the window start, but never at/behind the current
-    # watermark (setTimeoutTimestamp rejects timestamps <= watermark)
-    try:
-        wm = state.getCurrentWatermarkMs()
-        target = int(pd.Timestamp(window_start).value // 1_000_000) \
-            + 3_600_000
-        state.setTimeoutTimestamp(max(target, wm + 3_600_000))
-    except Exception:
-        pass  # NoTimeout config (batch-style tests)
-    feats = _features_of_counts(counts.astype(np.float64))
-    yield pd.DataFrame([{
-        "lang": lang, "host": host, "window_start": window_start,
-        "n_docs": int(n_docs), "n_batches": int(n_batches), **feats}])
+
+def _gvecs(pdf: pd.DataFrame) -> np.ndarray:
+    """A chunk's packed per-doc count vectors -> (rows, L2) uint32."""
+    return np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
+        .reshape(len(pdf), L2)
+
+
+def _arm(state: GroupState, evict_us: int) -> None:
+    """Evict the group once the watermark passes evict_us (rounded up
+    to whole ms), never at or behind the current watermark, which
+    setTimeoutTimestamp rejects."""
+    state.setTimeoutTimestamp(max(-(-int(evict_us) // 1000),
+                                  state.getCurrentWatermarkMs() + 1))
+
+
+def _pack_counts(counts: np.ndarray) -> bytes:
+    """Pane-EMISSION wire codec: zlib(level 1) over the '<i8' count
+    matrix. A pane's 1024-cell matrix is dominated by small/zero cells
+    (one (0,0) pad-pair hot cell aside), so the 8 KiB blob compresses
+    ~8x — and the emission payload is what every downstream pass moves:
+    the update-mode sink, the finalizer's exchange, the continuous
+    emitter's pane store. At the 55k-doc bench fixture that is ~255 MB
+    of emissions shrunk to ~35 MB for ~60 ms of worker CPU; on the
+    memory-bandwidth-contended host this is the difference between the
+    sliding leg amplifying under load and not. Deterministic (fixed
+    level, one zlib), so the per-key and bucketed pane paths still emit
+    byte-identical rows. Internal wire format: every consumer
+    (finalizers, emitter store) is in this module."""
+    return zlib.compress(counts.astype("<i8").tobytes(), 1)
+
+
+def _unpack_counts_rows(col) -> np.ndarray:
+    """Column of emission count blobs -> (n, L2) int64 matrix."""
+    return np.frombuffer(
+        b"".join(zlib.decompress(b) for b in col),
+        dtype="<i8").reshape(len(col), L2)
+
+
+def _window_rows(keys: list, meta: np.ndarray, mats: np.ndarray,
+                 counts: bool) -> pd.DataFrame:
+    """Emission rows of window keys [(lang, host)] with meta (n, 3)
+    [start_us, n_docs, n_batches] and count matrices mats (n, L2):
+    PANE_OUTPUT_SCHEMA rows carrying the packed counts if `counts`,
+    else OUTPUT_SCHEMA rows carrying the features."""
+    cols = {"lang": [k[0] for k in keys], "host": [k[1] for k in keys]}
+    start = pd.to_datetime(meta[:, 0], unit="us")
+    if counts:
+        return pd.DataFrame({**cols, "pane_start": start,
+                             "counts": [_pack_counts(m) for m in mats],
+                             "n_docs": meta[:, 1], "n_batches": meta[:, 2]})
+    return pd.DataFrame({**cols, "window_start": start,
+                         "n_docs": meta[:, 1], "n_batches": meta[:, 2],
+                         **_features(mats)})
+
+
+def _window_fn(window_us: int, counts: bool):
+    """Per-key window state function, key = (lang, host, window start):
+    add this batch's per-doc GLCM count vectors into the key's
+    accumulated matrix and emit the running total (features, or packed
+    counts for a pane — see _window_rows).
+
+    Input rows carry `gvec` — the per-document flattened L² count
+    vector, computed MAP-SIDE by glcm_vec_udf before the state exchange.
+    The raw html never crosses the shuffle (round-1 verdict: shuffling
+    page bodies into 32 state partitions serializes the whole corpus per
+    window at 10^12 docs and concentrates kernel compute on hot keys);
+    the state function is a pure vector sum, exact in any accumulation
+    order because counts are integers."""
+    def accumulate(key, pdfs: Iterator[pd.DataFrame],
+                   state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # the watermark passed the window end: the final emission
+            # already happened on the last data batch
+            state.remove()
+            return
+        lang, host, start = key
+        if state.exists:
+            buf, n_docs, n_batches = state.get
+            total = np.frombuffer(buf, dtype="<i8").copy()
+        else:
+            total, n_docs, n_batches = np.zeros(L2, np.int64), 0, 0
+        for pdf in pdfs:
+            if len(pdf):
+                total += _gvecs(pdf).sum(axis=0, dtype=np.int64)
+                n_docs += len(pdf)
+                n_batches += 1
+        start_us = pd.Timestamp(start).value // 1000
+        state.update((total.astype("<i8").tobytes(), int(n_docs),
+                      int(n_batches)))
+        _arm(state, start_us + window_us + RETAIN_US)
+        yield _window_rows([(lang, host)], np.array(
+            [[start_us, n_docs, n_batches]], np.int64), total[None], counts)
+    return accumulate
 
 
 def glcm_vec_udf():
@@ -134,7 +233,6 @@ def glcm_vec_udf():
     int64/float64, so accumulated features are bit-identical to the
     float64 packing."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
 
     @pandas_udf(BinaryType())
     def _vec(html: pd.Series) -> pd.Series:
@@ -145,40 +243,75 @@ def glcm_vec_udf():
     return _vec
 
 
-def stateful_glcm_agg(pages_stream: DataFrame,
-                      window: str = config.TUMBLING_WINDOW,
-                      watermark: str = config.WATERMARK_DELAY,
-                      timeout: str = GroupStateTimeout.EventTimeTimeout
-                      ) -> DataFrame:
-    """pages stream -> per-(lang, host, tumbling-window) incrementally
-    accumulated GLCM Haralick features.
+def _stateful_glcm(stream: DataFrame, watermark: str, col: str, value,
+                   fn, out_schema: StructType, state_schema: StructType,
+                   buckets: int | None = None,
+                   session: bool = False) -> DataFrame:
+    """The input side shared by every stateful builder: watermark on
+    warc_ts, host via try_parse_url (plain parse_url THROWS on a
+    malformed URL under Spark 4 ANSI, killing the stream), the
+    window/pane/timestamp column `col` = `value`, the map-side gvec UDF
+    unless the stream already carries gvec (the fused scan), then one
+    state group per fine key — (lang, host, col), or (lang, host) for a
+    session — or, with `buckets`, per xxhash64 bucket of the fine key.
 
     Decode + per-doc GLCM run map-side (scan partitions, before any
     exchange); only the fixed-size count vector shuffles to the state
     partitions, so hot-host keys cost the state store an add, not a
     kernel run, and page bodies never cross a shuffle."""
-    keyed = (pages_stream
+    fine = ["lang", "host"] + ([] if session else [col])
+    keyed = (stream
              .withWatermark("warc_ts", watermark)
              .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("window_start",
-                         F.window("warc_ts", window).start)
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .select("lang", "host", "window_start", "gvec", "warc_ts"))
-    return (keyed.groupBy("lang", "host", "window_start")
-            .applyInPandasWithState(accumulate_glcm, OUTPUT_SCHEMA,
-                                    STATE_SCHEMA, "update", timeout))
+             .withColumn(col, value))
+    if "gvec" not in stream.columns:
+        keyed = keyed.withColumn("gvec", glcm_vec_udf()("html"))
+    lead = []
+    if buckets is not None:
+        keyed = keyed.withColumn("bucket", F.pmod(F.xxhash64(*fine),
+                                                  F.lit(buckets)))
+        lead = ["bucket"]
+    return (keyed.select(*lead, "lang", "host", col, "gvec", "warc_ts")
+            .groupBy(*(lead or fine))
+            .applyInPandasWithState(fn, out_schema, state_schema,
+                                    "update", TIMEOUT))
+
+
+def _window_agg(stream: DataFrame, window: str, watermark: str,
+                counts: bool, buckets: int | None = None) -> DataFrame:
+    """Tumbling-window state (features) or, with `counts`, pane state
+    (packed counts; a pane is the tumbling window of the slide)."""
+    w_us = _duration_us(window)
+    start = F.window("warc_ts", window).start
+    out = PANE_OUTPUT_SCHEMA if counts else OUTPUT_SCHEMA
+    if buckets is None:
+        return _stateful_glcm(stream, watermark,
+                              "pane_start" if counts else "window_start",
+                              start, _window_fn(w_us, counts), out,
+                              STATE_SCHEMA)
+    return _stateful_glcm(stream, watermark, "ws_us", F.unix_micros(start),
+                          _bucket_window_fn(w_us, counts), out,
+                          BUCKET_STATE_SCHEMA, buckets)
+
+
+def stateful_glcm_agg(pages_stream: DataFrame,
+                      window: str = config.TUMBLING_WINDOW,
+                      watermark: str = config.WATERMARK_DELAY
+                      ) -> DataFrame:
+    """pages stream -> per-(lang, host, tumbling-window) incrementally
+    accumulated GLCM Haralick features."""
+    return _window_agg(pages_stream, window, watermark, counts=False)
 
 
 def stateful_glcm_agg_fused(gvec_stream: DataFrame,
                             window: str = config.TUMBLING_WINDOW,
-                            watermark: str = config.WATERMARK_DELAY,
-                            timeout: str = GroupStateTimeout.EventTimeTimeout
+                            watermark: str = config.WATERMARK_DELAY
                             ) -> DataFrame:
     """Stateful accumulation over a fused gvec stream
     (fused.fused_gvec_stream): rows already carry the packed per-doc
     count vector — computed inside the worker-side row-group read, so
     page bytes never enter the JVM on this path either. The state stage
-    is byte-identical to stateful_glcm_agg's (same accumulate_glcm, same
+    is byte-identical to stateful_glcm_agg's (same state function, same
     schemas), making the two paths a pure execution-strategy fork.
 
     When to choose which (measured, local[32], 55k-doc fixture): with
@@ -188,15 +321,7 @@ def stateful_glcm_agg_fused(gvec_stream: DataFrame,
     the fused path pays off when page bytes >> 4 KiB (real web crawls at
     50-100 KiB/doc), where the classic path's html-through-Arrow pipe is
     the scaling ceiling (see fused.py module docstring)."""
-    keyed = (gvec_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("window_start",
-                         F.window("warc_ts", window).start)
-             .select("lang", "host", "window_start", "gvec", "warc_ts"))
-    return (keyed.groupBy("lang", "host", "window_start")
-            .applyInPandasWithState(accumulate_glcm, OUTPUT_SCHEMA,
-                                    STATE_SCHEMA, "update", timeout))
+    return _window_agg(gvec_stream, window, watermark, counts=False)
 
 
 # ===========================================================================
@@ -221,17 +346,18 @@ def stateful_glcm_agg_fused(gvec_stream: DataFrame,
 # packed blob, so each invocation amortizes the protocol + DataFrame +
 # feature cost over ~keys/buckets fine keys, with the sums and the
 # Haralick features vectorized ACROSS keys (numpy add.at / stacked
-# haralick_batch). Semantically identical to stateful_glcm_agg (same
-# emissions, same eviction policy); the spec-named API
-# (applyInPandasWithState, BASELINE.json:6) remains the state engine.
-# At cluster scale `buckets` should be ~4x total cores: state per
-# bucket stays keys/buckets x 8 KiB and hash-spreads hot keys.
+# haralick_batch). Semantically identical to the per-key path (same
+# emissions); the spec-named API (applyInPandasWithState,
+# BASELINE.json:6) remains the state engine. At cluster scale `buckets`
+# should be ~4x total cores: state per bucket stays keys/buckets x
+# 8 KiB and hash-spreads hot keys.
 
 BUCKET_STATE_SCHEMA = StructType([
     # fine-key records packed back-to-back: u2 lang_len, lang utf8,
-    # u2 host_len, host utf8, then <i8 ws_us, n_docs, n_batches and the
-    # <i8 L2 count matrix (one primitive buffer through the protocol,
-    # same rationale as STATE_SCHEMA)
+    # u2 host_len, host utf8, then three <i8 meta words (windows:
+    # start_us, n_docs, n_batches; sessions: start_us, last_us, n_docs)
+    # and the <i8 L2 count matrix (one primitive buffer through the
+    # protocol, same rationale as STATE_SCHEMA)
     StructField("blob", BinaryType()),
 ])
 
@@ -263,15 +389,13 @@ def _enc_key(s) -> bytes:
 
 
 def _pack_bucket(keys: list, mats: np.ndarray, meta: np.ndarray) -> bytes:
-    """keys: [(lang, host)], meta: (n,3) int64 [ws_us, n_docs,
-    n_batches], mats: (n, L2) int64. The joined blob is zlib(level 1)
-    compressed: a bucket's ~keys/buckets x 8 KiB of count matrices is
-    dominated by small cells (~5.5x ratio at ~12 ms/bucket), and the
-    blob crosses the per-bucket state protocol TWICE per epoch (get +
-    update) plus the RocksDB changelog — at the bench fixture that is
-    ~900 MB/epoch of Arrow state traffic shrunk to ~160 MB for well
-    under 0.1 s of (parallel) worker CPU."""
-    import zlib
+    """keys: [(lang, host)], meta: (n,3) int64, mats: (n, L2) int64. The
+    joined blob is zlib(level 1) compressed: a bucket's ~keys/buckets x
+    8 KiB of count matrices is dominated by small cells (~5.5x ratio at
+    ~12 ms/bucket), and the blob crosses the per-bucket state protocol
+    TWICE per epoch (get + update) plus the RocksDB changelog — at the
+    bench fixture that is ~900 MB/epoch of Arrow state traffic shrunk to
+    ~160 MB for well under 0.1 s of (parallel) worker CPU."""
     parts = []
     for (lang, host), m, mt in zip(keys, mats, meta):
         parts.append(_enc_key(lang) + _enc_key(host)
@@ -290,7 +414,6 @@ def _dec_key(buf: bytes, off: int):
 
 
 def _unpack_bucket(buf: bytes):
-    import zlib
     buf = zlib.decompress(buf)
     keys, metas, mats = [], [], []
     off, n = 0, len(buf)
@@ -305,6 +428,27 @@ def _unpack_bucket(buf: bytes):
     if not keys:
         return [], np.zeros((0, 3), np.int64), np.zeros((0, L2), np.int64)
     return keys, np.stack(metas).copy(), np.stack(mats).copy()
+
+
+def _load_bucket(state: GroupState):
+    """The bucket's (keys, meta, mats), empty for a new bucket."""
+    if state.exists:
+        return _unpack_bucket(state.get[0])
+    return [], np.zeros((0, 3), np.int64), np.zeros((0, L2), np.int64)
+
+
+def _save_bucket(state: GroupState, keys: list, meta: np.ndarray,
+                 mats: np.ndarray, evict_us: np.ndarray) -> None:
+    """Write back the fine keys whose eviction instant evict_us still
+    lies past the watermark, armed to fire at the earliest of them;
+    remove the bucket's state when none is left."""
+    keep = evict_us > state.getCurrentWatermarkMs() * 1000
+    if not keep.any():
+        state.remove()
+        return
+    state.update((_pack_bucket([k for k, kp in zip(keys, keep) if kp],
+                               mats[keep], meta[keep]),))
+    _arm(state, evict_us[keep].min())
 
 
 def _batch_key_groups(pdf: pd.DataFrame, with_window: bool = True):
@@ -337,28 +481,23 @@ def _batch_key_groups(pdf: pd.DataFrame, with_window: bool = True):
     return uniq, inv, docs
 
 
-def _bucket_state_fn(window_us: int, retain_us: int = 3_600_000_000):
+def _bucket_window_fn(window_us: int, counts: bool):
+    """Bucketed twin of _window_fn: one state group per hash bucket
+    holds all its (lang, host, window start) keys' count matrices in one
+    packed blob; sums are one scatter-add per chunk and the emission of
+    every touched key is vectorized (see _window_rows). A key leaves the
+    blob once the watermark passes its window end + RETAIN_US."""
     def accumulate_bucket(key, pdfs: Iterator[pd.DataFrame],
                           state: GroupState) -> Iterator[pd.DataFrame]:
-        keys, meta, mats = ([], None, None)
-        if state.exists:
-            keys, meta, mats = _unpack_bucket(state.get[0])
-        else:
-            meta = np.zeros((0, 3), np.int64)
-            mats = np.zeros((0, L2), np.int64)
-        try:
-            wm_ms = state.getCurrentWatermarkMs()
-        except Exception:
-            wm_ms = 0
+        keys, meta, mats = _load_bucket(state)
         index = {k + (int(m[0]),): i
                  for i, (k, m) in enumerate(zip(keys, meta))}
-        touched: dict[int, bool] = {}
+        touched: set[int] = set()
         if not state.hasTimedOut:
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
-                vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-                    .reshape(len(pdf), L2).astype(np.int64)
+                vecs = _gvecs(pdf).astype(np.int64)
                 uniq, inv, docs = _batch_key_groups(pdf)
                 # append state rows for unseen fine keys (ONE vstack
                 # per chunk, not per key), then one vectorized
@@ -373,77 +512,31 @@ def _bucket_state_fn(window_us: int, retain_us: int = 3_600_000_000):
                     mats = np.vstack([mats, np.zeros(
                         (len(new_fks), L2), np.int64)])
                 sidx = np.array([index[fk] for fk in uniq], np.int64)
-                tgt = sidx[inv]
-                np.add.at(mats, tgt, vecs)
+                np.add.at(mats, sidx[inv], vecs)
                 # sidx has no duplicates (uniq is per-batch unique), so
                 # the fancy-index += accumulates correctly
                 meta[sidx, 1] += docs
                 meta[sidx, 2] += 1
-                for i in sidx:
-                    touched[int(i)] = True
-        if touched:
-            ti = sorted(touched)
-            sub = mats[ti].astype(np.float64) \
-                .reshape(len(ti), config.GRAY_LEVELS, config.GRAY_LEVELS)
-            P = kernel.normalize_glcm(sub)
-            feats = kernel.haralick_batch(P)
-            out = pd.DataFrame({
-                "lang": [keys[i][0] for i in ti],
-                "host": [keys[i][1] for i in ti],
-                "window_start": pd.to_datetime(meta[ti, 0], unit="us"),
-                "n_docs": meta[ti, 1],
-                "n_batches": meta[ti, 2],
-                **{k: v for k, v in feats.items()}})
-        else:
-            out = None
-        # evict fine keys whose window end fell retain_us behind the
-        # watermark (same policy as the per-key path's timeout)
-        keep = meta[:, 0] + window_us + retain_us > wm_ms * 1000
-        if not keep.all():
-            keys = [k for k, kp in zip(keys, keep) if kp]
-            meta, mats = meta[keep], mats[keep]
-        if keys:
-            state.update((_pack_bucket(keys, mats, meta),))
-            try:
-                target = int((meta[:, 0].min() + window_us + retain_us)
-                             // 1000)
-                state.setTimeoutTimestamp(max(target, wm_ms + 1))
-            except Exception:
-                pass  # NoTimeout config (batch-style tests)
-        else:
-            state.remove()
-        if out is not None:
-            yield out
+                touched.update(sidx.tolist())
+        ti = sorted(touched)
+        _save_bucket(state, keys, meta, mats,
+                     meta[:, 0] + window_us + RETAIN_US)
+        if ti:
+            yield _window_rows([keys[i] for i in ti], meta[ti], mats[ti],
+                               counts)
     return accumulate_bucket
 
 
 def stateful_glcm_agg_bucketed(pages_stream: DataFrame,
                                window: str = config.TUMBLING_WINDOW,
                                watermark: str = config.WATERMARK_DELAY,
-                               buckets: int = 128,
-                               timeout: str =
-                               GroupStateTimeout.EventTimeTimeout
-                               ) -> DataFrame:
+                               buckets: int = 128) -> DataFrame:
     """pages stream -> per-(lang, host, tumbling-window) incrementally
     accumulated GLCM features, protocol-amortized: state is keyed by
     xxhash64 bucket, each bucket's invocation sums and featurizes all
     its fine keys vectorized. Emissions are row-for-row identical to
     stateful_glcm_agg's (minus emission order within a batch)."""
-    w_us = _duration_us(window)
-    keyed = (pages_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("ws_us", F.unix_micros(
-                 F.window("warc_ts", window).start))
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .withColumn("bucket", F.pmod(
-                 F.xxhash64("lang", "host", "ws_us"), F.lit(buckets)))
-             .select("bucket", "lang", "host", "ws_us", "gvec",
-                     "warc_ts"))
-    return (keyed.groupBy("bucket")
-            .applyInPandasWithState(_bucket_state_fn(w_us),
-                                    OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA,
-                                    "update", timeout))
+    return _window_agg(pages_stream, window, watermark, False, buckets)
 
 
 # ===========================================================================
@@ -451,47 +544,6 @@ def stateful_glcm_agg_bucketed(pages_stream: DataFrame,
 # SURVEY §4.2 "pane-based for sliding"; BASELINE.json:6 names tumbling,
 # sliding AND session windows for the co-occurrence accumulation)
 # ===========================================================================
-# A sliding window of length L and slide S (S divides L) is the sum of
-# L/S contiguous PANES of duration S. The GLCM count matrix is a sum
-# monoid, so accumulating per PANE and summing panes at emission is
-# exact — and each document's 4 KiB count vector crosses the state
-# exchange ONCE (keyed by its pane) instead of L/S times (the naive
-# F.window sliding duplication), which at 100 TB is the difference
-# between one corpus-sized exchange and L/S of them.
-
-PANE_OUTPUT_SCHEMA = StructType([
-    StructField("lang", StringType()),
-    StructField("host", StringType()),
-    StructField("pane_start", TimestampType()),
-    StructField("counts", BinaryType()),
-    StructField("n_docs", LongType()),
-    StructField("n_batches", LongType()),
-])
-
-
-def _pack_counts(counts: np.ndarray) -> bytes:
-    """Pane-EMISSION wire codec: zlib(level 1) over the '<i8' count
-    matrix. A pane's 1024-cell matrix is dominated by small/zero cells
-    (one (0,0) pad-pair hot cell aside), so the 8 KiB blob compresses
-    ~8x — and the emission payload is what every downstream pass moves:
-    the update-mode sink, the finalizer's exchange, the continuous
-    emitter's pane store. At the 55k-doc bench fixture that is ~255 MB
-    of emissions shrunk to ~35 MB for ~60 ms of worker CPU; on the
-    memory-bandwidth-contended host this is the difference between the
-    sliding leg amplifying under load and not. Deterministic (fixed
-    level, one zlib), so the per-key and bucketed pane paths still emit
-    byte-identical rows. Internal wire format: every consumer
-    (finalizers, emitter store) is in this module."""
-    import zlib
-    return zlib.compress(counts.astype("<i8").tobytes(), 1)
-
-
-def _unpack_counts_rows(col) -> np.ndarray:
-    """Column of emission count blobs -> (n, L2) int64 matrix."""
-    import zlib
-    return np.frombuffer(
-        b"".join(zlib.decompress(b) for b in col),
-        dtype="<i8").reshape(len(col), L2)
 
 SLIDING_OUTPUT_SCHEMA = StructType([
     StructField("lang", StringType()),
@@ -502,178 +554,26 @@ SLIDING_OUTPUT_SCHEMA = StructType([
 ])
 
 
-def accumulate_glcm_pane(key, pdfs: Iterator[pd.DataFrame],
-                         state: GroupState) -> Iterator[pd.DataFrame]:
-    """Pane state function: identical accumulation to accumulate_glcm
-    (same packed-int64 state, same map-side uint32 gvec input), but the
-    emission is the pane's RUNNING COUNT VECTOR, not features — features
-    are a nonlinear function of counts, so the pane->window sum must
-    happen on counts and features are computed once per assembled
-    window (finalize_sliding_windows)."""
-    lang, host, pane_start = key
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        counts_buf, n_docs, n_batches = state.get
-        counts = np.frombuffer(counts_buf, dtype="<i8").copy()
-    else:
-        counts = np.zeros(L2, dtype=np.int64)
-        n_docs = 0
-        n_batches = 0
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-            .reshape(len(pdf), L2)
-        counts += vecs.sum(axis=0, dtype=np.int64)
-        n_docs += len(pdf)
-        n_batches += 1
-    state.update((counts.astype("<i8").tobytes(),
-                  int(n_docs), int(n_batches)))
-    try:
-        wm = state.getCurrentWatermarkMs()
-        target = int(pd.Timestamp(pane_start).value // 1_000_000) \
-            + 3_600_000
-        state.setTimeoutTimestamp(max(target, wm + 3_600_000))
-    except Exception:
-        pass  # NoTimeout config (batch-style tests)
-    yield pd.DataFrame([{
-        "lang": lang, "host": host, "pane_start": pane_start,
-        "counts": _pack_counts(counts), "n_docs": int(n_docs),
-        "n_batches": int(n_batches)}])
-
-
 def stateful_glcm_pane_agg(pages_stream: DataFrame,
                            slide: str = config.SLIDING_WINDOW[1],
-                           watermark: str = config.WATERMARK_DELAY,
-                           timeout: str = GroupStateTimeout.EventTimeTimeout
+                           watermark: str = config.WATERMARK_DELAY
                            ) -> DataFrame:
     """pages stream -> per-(lang, host, PANE) incrementally accumulated
     GLCM count vectors (update mode; the memory/table sink keeps the
     latest emission per pane key). A pane is the tumbling window of the
-    SLIDE duration, so the pane key is just F.window(ts, slide).start —
-    the same stateful machinery as the tumbling path, emitting counts."""
-    keyed = (pages_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("pane_start",
-                         F.window("warc_ts", slide).start)
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .select("lang", "host", "pane_start", "gvec", "warc_ts"))
-    return (keyed.groupBy("lang", "host", "pane_start")
-            .applyInPandasWithState(accumulate_glcm_pane,
-                                    PANE_OUTPUT_SCHEMA, STATE_SCHEMA,
-                                    "update", timeout))
-
-
-def _bucket_pane_state_fn(retain_us: int = 3_600_000_000):
-    """Bucketed twin of accumulate_glcm_pane: one state group per hash
-    bucket holds all its panes' count matrices (same packed-blob layout
-    as _bucket_state_fn, same ~200us/key amortization — see the
-    bucketed-accumulation cost anatomy above), emitting each touched
-    pane's RUNNING COUNTS for downstream window assembly."""
-    def accumulate_bucket_panes(key, pdfs: Iterator[pd.DataFrame],
-                                state: GroupState
-                                ) -> Iterator[pd.DataFrame]:
-        keys, meta, mats = ([], None, None)
-        if state.exists:
-            keys, meta, mats = _unpack_bucket(state.get[0])
-        else:
-            meta = np.zeros((0, 3), np.int64)
-            mats = np.zeros((0, L2), np.int64)
-        try:
-            wm_ms = state.getCurrentWatermarkMs()
-        except Exception:
-            wm_ms = 0
-        index = {k + (int(m[0]),): i
-                 for i, (k, m) in enumerate(zip(keys, meta))}
-        touched: dict[int, bool] = {}
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-                    .reshape(len(pdf), L2).astype(np.int64)
-                uniq, inv, docs = _batch_key_groups(pdf)
-                new_fks = [fk for fk in uniq if fk not in index]
-                if new_fks:
-                    for fk in new_fks:
-                        index[fk] = len(keys)
-                        keys.append((fk[0], fk[1]))
-                    meta = np.vstack([meta, np.array(
-                        [[fk[2], 0, 0] for fk in new_fks], np.int64)])
-                    mats = np.vstack([mats, np.zeros(
-                        (len(new_fks), L2), np.int64)])
-                sidx = np.array([index[fk] for fk in uniq], np.int64)
-                tgt = sidx[inv]
-                np.add.at(mats, tgt, vecs)
-                meta[sidx, 1] += docs
-                meta[sidx, 2] += 1
-                for i in sidx:
-                    touched[int(i)] = True
-        if touched:
-            ti = sorted(touched)
-            out = pd.DataFrame({
-                "lang": [keys[i][0] for i in ti],
-                "host": [keys[i][1] for i in ti],
-                "pane_start": pd.to_datetime(meta[ti, 0], unit="us"),
-                "counts": [_pack_counts(mats[i]) for i in ti],
-                "n_docs": meta[ti, 1],
-                "n_batches": meta[ti, 2]})
-        else:
-            out = None
-        keep = meta[:, 0] + retain_us > wm_ms * 1000
-        if not keep.all():
-            keys = [k for k, kp in zip(keys, keep) if kp]
-            meta, mats = meta[keep], mats[keep]
-        if keys:
-            state.update((_pack_bucket(keys, mats, meta),))
-            try:
-                target = int((meta[:, 0].min() + retain_us) // 1000)
-                state.setTimeoutTimestamp(max(target, wm_ms + 1))
-            except Exception:
-                pass  # NoTimeout config (batch-style tests)
-        else:
-            state.remove()
-        if out is not None:
-            yield out
-    return accumulate_bucket_panes
+    SLIDE duration: this is the tumbling path at window=slide, emitting
+    counts."""
+    return _window_agg(pages_stream, slide, watermark, counts=True)
 
 
 def stateful_glcm_pane_agg_bucketed(pages_stream: DataFrame,
                                     slide: str = config.SLIDING_WINDOW[1],
                                     watermark: str = config.WATERMARK_DELAY,
-                                    buckets: int = 128,
-                                    timeout: str =
-                                    GroupStateTimeout.EventTimeTimeout
-                                    ) -> DataFrame:
+                                    buckets: int = 128) -> DataFrame:
     """Protocol-amortized pane accumulation (the sliding path's default
     at scale): emissions identical to stateful_glcm_pane_agg's, state
     keyed by hash bucket."""
-    keyed = (pages_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("ws_us", F.unix_micros(
-                 F.window("warc_ts", slide).start))
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .withColumn("bucket", F.pmod(
-                 F.xxhash64("lang", "host", "ws_us"), F.lit(buckets)))
-             .select("bucket", "lang", "host", "ws_us", "gvec",
-                     "warc_ts"))
-    return (keyed.groupBy("bucket")
-            .applyInPandasWithState(_bucket_pane_state_fn(),
-                                    PANE_OUTPUT_SCHEMA,
-                                    BUCKET_STATE_SCHEMA,
-                                    "update", timeout))
-
-
-def _duration_us(spec: str) -> int:
-    n, unit = spec.split()
-    mult = {"second": 1_000_000, "seconds": 1_000_000,
-            "minute": 60_000_000, "minutes": 60_000_000,
-            "hour": 3_600_000_000, "hours": 3_600_000_000}[unit]
-    return int(n) * mult
+    return _window_agg(pages_stream, slide, watermark, True, buckets)
 
 
 def latest_panes(emissions: DataFrame) -> DataFrame:
@@ -713,14 +613,11 @@ def finalize_sliding_windows(panes: DataFrame,
         carry_docs = 0
 
         def rows_of(keys, counts, docs):
-            sub = counts.astype(np.float64).reshape(
-                len(keys), config.GRAY_LEVELS, config.GRAY_LEVELS)
-            feats = kernel.haralick_batch(kernel.normalize_glcm(sub))
             return pd.DataFrame({
                 "lang": [k[0] for k in keys],
                 "host": [k[1] for k in keys],
                 "window_start": [k[2] for k in keys],
-                "n_docs": docs, **{k: v for k, v in feats.items()}})
+                "n_docs": docs, **_features(counts)})
 
         for pdf in it:
             if not len(pdf):
@@ -864,16 +761,13 @@ def sliding_windows_from_emissions(emissions: DataFrame,
         wdocs = np.add.reduceat(ndp, pairs)[0::2]
         wk = ucand // big
         ws_us = (ucand % big + g.min() - r) * s_us
-        feats = kernel.haralick_batch(kernel.normalize_glcm(
-            wsum.astype(np.float64).reshape(
-                len(ucand), config.GRAY_LEVELS, config.GRAY_LEVELS)))
         langs = sub["lang"].to_numpy()
         hosts = sub["host"].to_numpy()
         yield pd.DataFrame({
             "lang": langs[first_rows[wk]],
             "host": hosts[first_rows[wk]],
             "window_start": pd.to_datetime(ws_us, unit="us"),
-            "n_docs": wdocs, **{k: v for k, v in feats.items()}})
+            "n_docs": wdocs, **_features(wsum)})
 
     # explicit partition COUNT: a bare repartition("lang","host") lets
     # AQE coalesce the ~8 KiB-row exchange below its 64 MB advisory
@@ -904,11 +798,10 @@ def batch_glcm_agg_sliding(pages: DataFrame,
     def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
-            .sum(axis=0).ravel()
-        feats = _features_of_counts(counts)
-        return pd.DataFrame([{
-            "lang": lang, "host": host, "window_start": window_start,
-            "n_docs": len(pdf), **feats}])
+            .sum(axis=0).reshape(1, -1)
+        return pd.DataFrame({
+            "lang": [lang], "host": [host], "window_start": [window_start],
+            "n_docs": [len(pdf)], **_features(counts)})
 
     keyed = (pages
              .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
@@ -1215,76 +1108,62 @@ def _merge_frags(frags: np.ndarray, gap_us: int) -> np.ndarray:
     return np.stack(out)
 
 
-def make_session_state_fn(gap_us: int):
+def _event_frags(pdf: pd.DataFrame) -> np.ndarray:
+    """One single-event fragment record per row of a chunk."""
+    ts = pdf["ts_us"].to_numpy(np.int64)
+    recs = np.empty((len(pdf), _FRAG_REC), np.int64)
+    recs[:, 0] = ts
+    recs[:, 1] = ts
+    recs[:, 2] = 1
+    recs[:, 3:] = _gvecs(pdf)
+    return recs
+
+
+def _touched(frags: np.ndarray, new_ts: np.ndarray) -> np.ndarray:
+    """Indices of the fragments that absorbed a new event (some sorted
+    new ts lies in their [start, last]). An untouched fragment's final
+    extent was already emitted in its last touched batch, and the
+    reader's maximal-interval selection dedups growth — so per-batch
+    emission is O(touched), not O(open fragments)."""
+    lo = np.searchsorted(new_ts, frags[:, 0], side="left")
+    hi = np.searchsorted(new_ts, frags[:, 1], side="right")
+    return np.flatnonzero(hi > lo)
+
+
+def _session_rows(langs, hosts, frags: np.ndarray,
+                  gap_us: int) -> pd.DataFrame:
+    return pd.DataFrame({
+        "lang": langs, "host": hosts,
+        "session_start": pd.to_datetime(frags[:, 0], unit="us"),
+        "session_end": pd.to_datetime(frags[:, 1] + gap_us, unit="us"),
+        "n_docs": frags[:, 2], **_features(frags[:, 3:])})
+
+
+def _session_fn(gap_us: int):
     def accumulate_glcm_session(key, pdfs: Iterator[pd.DataFrame],
                                 state: GroupState
                                 ) -> Iterator[pd.DataFrame]:
         lang, host = key
         frags = _unpack_frags(state.get[0]) if state.exists \
             else np.zeros((0, _FRAG_REC), dtype=np.int64)
-        try:
-            wm_ms = state.getCurrentWatermarkMs()
-        except Exception:
-            wm_ms = 0
         new_rows = []
         if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-                    .reshape(len(pdf), L2).astype(np.int64)
-                ts = pdf["ts_us"].to_numpy()
-                recs = np.empty((len(pdf), _FRAG_REC), dtype=np.int64)
-                recs[:, 0] = ts
-                recs[:, 1] = ts
-                recs[:, 2] = 1
-                recs[:, 3:] = vecs
-                new_rows.append(recs)
-        new_ts = np.sort(np.concatenate(
-            [r[:, 0] for r in new_rows])) if new_rows else None
+            new_rows = [_event_frags(pdf) for pdf in pdfs if len(pdf)]
         if new_rows:
-            frags = np.concatenate([frags, *new_rows])
-        frags = _merge_frags(frags, gap_us) if len(frags) else frags
-
-        if new_ts is not None and len(frags):
-            # emit only fragments TOUCHED by this batch (a fragment is
-            # touched iff it absorbed a new event, iff some new ts lies
-            # in its [start, last]): an untouched fragment's final
-            # extent was already emitted in its last touched batch, and
-            # the reader's maximal-interval selection dedups growth —
-            # so per-batch emission is O(touched), not O(open fragments)
-            lo = np.searchsorted(new_ts, frags[:, 0], side="left")
-            hi = np.searchsorted(new_ts, frags[:, 1], side="right")
-            tmask = hi > lo
-            ti = np.flatnonzero(tmask)
-            sub = frags[ti, 3:].astype(np.float64).reshape(
-                len(ti), config.GRAY_LEVELS, config.GRAY_LEVELS)
-            feats = kernel.haralick_batch(kernel.normalize_glcm(sub))
-            emit = pd.DataFrame({
-                "lang": lang, "host": host,
-                "session_start": pd.to_datetime(frags[ti, 0], unit="us"),
-                "session_end": pd.to_datetime(frags[ti, 1] + gap_us,
-                                              unit="us"),
-                "n_docs": frags[ti, 2],
-                **{k: v for k, v in feats.items()}})
+            frags = _merge_frags(np.concatenate([frags, *new_rows]), gap_us)
+            ti = _touched(frags, np.sort(np.concatenate(
+                [r[:, 0] for r in new_rows])))
+            emit = _session_rows(lang, host, frags[ti], gap_us)
         else:
             emit = None
-
         # close (drop) fragments no admissible event can extend: future
         # rows have ts >= the true watermark >= wm_ms*1000 (its ms
         # floor), and extension requires ts < last + gap
-        if len(frags):
-            open_mask = frags[:, 1] + gap_us > wm_ms * 1000
-            frags = frags[open_mask]
-        if len(frags):
-            state.update((frags.astype("<i8").tobytes(),))
-            try:
-                # evict once the watermark's ms floor passes every
-                # fragment's last+gap: ceil to the next whole ms
-                target = int((frags[:, 1].min() + gap_us + 999) // 1000)
-                state.setTimeoutTimestamp(max(target, wm_ms + 1))
-            except Exception:
-                pass  # NoTimeout config (batch-style tests)
+        ends = frags[:, 1] + gap_us
+        keep = ends > state.getCurrentWatermarkMs() * 1000
+        if keep.any():
+            state.update((frags[keep].astype("<i8").tobytes(),))
+            _arm(state, ends[keep].min())
         else:
             state.remove()
         if emit is not None:
@@ -1292,29 +1171,20 @@ def make_session_state_fn(gap_us: int):
     return accumulate_glcm_session
 
 
-def _bucket_session_state_fn(gap_us: int):
-    """Bucketed twin of the session state fn: one state group per hash
-    bucket of (lang, host) holds ALL its keys' open fragments in one
-    packed blob (record layout shared with _pack_bucket: meta =
-    [start_us, last_us, n_docs] + count matrix). Same amortization
-    rationale as the tumbling/pane bucketing — per-key
-    applyInPandasWithState costs ~200 us/key/batch of Python overhead,
-    which at web-scale host cardinality dominates; fragment merge runs
-    per fine key (a handful of fragments each), feature emission is
-    vectorized across every touched fragment in the bucket."""
+def _bucket_session_fn(gap_us: int):
+    """Bucketed twin of _session_fn: one state group per hash bucket of
+    (lang, host) holds ALL its keys' open fragments in one packed blob
+    (record layout shared with _pack_bucket: meta = [start_us, last_us,
+    n_docs] + count matrix). Same amortization rationale as the window
+    bucketing — per-key applyInPandasWithState costs ~200 us/key/batch
+    of Python overhead, which at web-scale host cardinality dominates;
+    fragment merge runs per fine key (a handful of fragments each),
+    feature emission is vectorized across every touched fragment in the
+    bucket."""
     def accumulate_bucket_sessions(key, pdfs: Iterator[pd.DataFrame],
                                    state: GroupState
                                    ) -> Iterator[pd.DataFrame]:
-        keys, meta, mats = ([], None, None)
-        if state.exists:
-            keys, meta, mats = _unpack_bucket(state.get[0])
-        else:
-            meta = np.zeros((0, 3), np.int64)
-            mats = np.zeros((0, L2), np.int64)
-        try:
-            wm_ms = state.getCurrentWatermarkMs()
-        except Exception:
-            wm_ms = 0
+        keys, meta, mats = _load_bucket(state)
         # fragments per fine key: {(lang, host): [(k, _FRAG_REC) block]}
         # — state fragments grouped with ONE concatenate + factorize,
         # batch rows turned into ONE (n, _FRAG_REC) block per chunk and
@@ -1336,14 +1206,7 @@ def _bucket_session_state_fn(gap_us: int):
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
-                vecs = np.frombuffer(b"".join(pdf["gvec"]), dtype="<u4") \
-                    .reshape(len(pdf), L2).astype(np.int64)
-                ts = pdf["ts_us"].to_numpy(np.int64)
-                recs = np.empty((len(pdf), _FRAG_REC), np.int64)
-                recs[:, 0] = ts
-                recs[:, 1] = ts
-                recs[:, 2] = 1
-                recs[:, 3:] = vecs
+                recs = _event_frags(pdf)
                 uniq, inv, _docs = _batch_key_groups(pdf,
                                                      with_window=False)
                 order = np.argsort(inv, kind="stable")
@@ -1352,59 +1215,28 @@ def _bucket_session_state_fn(gap_us: int):
                 for j, fk in enumerate(uniq):
                     rows = order[bounds[j]:bounds[j + 1]]
                     per_key.setdefault(fk, []).append(recs[rows])
-                    touched_new_ts.setdefault(fk, []).append(ts[rows])
-        out_rows = {k: [] for k in
-                    ("lang", "host", "start", "end", "ndocs")}
-        out_mats = []
-        keep_keys, keep_mats, keep_meta = [], [], []
+                    touched_new_ts.setdefault(fk, []).append(
+                        recs[rows, 0])
+        out_keys, out_frags, all_keys, all_frags = [], [], [], []
         for fk, blocks in per_key.items():
             allf = np.concatenate(blocks) if len(blocks) > 1 \
                 else blocks[0]
             frags = _merge_frags(allf, gap_us) if len(allf) > 1 else allf
             nts = touched_new_ts.get(fk)
             if nts is not None:
-                nts = np.sort(np.concatenate(nts))
-                lo = np.searchsorted(nts, frags[:, 0], side="left")
-                hi = np.searchsorted(nts, frags[:, 1], side="right")
-                for i in np.flatnonzero(hi > lo):
-                    out_rows["lang"].append(fk[0])
-                    out_rows["host"].append(fk[1])
-                    out_rows["start"].append(frags[i, 0])
-                    out_rows["end"].append(frags[i, 1] + gap_us)
-                    out_rows["ndocs"].append(frags[i, 2])
-                    out_mats.append(frags[i, 3:])
-            open_mask = frags[:, 1] + gap_us > wm_ms * 1000
-            for i in np.flatnonzero(open_mask):
-                keep_keys.append(fk)
-                keep_meta.append(frags[i, :3])
-                keep_mats.append(frags[i, 3:])
-        if out_mats:
-            sub = np.stack(out_mats).astype(np.float64).reshape(
-                len(out_mats), config.GRAY_LEVELS, config.GRAY_LEVELS)
-            feats = kernel.haralick_batch(kernel.normalize_glcm(sub))
-            emit = pd.DataFrame({
-                "lang": out_rows["lang"], "host": out_rows["host"],
-                "session_start": pd.to_datetime(out_rows["start"],
-                                                unit="us"),
-                "session_end": pd.to_datetime(out_rows["end"],
-                                              unit="us"),
-                "n_docs": np.array(out_rows["ndocs"], np.int64),
-                **{k: v for k, v in feats.items()}})
-        else:
-            emit = None
-        if keep_keys:
-            km = np.stack(keep_meta)
-            state.update((_pack_bucket(keep_keys, np.stack(keep_mats),
-                                       km),))
-            try:
-                target = int((km[:, 1].min() + gap_us + 999) // 1000)
-                state.setTimeoutTimestamp(max(target, wm_ms + 1))
-            except Exception:
-                pass  # NoTimeout config (batch-style tests)
-        else:
-            state.remove()
-        if emit is not None:
-            yield emit
+                ti = _touched(frags, np.sort(np.concatenate(nts)))
+                out_keys += [fk] * len(ti)
+                out_frags.append(frags[ti])
+            all_keys += [fk] * len(frags)
+            all_frags.append(frags)
+        frags = np.concatenate(all_frags) if all_frags \
+            else np.zeros((0, _FRAG_REC), np.int64)
+        _save_bucket(state, all_keys, frags[:, :3], frags[:, 3:],
+                     frags[:, 1] + gap_us)
+        if out_keys:
+            yield _session_rows([k[0] for k in out_keys],
+                                [k[1] for k in out_keys],
+                                np.concatenate(out_frags), gap_us)
     return accumulate_bucket_sessions
 
 
@@ -1412,53 +1244,31 @@ def stateful_glcm_session_agg_bucketed(pages_stream: DataFrame,
                                        gap: str = config.SESSION_GAP,
                                        watermark: str =
                                        config.WATERMARK_DELAY,
-                                       buckets: int = 128,
-                                       timeout: str =
-                                       GroupStateTimeout.EventTimeTimeout
-                                       ) -> DataFrame:
+                                       buckets: int = 128) -> DataFrame:
     """Protocol-amortized session accumulation: emissions resolve via
     final_sessions exactly like stateful_glcm_session_agg's (pure
     execution-strategy fork; pinned by
     test_bucketed_sessions_match_per_key)."""
-    gap_us = _duration_us(gap)
-    keyed = (pages_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("ts_us", F.unix_micros("warc_ts"))
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .withColumn("bucket", F.pmod(
-                 F.xxhash64("lang", "host"), F.lit(buckets)))
-             .select("bucket", "lang", "host", "ts_us", "gvec",
-                     "warc_ts"))
-    return (keyed.groupBy("bucket")
-            .applyInPandasWithState(_bucket_session_state_fn(gap_us),
-                                    SESSION_OUTPUT_SCHEMA,
-                                    BUCKET_STATE_SCHEMA,
-                                    "update", timeout))
+    return _stateful_glcm(pages_stream, watermark, "ts_us",
+                          F.unix_micros("warc_ts"),
+                          _bucket_session_fn(_duration_us(gap)),
+                          SESSION_OUTPUT_SCHEMA, BUCKET_STATE_SCHEMA,
+                          buckets, session=True)
 
 
 def stateful_glcm_session_agg(pages_stream: DataFrame,
                               gap: str = config.SESSION_GAP,
-                              watermark: str = config.WATERMARK_DELAY,
-                              timeout: str =
-                              GroupStateTimeout.EventTimeTimeout
+                              watermark: str = config.WATERMARK_DELAY
                               ) -> DataFrame:
     """pages stream -> per-(lang, host) session-window GLCM features
     (gap-based sessions, Spark session_window semantics: a session spans
     [first_ts, last_ts + gap)). Update-mode fragment emissions; run
     final_sessions() over the sink to obtain the exact session set."""
-    gap_us = _duration_us(gap)
-    keyed = (pages_stream
-             .withWatermark("warc_ts", watermark)
-             .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
-             .withColumn("ts_us", F.unix_micros("warc_ts"))
-             .withColumn("gvec", glcm_vec_udf()("html"))
-             .select("lang", "host", "ts_us", "gvec", "warc_ts"))
-    return (keyed.groupBy("lang", "host")
-            .applyInPandasWithState(make_session_state_fn(gap_us),
-                                    SESSION_OUTPUT_SCHEMA,
-                                    SESSION_STATE_SCHEMA,
-                                    "update", timeout))
+    return _stateful_glcm(pages_stream, watermark, "ts_us",
+                          F.unix_micros("warc_ts"),
+                          _session_fn(_duration_us(gap)),
+                          SESSION_OUTPUT_SCHEMA, SESSION_STATE_SCHEMA,
+                          session=True)
 
 
 def final_sessions(emissions: DataFrame) -> DataFrame:
@@ -1495,22 +1305,16 @@ def batch_glcm_agg_session(pages: DataFrame,
         pdf = pdf.sort_values("ts_us", kind="mergesort") \
             .reset_index(drop=True)
         ts = pdf["ts_us"].to_numpy()
-        sess_id = np.concatenate(
-            [[0], np.cumsum((ts[1:] - ts[:-1]) >= gap_us)])
+        starts = np.flatnonzero(np.r_[True, np.diff(ts) >= gap_us])
+        ends = np.r_[starts[1:], len(ts)]
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
             .reshape(len(pdf), -1)
-        rows = []
-        for sid in np.unique(sess_id):
-            m = sess_id == sid
-            feats = _features_of_counts(
-                counts[m].sum(axis=0).astype(np.float64))
-            rows.append({
-                "lang": lang, "host": host,
-                "session_start": pd.Timestamp(ts[m].min(), unit="us"),
-                "session_end": pd.Timestamp(ts[m].max() + gap_us,
-                                            unit="us"),
-                "n_docs": int(m.sum()), **feats})
-        return pd.DataFrame(rows)
+        return pd.DataFrame({
+            "lang": lang, "host": host,
+            "session_start": pd.to_datetime(ts[starts], unit="us"),
+            "session_end": pd.to_datetime(ts[ends - 1] + gap_us, unit="us"),
+            "n_docs": ends - starts,
+            **_features(np.add.reduceat(counts, starts, axis=0))})
 
     keyed = (pages
              .withColumn("host", F.try_parse_url("url", F.lit("HOST")))
@@ -1527,11 +1331,10 @@ def batch_glcm_agg(pages: DataFrame) -> DataFrame:
     def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
-            .sum(axis=0).ravel()
-        feats = _features_of_counts(counts)
-        return pd.DataFrame([{
-            "lang": lang, "host": host, "window_start": window_start,
-            "n_docs": len(pdf), "n_batches": 1, **feats}])
+            .sum(axis=0).reshape(1, -1)
+        return pd.DataFrame({
+            "lang": [lang], "host": [host], "window_start": [window_start],
+            "n_docs": [len(pdf)], "n_batches": [1], **_features(counts)})
 
     keyed = (pages
              .withColumn("host", F.try_parse_url("url", F.lit("HOST")))

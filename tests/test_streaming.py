@@ -949,6 +949,99 @@ def test_cep_state_evicted_after_watermark(spark):
     assert n_removed == 1    # u1 evicted when its window expired
 
 
+def test_glcm_state_evicted_after_watermark(spark):
+    """GLCM window state leaves the store once the watermark passes the
+    window end + state.RETAIN_US, on the per-key and both bucketed
+    window paths (tumbling and pane). File 1 holds two hosts at t0;
+    file 2 holds one host at t0+3h, which moves the watermark to
+    t0+2h30 and fires the t0 keys' event-time timeouts in the drain's
+    final no-data batch. Only the t0+3h key may remain in state (read
+    back from the checkpoint through the statestore source; a bucket
+    blob may hold several fine keys, so blobs are unpacked), and the
+    emissions still equal the batch oracles."""
+    from glcmstream import kernel
+    src = _scratch("glcm_evict_src")
+    t0 = pd.Timestamp("2026-01-01 10:00:00")
+
+    def write(name, rows):
+        tbl = pa.table({
+            "url": pa.array([f"https://{h}/doc/{i}"
+                             for i, (h, _) in enumerate(rows)], pa.string()),
+            "warc_ts": pa.array([t for _, t in rows], pa.timestamp("us")),
+            "html": pa.array([kernel.make_html(f"d{i}", f"body {h} {i}")
+                              for i, (h, _) in enumerate(rows)],
+                             pa.binary()),
+            "text": pa.array(["x"] * len(rows), pa.string()),
+            "lang": pa.array(["en"] * len(rows), pa.string())})
+        path = os.path.join(src, name)
+        pq.write_table(tbl, path)
+        # distinct whole-second mtimes pin the file replay order
+        n = len([f for f in os.listdir(src) if f.endswith(".parquet")])
+        import time as _time
+        t = float(int(_time.time())) + n
+        os.utime(path, (t, t))
+
+    write("f1.parquet", [("a.example.com", t0),
+                         ("b.example.com", t0 + pd.Timedelta(minutes=1)),
+                         ("a.example.com", t0 + pd.Timedelta(minutes=2))])
+    late = t0 + pd.Timedelta(hours=3)
+    write("f2.parquet", [("c.example.com", late)])
+    batch = stream.read_pages_batch(spark, src)
+
+    def run(fn, tag):
+        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
+               .option("maxFilesPerTrigger", "1").parquet(src)
+               .withColumn("warc_ts", F.col("warc_ts").cast("timestamp")))
+        ckpt = _scratch(f"ckpt_{tag}")
+        q = (fn(sdf).writeStream.format("memory").queryName(tag)
+             .outputMode("update").option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        ops = [p["stateOperators"][0] for p in q.recentProgress
+               if p.get("stateOperators")]
+        left = spark.read.format("statestore").load(ckpt).collect()
+        return spark.table(tag), ops[-1], left
+
+    def blob_keys(left):
+        return sorted((k[0], k[1], int(m[0]))
+                      for r in left
+                      for k, m in zip(*state._unpack_bucket(
+                          r.value.groupState.blob)[:2]))
+
+    cols = ["lang", "host", "window_start"]
+    exp = (state.batch_glcm_agg(batch).drop("n_batches").toPandas()
+           .sort_values(cols).reset_index(drop=True))
+    late_key = ("en", "c.example.com")
+
+    emis, op, left = run(state.stateful_glcm_agg, "evict_pk")
+    assert [(r.key.lang, r.key.host, r.key.window_start) for r in left] \
+        == [late_key + (late.to_pydatetime(),)]
+    assert op["numRowsTotal"] == 1 and op["numRowsRemoved"] == 2
+    got = (_latest_per_key(emis, cols).drop("n_batches").toPandas()
+           .sort_values(cols).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, exp)
+
+    emis, op, left = run(
+        lambda s: state.stateful_glcm_agg_bucketed(s, buckets=4),
+        "evict_bkt")
+    assert blob_keys(left) == [late_key + (late.value // 1000,)]
+    assert op["numRowsTotal"] == 1
+    got = (_latest_per_key(emis, cols).drop("n_batches").toPandas()
+           .sort_values(cols).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, exp)
+
+    emis, op, left = run(
+        lambda s: state.stateful_glcm_pane_agg_bucketed(s, buckets=4),
+        "evict_pane_bkt")
+    assert blob_keys(left) == [late_key + (late.value // 1000,)]
+    assert op["numRowsTotal"] == 1
+    got = (state.sliding_windows_from_emissions(emis).toPandas()
+           .sort_values(cols).reset_index(drop=True))
+    exp_sl = (state.batch_glcm_agg_sliding(batch).toPandas()
+              .sort_values(cols).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got[exp_sl.columns], exp_sl)
+
+
 def test_cep_watermark_boundary_ties_match_in_event_time_order(spark):
     """Events straddling a micro-batch boundary AT the watermark (spaced
     <1 ms apart, including the exact-tie) must match in strict event-time
