@@ -7,9 +7,13 @@ changed tree. All legs read the 400-doc fixture of the streaming tests,
 .scratch/pages_stream_400 of the tree this script lives in.
 
     python scripts/state_compat.py TREE checksum
-        BENCH/scaling_job._determinism_checksum of TREE: xxhash of every
-        column of every update-mode emission, per epoch. Must print the
-        same value for the parent and the change.
+        Prints `determinism <hash>`: BENCH/scaling_job._determinism_checksum
+        of TREE, the xor of xxhash64(epoch, every column) over every
+        update-mode emission of the per-key tumbling builder. Then one
+        `<builder> <hash>` line, the same xor-hash (epoch and n_batches
+        included), for each bucketed builder: tumbling, pane and session,
+        at their default bucket counts, two fixture files per epoch. Every
+        line must match between the parent and the change.
     python scripts/state_compat.py PARENT resume 0 WORK
     python scripts/state_compat.py CHANGE resume 1 WORK
     python scripts/state_compat.py CHANGE verify WORK
@@ -25,6 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import tempfile
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PAGES = os.path.join(HERE, ".scratch", "pages_stream_400")
@@ -44,6 +49,11 @@ BUILDERS = {
         s, buckets=16),
 }
 KEY = ["lang", "host", "window_start"]
+HASHED = {
+    "bucketed": state.stateful_glcm_agg_bucketed,
+    "pane_bucketed": state.stateful_glcm_pane_agg_bucketed,
+    "session_bucketed": state.stateful_glcm_session_agg_bucketed,
+}
 
 
 def _drain(df, ckpt: str) -> pd.DataFrame:
@@ -54,6 +64,29 @@ def _drain(df, ckpt: str) -> pd.DataFrame:
          .trigger(availableNow=True).start())
     q.awaitTermination()
     return pd.concat(rows, ignore_index=True)
+
+
+def _emission_hash(spark, fn) -> str:
+    """xor of xxhash64(epoch, every column) over every update-mode
+    emission of builder `fn` over the fixture, two files per epoch."""
+    from pyspark.sql import functions as F
+    acc = [0]
+
+    def fb(df, eid):
+        h = (df.select(F.xxhash64(F.lit(int(eid)), *df.columns).alias("h"))
+             .agg(F.expr("bit_xor(h)")).collect()[0][0])
+        acc[0] ^= (h or 0) & 0xFFFFFFFFFFFFFFFF
+
+    ckpt = tempfile.mkdtemp(prefix="state_compat_")
+    try:
+        q = (fn(stream.pages_stream(spark, PAGES, max_files_per_trigger=2))
+             .writeStream.outputMode("update").foreachBatch(fb)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return format(acc[0], "016x")
 
 
 def resume(spark, leg: int, work: str) -> None:
@@ -97,7 +130,9 @@ def main() -> None:
     mode = sys.argv[2]
     if mode == "checksum":
         import scaling_job
-        print(scaling_job._determinism_checksum(spark, PAGES))
+        print("determinism", scaling_job._determinism_checksum(spark, PAGES))
+        for name, fn in HASHED.items():
+            print(name, _emission_hash(spark, fn))
     elif mode == "resume":
         resume(spark, int(sys.argv[3]), sys.argv[4])
     else:

@@ -4,7 +4,8 @@ Pinned so the batch plan, the streaming plan, and the pure-numpy test
 oracle agree bit-for-bit (SURVEY.md §1.3, FIXTURES.md §3). The semantic
 contract replicated here is the rendertile/slidingwindow GLCM pipeline of
 the reference (simo1427/libglcmsw — mount empty at survey time, semantics
-anchored to BASELINE.json:6,14,15).
+anchored to BASELINE.json:6,14,15). The shuffle/state width is not a
+parameter: session.get_spark sets it to the cluster's core count.
 """
 
 from __future__ import annotations
@@ -51,7 +52,6 @@ SESSION_GAP = "5 minutes"
 SALT_BUCKETS: int = 8          # two-phase salted aggregation fan-out
 
 # --- spark session defaults (see session.py) ----------------------------
-SHUFFLE_PARTITIONS = 32
 # 512 rows/batch: at real page sizes (~50-100 KiB html) an Arrow batch is
 # ~25-50 MiB; 32 concurrent tasks keep JVM-side buffering bounded (the 10k
 # default put ~100 MiB x 32 tasks in flight and GC-stormed the local JVM)

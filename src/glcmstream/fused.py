@@ -250,15 +250,17 @@ def fused_features_batch(spark: SparkSession, pages_dir: str,
     return _features_df(df)
 
 
-def _stream_fanout(pages_dir: str, parallelism: int | None) -> int:
-    """Cap the streaming split fan-out at the TABLE'S SPLIT COUNT, like
+def _stream_fanout(spark: SparkSession, pages_dir: str,
+                   parallelism: int | None) -> int:
+    """Streaming split fan-out: the caller's parallelism, else 4 tasks
+    per core. Capped at the TABLE'S SPLIT COUNT, like
     fused_features_batch always has: a repartition(n) with n > splits
     produces empty partitions whose tasks still pay the ~180 ms python-
     runner fixed cost each (measured on the 80-split bigpage fixture:
     parallelism 128 -> 80 saves ~1 s of pure empty-task overhead per
     epoch). At production split counts (>= thousands) the cap is a
     no-op and the caller's parallelism stays in charge."""
-    n = parallelism or config.SHUFFLE_PARTITIONS * 4
+    n = parallelism or 4 * spark.sparkContext.defaultParallelism
     n_splits = len(plan_splits(pages_dir))
     return max(1, min(n, n_splits) if n_splits else n)
 
@@ -279,7 +281,7 @@ def fused_features_stream(spark: SparkSession, pages_dir: str,
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
     sdf = r.parquet(manifest_dir)
-    sdf = sdf.repartition(_stream_fanout(pages_dir, parallelism))
+    sdf = sdf.repartition(_stream_fanout(spark, pages_dir, parallelism))
     return _features_df(sdf)
 
 
@@ -298,7 +300,7 @@ def fused_gvec_stream(spark: SparkSession, pages_dir: str,
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
     sdf = r.parquet(manifest_dir)
-    sdf = sdf.repartition(_stream_fanout(pages_dir, parallelism))
+    sdf = sdf.repartition(_stream_fanout(spark, pages_dir, parallelism))
     out = sdf.mapInArrow(_gvec_split_batches, GVEC_OUT_DDL)
     return out.select(
         "url", F.timestamp_micros("warc_ts_us").alias("warc_ts"), "lang",

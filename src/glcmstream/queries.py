@@ -1300,19 +1300,21 @@ def _drain_width(spark, *paths: str):
     a constant tuned to one host). A streaming query bakes its state
     partition count in at FIRST start from spark.sql.shuffle.partitions,
     and every state store instance is per-epoch fixed cost (RocksDB
-    open + commit; measured ~0.45 s per drain going 32 -> 8 on this
-    box). Width = input_bytes / 32 MiB, floored at 8 and CAPPED AT THE
-    SESSION DEFAULT — so a driver-fixture drain uses 8 stores while a
-    production-sized backlog keeps the session's full width (at 100 TB
-    the cap, not the floor, is in charge; override the per-partition
-    target with GLCMSTREAM_DRAIN_TARGET_BYTES). Results are unchanged —
-    partitioning only moves rows among tasks; the same reasoning landed
-    in round 4 for the recrawl bench leg. The GLCM stateful paths do NOT
-    use this: their per-bucket python stages want the full width."""
+    open + commit; measured ~0.45 s per drain going 32 -> 8 on a 32-core
+    host). Width = input_bytes / 32 MiB, floored at 8 and then CAPPED AT
+    THE SESSION DEFAULT (one partition per core, see session.get_spark)
+    — so a driver-fixture drain uses 8 stores on a large host and never
+    more than the session's width on a small one, while a
+    production-sized backlog keeps the session's full width (override
+    the per-partition target with GLCMSTREAM_DRAIN_TARGET_BYTES).
+    Results are unchanged — partitioning only moves rows among tasks;
+    the same reasoning landed in round 4 for the recrawl bench leg. The
+    GLCM stateful paths run at the session width itself, which already
+    follows the core count."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     target = int(_os.environ.get("GLCMSTREAM_DRAIN_TARGET_BYTES",
                                  str(32 << 20)))
-    width = max(8, min(default, _input_bytes(*paths) // target))
+    width = min(default, max(8, _input_bytes(*paths) // target))
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         yield width

@@ -2,6 +2,7 @@
 
 One place for every engine-relevant config (AQE, Arrow, shuffle
 partitions, UTC) so batch, streaming, tests and bench agree — SURVEY.md §4.2.
+The shuffle width defaults to the cluster's core count.
 """
 
 from __future__ import annotations
@@ -31,9 +32,7 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
     except Exception:
         pass
     master = master or os.environ.get("GLCMSTREAM_MASTER", "local[*]")
-    sp = shuffle_partitions or config.SHUFFLE_PARTITIONS
     b = (SparkSession.builder.appName(app).master(master)
-         .config("spark.sql.shuffle.partitions", str(sp))
          .config("spark.sql.session.timeZone", config.SESSION_TZ)
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -75,6 +74,14 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
          .config("spark.sql.streaming.stateStore.rocksdb."
                  "changelogCheckpointing.enabled", "true"))
     spark = b.getOrCreate()
+    # One shuffle (and state) partition per core unless the caller pins
+    # a width. Every state partition pays a fixed cost per epoch (python
+    # runner, empty timeout-scan runner, RocksDB load + commit: ~1.1 s of
+    # task time), so a width above the core count only adds task waves:
+    # 32 partitions on 4 cores ran 8 waves per epoch. A streaming query
+    # keeps the width its checkpoint was started with.
+    spark.conf.set("spark.sql.shuffle.partitions", str(
+        shuffle_partitions or spark.sparkContext.defaultParallelism))
     ensure_pyfiles(spark)
     return spark
 

@@ -696,8 +696,8 @@ def sliding_windows_from_emissions(emissions: DataFrame,
     stage disappears from the plan. Assembly is partition-resident
     (one concat of the partition's Arrow chunks): pane rows are
     key-cardinality, not doc-cardinality, so a shuffle partition holds
-    them comfortably; size spark.sql.shuffle.partitions for state
-    cardinality as usual.
+    them comfortably; spark.sql.shuffle.partitions (one partition per
+    core by default, see session.get_spark) sets the stage width.
     """
     l_us, s_us = _duration_us(length), _duration_us(slide)
     assert l_us % s_us == 0, "slide must divide window length"

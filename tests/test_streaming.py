@@ -713,6 +713,79 @@ def test_checkpoint_resume_bucketed_and_session_state(spark, pages_dir):
     assert g["n_docs"].sum() == 440
 
 
+def test_state_width_follows_cores(spark, pages_dir):
+    """The session's shuffle width is one partition per core, so a fresh
+    stateful query runs one state partition per core. A checkpoint
+    started at another width keeps it: Spark pins a streaming query's
+    state width in its offset log, so a width-32 checkpoint resumes at
+    32 on the default session and still matches the batch oracle."""
+    def drain(sdf, ckpt, rows):
+        q = (state.stateful_glcm_agg_bucketed(sdf, buckets=16)
+             .writeStream.outputMode("update")
+             .foreachBatch(lambda df, eid: rows.append(df.toPandas()))
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return {p["stateOperators"][0]["numShufflePartitions"]
+                for p in q.recentProgress if p["stateOperators"]}
+
+    cores = spark.sparkContext.defaultParallelism
+    assert drain(stream.pages_stream(spark, pages_dir),
+                 _scratch("width_fresh_ckpt"), []) == {cores}
+
+    files = sorted(os.listdir(pages_dir))
+    src = _scratch("width_resume_src")
+    ckpt = _scratch("width_resume_ckpt")
+    rows: list = []
+    wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "32")
+    for f in files[:4]:
+        shutil.copy2(os.path.join(pages_dir, f), src)
+    assert drain(stream.pages_stream(wide, src), ckpt, rows) == {32}
+    spark._jvm.org.apache.spark.sql.execution.streaming \
+        .state.StateStore.stop()
+    for f in files[4:]:
+        shutil.copy2(os.path.join(pages_dir, f), src)
+    assert drain(stream.pages_stream(spark, src), ckpt, rows) == {32}
+
+    cols = ["lang", "host", "window_start"]
+    got = (pd.concat(rows, ignore_index=True).sort_values("n_docs")
+           .groupby(cols, dropna=False).tail(1).drop(columns="n_batches"))
+    exp = state.batch_glcm_agg(stream.read_pages_batch(spark, pages_dir)) \
+        .drop("n_batches").toPandas()
+    got = got[exp.columns].sort_values(cols).reset_index(drop=True)
+    exp = exp.sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)
+    assert got["n_docs"].sum() == 440
+
+
+def test_drain_width_capped_at_session_width(spark, tmp_path, monkeypatch):
+    """queries._drain_width never widens a drain past the session width:
+    floor 8, then capped at the session default, and the default is
+    restored on exit."""
+    from glcmstream import queries
+    small = tmp_path / "small.bin"
+    small.write_bytes(b"x" * 1024)
+    key = "spark.sql.shuffle.partitions"
+    s = spark.newSession()
+    s.conf.set(key, "4")
+    with queries._drain_width(s, str(small)) as width:
+        assert width <= 4
+        assert s.conf.get(key) == str(width)
+    assert s.conf.get(key) == "4"
+    # a backlog far above the per-partition target is still capped
+    monkeypatch.setenv("GLCMSTREAM_DRAIN_TARGET_BYTES", "1")
+    with queries._drain_width(s, str(small)) as width:
+        assert width == 4
+    assert s.conf.get(key) == "4"
+    # on a wide session a small drain narrows to the floor of 8
+    monkeypatch.delenv("GLCMSTREAM_DRAIN_TARGET_BYTES")
+    s.conf.set(key, "32")
+    with queries._drain_width(s, str(small)) as width:
+        assert width == 8
+    assert s.conf.get(key) == "32"
+
+
 # ---------------------------------------------------------------------------
 # late data beyond watermark is dropped (append mode)
 # ---------------------------------------------------------------------------
