@@ -50,6 +50,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, StructField,
                                StructType)
 
+from .session import trim_zip_finders
+
 STATE_SCHEMA = StructType([
     StructField("buf_ts", ArrayType(LongType())),
     StructField("buf_code", ArrayType(IntegerType())),
@@ -88,6 +90,7 @@ def _match_run(ts: list[int], code: list[int], uid: int, last_click: int,
 
 def match_pattern(key, pdfs: Iterator[pd.DataFrame],
                   state: GroupState) -> Iterator[pd.DataFrame]:
+    trim_zip_finders()
     uid = key[0]
     if state.exists:
         buf_ts, buf_code, last_click, last_error = state.get

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .session import trim_zip_finders
+
 MINHASH_PERMS = 32
 LSH_BANDS = 8          # default: 8 bands x 4 rows (parameterizable below)
 LSH_ROWS = MINHASH_PERMS // LSH_BANDS
@@ -124,6 +126,7 @@ def _perm_params(n: int = MINHASH_PERMS) -> tuple[np.ndarray, np.ndarray]:
 @pandas_udf(ArrayType(LongType()))
 def minhash_signature_udf(text: pd.Series) -> pd.Series:
     """MinHash signature (MINHASH_PERMS 64-bit mins) per document."""
+    trim_zip_finders()
     a, b = _perm_params()
     sigs = []
     for hs in _token_hashes(text):
@@ -141,6 +144,7 @@ def minhash_signature_udf(text: pd.Series) -> pd.Series:
 def shingle_hashes_udf(text: pd.Series) -> pd.Series:
     """Per-doc sorted distinct shingle hashes (for exact-Jaccard verify
     with JVM-side array_intersect — no text through any shuffle)."""
+    trim_zip_finders()
     return pd.Series([np.sort(h).astype(np.int64).tolist()
                       for h in _token_hashes(text)])
 
@@ -150,6 +154,7 @@ def simhash_udf(text: pd.Series) -> pd.Series:
     """64-bit SimHash over word tokens (vectorized FNV token hashes,
     unweighted). All tokens of the batch hash in one pass; bit voting and
     signature packing are numpy (no per-token python — round-2 verdict)."""
+    trim_zip_finders()
     tok_lists = [(t or "").split() for t in text]
     flat = [tok for toks in tok_lists for tok in toks]
     th_flat = _fnv1a_tokens(flat)

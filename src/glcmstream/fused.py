@@ -42,6 +42,7 @@ from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from . import config
+from .session import trim_zip_finders
 
 SPLIT_SCHEMA = StructType([
     StructField("path", StringType()),
@@ -171,6 +172,7 @@ def _iter_split_rows(it: Iterator[pa.RecordBatch]):
     sub-batches so worker memory stays bounded regardless of row-group
     size; html surfaces as zero-copy views.
     """
+    trim_zip_finders()
     cols = ["url", "warc_ts", "lang", "html"]
     for mb in it:
         paths = mb.column("path").to_pylist()

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import trim_zip_finders
+
 META_SCHEMA = ("doc_id bigint, n_bytes bigint, width int, height int, "
                "n_frames int, modality string")
 
@@ -39,6 +41,7 @@ def decode_metadata(binary_df: DataFrame) -> DataFrame:
     partition size — the correct plumbing for 100TB binary scans.
     """
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         for pdf in batches:
             metas = [_fake_decode_meta(p) for p in pdf["payload"]]
             yield pd.DataFrame({
@@ -60,6 +63,7 @@ def frame_sample_stub(binary_df: DataFrame, every_n: int = 8) -> DataFrame:
     row fan-out, schema and partition behavior are the real deliverable.
     """
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         for pdf in batches:
             rows = {"doc_id": [], "frame_idx": []}
             for did, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -83,6 +87,7 @@ def resize_stub(binary_df: DataFrame, target: int = 256) -> DataFrame:
     can verify the exact strided selection.
     """
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         import numpy as np
         for pdf in batches:
             rows = {"doc_id": [], "k": [], "n_sampled": [],

@@ -16,6 +16,7 @@ from pyspark.sql.types import (DoubleType, StringType, StructField,
                                StructType)
 
 from . import config, kernel
+from .session import trim_zip_finders
 
 FEATURE_SCHEMA = StructType(
     [StructField(n, DoubleType()) for n in config.HARALICK_FEATURES])
@@ -32,6 +33,7 @@ PAGES_BASE_US = 1_767_225_600_000_000
 @pandas_udf(FEATURE_SCHEMA)
 def glcm_features_udf(html: pd.Series) -> pd.DataFrame:
     """html bytes -> struct of six Haralick features (A1→A2→A4→A5)."""
+    trim_zip_finders()
     feats = kernel.featurize_htmls(html.tolist())
     return pd.DataFrame(feats)
 
@@ -39,6 +41,7 @@ def glcm_features_udf(html: pd.Series) -> pd.DataFrame:
 @pandas_udf(RENDER_SCHEMA)
 def rendertile_udf(html: pd.Series) -> pd.DataFrame:
     """Sliding-window rendertile summary stats per document (A6)."""
+    trim_zip_finders()
     stats = kernel.rendertile_stats(html.tolist())
     return pd.DataFrame(stats)
 
@@ -46,6 +49,7 @@ def rendertile_udf(html: pd.Series) -> pd.DataFrame:
 @pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """html -> extracted text (A10, byte-identity invariant)."""
+    trim_zip_finders()
     return pd.Series(kernel.extract_texts(html.tolist()))
 
 

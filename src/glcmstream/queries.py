@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import config, dedup, multimodal, plan, similarity, skew
-from .session import ensure_pyfiles
+from .session import ensure_pyfiles, trim_zip_finders
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -1149,6 +1149,7 @@ def cogrouped_user_funnel(spark, sf_dir):
         .select("user_id", "ts")
 
     def funnel(key, c: pd.DataFrame, p: pd.DataFrame) -> pd.DataFrame:
+        trim_zip_finders()
         fc = c["ts"].min() if len(c) else pd.NaT
         fp = p["ts"].min() if len(p) else pd.NaT
         gap = (None if pd.isna(fc) or pd.isna(fp)
@@ -1311,7 +1312,7 @@ def _drain_width(spark, *paths: str):
     the same reasoning landed in round 4 for the recrawl bench leg. The
     GLCM stateful paths run at the session width itself, which already
     follows the core count."""
-    default = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     target = int(_os.environ.get("GLCMSTREAM_DRAIN_TARGET_BYTES",
                                  str(32 << 20)))
     width = min(default, max(8, _input_bytes(*paths) // target))
@@ -2017,10 +2018,12 @@ def pandas_udaf_geomean(spark, sf_dir):
 
     @pandas_udf(DoubleType(), PandasUDFType.GROUPED_AGG)
     def geomean(v):
+        trim_zip_finders()
         return float(np.exp(np.log(v.to_numpy(dtype=np.float64)).mean()))
 
     @pandas_udf(LongType(), PandasUDFType.GROUPED_AGG)
     def ncount(v):
+        trim_zip_finders()
         return len(v)
 
     li = _t(spark, sf_dir, "lineitem")

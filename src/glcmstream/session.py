@@ -8,8 +8,10 @@ The shuffle width defaults to the cluster's core count.
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -76,8 +78,8 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
     spark = b.getOrCreate()
     # One shuffle (and state) partition per core unless the caller pins
     # a width. Every state partition pays a fixed cost per epoch (python
-    # runner, empty timeout-scan runner, RocksDB load + commit: ~1.1 s of
-    # task time), so a width above the core count only adds task waves:
+    # runner, empty timeout-scan runner, RocksDB load + commit), so a
+    # width above the core count only adds task waves:
     # 32 partitions on 4 cores ran 8 waves per epoch. A streaming query
     # keeps the width its checkpoint was started with.
     spark.conf.set("spark.sql.shuffle.partitions", str(
@@ -87,6 +89,27 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
 
 
 _zipped_for: set[int] = set()
+
+
+def trim_zip_finders() -> None:
+    """Drop every cached zip finder from sys.path_importer_cache.
+
+    PySpark's worker calls importlib.invalidate_caches() at the start of
+    every task, and under CPython 3.11 each cached zipimporter answers by
+    re-reading its archive's whole central directory in pure Python:
+    pyspark.zip, the spark-core jar (on the worker PYTHONPATH), py4j and
+    glcmstream.zip cost ~120 ms of single-threaded work per task, several
+    hundred ms with every core doing it at once. Python allows entries of
+    this cache to be removed; a path hook rebuilds a finder only when a
+    later import needs one, from zipimport's already-loaded directory
+    cache, and in steady state nothing does — so the next task's
+    invalidate_caches() has no archive to re-read. Every function the
+    engine hands to a python worker calls this as its first statement.
+    """
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)
 
 
 def ensure_pyfiles(spark: SparkSession) -> None:

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .session import trim_zip_finders
+
 EMB_DIM = 64
 ANN_BANDS = 8          # default band count (see lsh_geometry)
 ANN_BAND_BITS = 4      # fallback bits/band for tiny corpora
@@ -113,6 +115,7 @@ def kmeans_codebook(emb: DataFrame, n_cells: int = IVF_CELLS,
     sample = e.orderBy("h").limit(sample_cap)
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_zip_finders()
         pdf = pdf.sort_values("h").reset_index(drop=True)
         M = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         M /= np.linalg.norm(M, axis=1, keepdims=True)
@@ -249,6 +252,7 @@ def hyperplane_bands_udf(bands: int, band_bits: int):
 
     @pandas_udf(ArrayType(LongType()))
     def _sig(emb: pd.Series) -> pd.Series:
+        trim_zip_finders()
         rng = np.random.default_rng(777)
         planes = rng.standard_normal((n_planes, EMB_DIM))
         m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
@@ -257,7 +261,11 @@ def hyperplane_bands_udf(bands: int, band_bits: int):
         weights = 1 << np.arange(band_bits, dtype=np.int64)
         sigs = bits @ weights            # (n, bands)
         return pd.Series(sigs.tolist())
-    return _sig
+    # deterministic in fact; marked otherwise so Catalyst evaluates it
+    # once: posexplode infers a size(sigs) > 0 filter, and pushing that
+    # through the projection would inline a second _sig evaluation (a
+    # second ArrowEvalPython over the same scan)
+    return _sig.asNondeterministic()
 
 
 def lsh_near_neighbors(emb: DataFrame, min_cosine: float = 0.9,
@@ -315,6 +323,7 @@ def lsh_near_neighbors(emb: DataFrame, min_cosine: float = 0.9,
         # a (band, bucket) group can span Arrow chunk boundaries —
         # concat the partition first (rows are key-cardinality x bands,
         # a few MB per partition; same pattern as the sliding finalizer)
+        trim_zip_finders()
         chunks = [pdf for pdf in it if len(pdf)]
         if not chunks:
             return
@@ -347,8 +356,7 @@ def lsh_near_neighbors(emb: DataFrame, min_cosine: float = 0.9,
                 "id_b": np.concatenate(out_b),
                 "dot": np.concatenate(out_d)})
 
-    nparts = int(emb.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+    nparts = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # explicit partition COUNT: a bare repartition(cols) of small rows
     # gets AQE-coalesced below full parallelism (state.py landmine)
     pairs = (rows.repartition(nparts, "band", "bucket")

@@ -25,6 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import trim_zip_finders
+
 
 def _part_id(file_path: str) -> int:
     """part-00017-<uuid>.snappy.parquet -> 17 (the write partition id)."""
@@ -297,6 +299,7 @@ class IcebergLiteTable:
                    if f.dataType.simpleString().startswith("timestamp")]
 
         def read_rows(it):
+            trim_zip_finders()
             for mb in it:
                 for path in mb.column("path").to_pylist():
                     pf = pq2.ParquetFile(path)

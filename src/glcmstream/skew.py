@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import trim_zip_finders
 
 
 def mg_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
@@ -27,6 +28,7 @@ def mg_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
     from pyspark.sql.types import StructField, StructType
 
     def local_heavy(it):
+        trim_zip_finders()
         import pandas as pd
         summary = None  # running MG counters: pd.Series value -> count
         for pdf in it:

@@ -66,6 +66,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
 from . import config, kernel
+from .session import trim_zip_finders
 
 L2 = config.GRAY_LEVELS * config.GRAY_LEVELS
 
@@ -198,6 +199,7 @@ def _window_fn(window_us: int, counts: bool):
     order because counts are integers."""
     def accumulate(key, pdfs: Iterator[pd.DataFrame],
                    state: GroupState) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         if state.hasTimedOut:
             # the watermark passed the window end: the final emission
             # already happened on the last data batch
@@ -236,6 +238,7 @@ def glcm_vec_udf():
 
     @pandas_udf(BinaryType())
     def _vec(html: pd.Series) -> pd.Series:
+        trim_zip_finders()
         counts = kernel.glcm_counts_htmls(html.tolist())
         n = len(html)
         flat = counts.reshape(n, -1).astype("<u4")
@@ -489,6 +492,7 @@ def _bucket_window_fn(window_us: int, counts: bool):
     blob once the watermark passes its window end + RETAIN_US."""
     def accumulate_bucket(key, pdfs: Iterator[pd.DataFrame],
                           state: GroupState) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         keys, meta, mats = _load_bucket(state)
         index = {k + (int(m[0]),): i
                  for i, (k, m) in enumerate(zip(keys, meta))}
@@ -608,6 +612,7 @@ def finalize_sliding_windows(panes: DataFrame,
     cols = ["lang", "host", "window_start"]
 
     def assemble(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         carry_key = None
         carry_counts = None
         carry_docs = 0
@@ -704,6 +709,7 @@ def sliding_windows_from_emissions(emissions: DataFrame,
     r = l_us // s_us
 
     def assemble(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         chunks = [pdf for pdf in it if len(pdf)]
         if not chunks:
             return
@@ -775,7 +781,7 @@ def sliding_windows_from_emissions(emissions: DataFrame,
     # python assembly stage; repartition-by-num is exempt from AQE
     # coalescing, keeping the stage at full parallelism
     nparts = int(emissions.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+        "spark.sql.shuffle.partitions"))
     return (emissions
             .repartition(nparts, "lang", "host")
             .sortWithinPartitions("lang", "host", "pane_start", "n_docs")
@@ -796,6 +802,7 @@ def batch_glcm_agg_sliding(pages: DataFrame,
     r = l_us // s_us
 
     def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_zip_finders()
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
             .sum(axis=0).reshape(1, -1)
@@ -1143,6 +1150,7 @@ def _session_fn(gap_us: int):
     def accumulate_glcm_session(key, pdfs: Iterator[pd.DataFrame],
                                 state: GroupState
                                 ) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         lang, host = key
         frags = _unpack_frags(state.get[0]) if state.exists \
             else np.zeros((0, _FRAG_REC), dtype=np.int64)
@@ -1184,6 +1192,7 @@ def _bucket_session_fn(gap_us: int):
     def accumulate_bucket_sessions(key, pdfs: Iterator[pd.DataFrame],
                                    state: GroupState
                                    ) -> Iterator[pd.DataFrame]:
+        trim_zip_finders()
         keys, meta, mats = _load_bucket(state)
         # fragments per fine key: {(lang, host): [(k, _FRAG_REC) block]}
         # — state fragments grouped with ONE concatenate + factorize,
@@ -1301,6 +1310,7 @@ def batch_glcm_agg_session(pages: DataFrame,
     gap_us = _duration_us(gap)
 
     def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_zip_finders()
         lang, host = key
         pdf = pdf.sort_values("ts_us", kind="mergesort") \
             .reset_index(drop=True)
@@ -1329,6 +1339,7 @@ def batch_glcm_agg(pages: DataFrame) -> DataFrame:
     with applyInPandas (no state). Must agree exactly with the streaming
     result for the same input (determinism gate, BASELINE.json:14)."""
     def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_zip_finders()
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
             .sum(axis=0).reshape(1, -1)

@@ -5,9 +5,10 @@ broadcast, whole-stage codegen, and UDF-stage placement.
 
 import os
 
+import numpy as np
 from pyspark.sql import functions as F
 
-from glcmstream import plan, queries
+from glcmstream import plan, queries, similarity
 
 SF = "/root/testdata/sf0.01"
 
@@ -75,6 +76,19 @@ def test_featurize_udf_is_single_arrow_stage_after_pruning(spark):
     # the lang filter must appear below (after in text order) the Arrow node
     arrow_pos = s.index("ArrowEvalPython")
     assert "en" in s[arrow_pos:], "filter should be pushed below the UDF"
+
+
+def test_lsh_signature_udf_evaluated_once(spark):
+    """posexplode(sigs) infers a size(sigs) > 0 filter; pushed through
+    the projection it would inline a second _sig evaluation, i.e. a
+    second Python runner per task over the same scan."""
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(similarity.EMB_DIM).tolist())
+         for i in range(200)], "vec_id long, embedding array<float>")
+    s = _executed(similarity.lsh_near_neighbors(emb, min_cosine=0.9,
+                                                n_vectors=200))
+    assert s.count("ArrowEvalPython") == 1, s
 
 
 def test_range_join_is_equi_not_nested_loop(spark):
