@@ -438,13 +438,15 @@ FROM kv GROUP BY k
 def map_json_props(spark, sf_dir):
     """Map-typed JSON surface (SURVEY §2.B): from_json -> MapType with
     map_keys / map_values / explode — per-key stats over events.props
-    (round-1 exercised only get_json_object)."""
+    (round-1 exercised only get_json_object).
+
+    The props JSON is parsed once: the key test sits inside the explode
+    (a NULL map explodes to no rows), so no filter references the parsed
+    map and Catalyst has nothing to push below the parse and re-inline."""
     ev = _t(spark, sf_dir, "events")
-    m = F.from_json("props", "map<string,string>")
-    keyed = (ev.withColumn("m", m)
-             .filter(F.array_contains(F.map_keys(F.col("m")), "k"))
-             .filter(F.size(F.map_values(F.col("m"))) > 0))
-    kv = keyed.select(F.explode("m").alias("k", "v"))
+    parsed = ev.select(F.from_json("props", "map<string,string>").alias("m"))
+    kv = parsed.select(F.explode(F.when(
+        F.array_contains(F.map_keys("m"), "k"), F.col("m"))).alias("k", "v"))
     return (kv.groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.countDistinct("v").alias("n_distinct"),

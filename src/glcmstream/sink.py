@@ -11,17 +11,26 @@ Commit protocol (mirrors Iceberg snapshot semantics, snapshot-id=epochId):
   2. partial crash (data, no manifest) -> data dir is overwritten on
      retry, manifest written last      (no torn reads: readers only see
      manifest-listed epochs)
+Lineage is one manifest entry per non-empty data file of the epoch:
+`row_count` from the file's parquet footer and `input_hash`, the
+blake2b-64 hex digest of the file's bytes. The driver reads both from
+the local filesystem, as every other IcebergLite path already assumes
+(os.replace commit point, os.listdir of the manifest log). Manifests
+written before this definition carry the xor of per-row xxhash64
+values as `input_hash` instead; nothing reads it, so they stay valid.
 On a real cluster this swaps for `write.format("iceberg")` + WAP; the
 engine interface (commit(df, epochId) / read()) stays identical.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +44,25 @@ def _part_id(file_path: str) -> int:
         return int(base.split("-")[1])
     except (IndexError, ValueError):
         return -1
+
+
+def _data_files(epoch_dir: str) -> list[str]:
+    """Absolute paths of the data files under an epoch dir, sorted. Skips
+    the names Spark's file index skips too: anything starting with `_`
+    or `.` (`_SUCCESS`, the `.part-….crc` checksums)."""
+    out = []
+    for root, dirs, names in os.walk(os.path.abspath(epoch_dir)):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(root, n) for n in names
+                if not n.startswith(("_", "."))]
+    return sorted(out)
+
+
+def _file_hash(path: str) -> str:
+    """blake2b-64 hex digest of a file's bytes."""
+    with open(path, "rb") as f:
+        return hashlib.file_digest(
+            f, lambda: hashlib.blake2b(digest_size=8)).hexdigest()
 
 
 class IcebergLiteTable:
@@ -59,45 +87,37 @@ class IcebergLiteTable:
                _extra: dict | None = None) -> bool:
         """Idempotent epoch commit. Returns False on replayed no-op.
 
-        The epoch plan executes exactly ONCE — the parquet write. Lineage
-        (per-partition row counts + content hashes, BASELINE.json:14) is
-        then derived by scanning the files just written, so the manifest
-        certifies the bytes actually committed rather than a second,
-        possibly divergent, evaluation of the upstream plan (round-1
-        verdict: foreachBatch actions re-run the whole epoch, doubling
-        featurize cost and decoupling lineage from data)."""
+        The epoch plan executes exactly ONCE — the parquet write; it is
+        the commit's only Spark job. Lineage (BASELINE.json:14) is then
+        read on the driver from the files just written: one entry per
+        non-empty data file, with `row_count` from its parquet footer and
+        `input_hash` = blake2b-64 of its bytes, so the manifest certifies
+        the bytes actually committed rather than a second, possibly
+        divergent, evaluation of the upstream plan (round-1 verdict:
+        foreachBatch actions re-run the whole epoch, doubling featurize
+        cost and decoupling lineage from data). Zero-row files (Spark
+        writes one for an empty flat batch) stay out of the manifest."""
         if self.is_committed(epoch_id):
             return False
         epoch_dir = os.path.join(self.data_dir, f"epoch={epoch_id}")
-        w = batch_df
-        writer = None
         if partition_days_col:
             # Iceberg's days(<ts>) partition transform, realized as a
             # derived directory column: data/epoch=N/warc_day=YYYY-MM-DD/.
             # Readers filtering on warc_day get parquet partition pruning
             # (FIXTURES.md §1 layout promise).
-            w = batch_df.withColumn(
-                "warc_day", F.date_format(partition_days_col, "yyyy-MM-dd"))
-            writer = w.write.partitionBy("warc_day")
+            writer = batch_df.withColumn(
+                "warc_day", F.date_format(partition_days_col, "yyyy-MM-dd")
+            ).write.partitionBy("warc_day")
         else:
-            writer = w.write
+            writer = batch_df.write
         writer.mode("overwrite").parquet(epoch_dir)
-        spark = batch_df.sparkSession
-        written = spark.read.option("basePath", epoch_dir).parquet(epoch_dir)
-        written = written.select(*[c for c in w.columns])
-        lineage = (written
-                   .withColumn("_file", F.input_file_name())
-                   .withColumn("_h", F.xxhash64(*[F.col(c).cast("string")
-                                                  for c in batch_df.columns]))
-                   .groupBy("_file")
-                   .agg(F.count(F.lit(1)).alias("rows"),
-                        # order-insensitive, overflow-free content hash
-                        F.expr("bit_xor(_h)").alias("content_hash"))
-                   .collect())
         # absolute data-file paths in the manifest (Iceberg manifests list
         # their data files): the incremental streaming read consumes these
-        files = sorted({r["_file"].replace("file://", "", 1)
-                        for r in lineage})
+        lineage = []
+        for path in _data_files(epoch_dir):
+            rows = pq.read_metadata(path).num_rows
+            if rows:
+                lineage.append((path, rows, _file_hash(path)))
         # lineage is keyed by the data FILE (unique within the commit);
         # the write-partition id is only meaningful for flat commits —
         # with a partition_days_col each task emits one part file per
@@ -107,18 +127,14 @@ class IcebergLiteTable:
             "kind": _kind,
             **(_extra or {}),
             "schema": batch_df.schema.jsonValue(),
-            "files": files,
-            "partitions": [{"file": os.path.relpath(
-                                r["_file"].replace("file://", "", 1),
-                                self.table_dir),
+            "files": [path for path, _, _ in lineage],
+            "partitions": [{"file": os.path.relpath(path, self.table_dir),
                             "partition_id": (i if partition_days_col
-                                             else _part_id(r["_file"])),
-                            "row_count": int(r["rows"]),
-                            "input_hash": format(r["content_hash"]
-                                                 & 0xFFFFFFFFFFFFFFFF, "016x")}
-                           for i, r in enumerate(
-                               sorted(lineage, key=lambda r: r["_file"]))],
-            "row_count": int(sum(r["rows"] for r in lineage)),
+                                             else _part_id(path)),
+                            "row_count": rows,
+                            "input_hash": digest}
+                           for i, (path, rows, digest) in enumerate(lineage)],
+            "row_count": sum(rows for _, rows, _ in lineage),
         }
         # hidden tmp name: paths starting with '.' are invisible to Spark
         # file sources, so a live read_stream() over the manifest log can
@@ -183,8 +199,8 @@ class IcebergLiteTable:
         compacted rows — pass the merge key; refuses otherwise rather
         than silently dropping upsert semantics. Returns the new epoch
         id."""
-        live = self.committed_epochs()
-        has_merge = any(m.get("kind") == "merge" for m in self.manifests())
+        live = self._live()
+        has_merge = any(m.get("kind") == "merge" for m in live.values())
         if has_merge and merge_key is None:
             raise ValueError("table has merge snapshots; compact needs "
                              "the merge key to resolve shadowing")
@@ -192,7 +208,7 @@ class IcebergLiteTable:
         df = (self.read_latest(spark, merge_key) if has_merge
               else self.read(spark)).drop("epoch")
         self.commit(df, new_epoch, _kind="compaction",
-                    _extra={"replaces": live})
+                    _extra={"replaces": list(live)})
         return new_epoch
 
     # -- read --------------------------------------------------------------
@@ -204,22 +220,25 @@ class IcebergLiteTable:
                 out.append(int(fn[len("epoch-"):-len(".json")]))
         return sorted(out)
 
+    def _load_manifest(self, epoch_id: int) -> dict:
+        with open(self._manifest_path(epoch_id)) as f:
+            return json.load(f)
+
+    def _live(self, as_of_epoch: int | None = None) -> dict[int, dict]:
+        """Live epochs at a snapshot -> their manifests, in epoch order,
+        each parsed once: manifest-committed, minus epochs replaced by a
+        compaction at or before the snapshot."""
+        ms = {e: self._load_manifest(e) for e in self._all_epochs()
+              if as_of_epoch is None or e <= as_of_epoch}
+        replaced = {r for m in ms.values() if m.get("kind") == "compaction"
+                    for r in m.get("replaces", [])}
+        return {e: m for e, m in ms.items() if e not in replaced}
+
     def committed_epochs(self, as_of_epoch: int | None = None) -> list[int]:
-        """Live epochs at a snapshot: manifest-committed, minus epochs
-        replaced by a compaction at or before the snapshot."""
-        epochs = self._all_epochs()
-        if as_of_epoch is not None:
-            epochs = [e for e in epochs if e <= as_of_epoch]
-        replaced: set[int] = set()
-        for e in epochs:
-            m = json.load(open(self._manifest_path(e)))
-            if m.get("kind") == "compaction":
-                replaced.update(m.get("replaces", []))
-        return [e for e in epochs if e not in replaced]
+        return list(self._live(as_of_epoch))
 
     def manifests(self, as_of_epoch: int | None = None) -> list[dict]:
-        return [json.load(open(self._manifest_path(e)))
-                for e in self.committed_epochs(as_of_epoch)]
+        return list(self._live(as_of_epoch).values())
 
     def read(self, spark: SparkSession,
              as_of_epoch: int | None = None) -> DataFrame:
@@ -232,11 +251,11 @@ class IcebergLiteTable:
         HERE, so commits landing after read() never leak into the
         returned plan — snapshot isolation under concurrent writers
         (test_snapshot_isolation)."""
-        epochs = self.committed_epochs(as_of_epoch)
-        if not epochs:
+        live = self._live(as_of_epoch)
+        if not live:
             raise ValueError(f"no committed epochs in {self.table_dir}"
                              f" (as_of_epoch={as_of_epoch})")
-        paths = [os.path.join(self.data_dir, f"epoch={e}") for e in epochs]
+        paths = [os.path.join(self.data_dir, f"epoch={e}") for e in live]
         # Iceberg-style SCHEMA EVOLUTION (add/drop column): each manifest
         # records its commit's schema; when the live epochs disagree, the
         # snapshot's schema is the LATEST live manifest's — a column
@@ -247,22 +266,16 @@ class IcebergLiteTable:
         # are NOT supported (Iceberg resolves those via field ids, which
         # these manifests don't carry) — Spark's mergeSchema fails fast
         # on them rather than guessing.
-        schemas = [json.dumps(json.load(open(self._manifest_path(e)))
-                              .get("schema"), sort_keys=True)
-                   for e in epochs]
-        if len(set(schemas)) <= 1:
+        schemas = [m.get("schema") for m in live.values()]
+        if len({json.dumps(s, sort_keys=True) for s in schemas}) <= 1:
             return spark.read.option("basePath", self.data_dir) \
                 .parquet(*paths)
         df = (spark.read.option("basePath", self.data_dir)
               .option("mergeSchema", "true").parquet(*paths))
-        latest = json.load(open(self._manifest_path(epochs[-1])))["schema"]
-        want = [f["name"] for f in latest["fields"]]
+        want = [f["name"] for f in schemas[-1]["fields"]]
+        known = {f["name"] for s in schemas for f in s["fields"]}
         # keep hidden partition-dir columns (e.g. warc_day) the scan adds
-        extras = [c for c in df.columns
-                  if c not in want and c not in
-                  {f["name"] for m in (json.load(open(self._manifest_path(e)))
-                                       for e in epochs)
-                   for f in m["schema"]["fields"]}]
+        extras = [c for c in df.columns if c not in known]
         return df.select(*(want + extras))
 
     def read_stream(self, spark: SparkSession) -> DataFrame:
@@ -279,8 +292,8 @@ class IcebergLiteTable:
         import pyarrow as pa
         import pyarrow.parquet as pq2
 
-        epochs = self.committed_epochs()
-        if not epochs:
+        manifests = self.manifests()
+        if not manifests:
             raise ValueError(f"no committed epochs in {self.table_dir}")
         # target schema = the LATEST live manifest's (schema evolution:
         # the stream's output schema is the current snapshot's; files
@@ -289,7 +302,7 @@ class IcebergLiteTable:
         # the same contract as the batch read())
         from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import StructType as _ST
-        schema = _ST.fromJson(self.manifests()[-1]["schema"])
+        schema = _ST.fromJson(manifests[-1]["schema"])
         ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                         for f in schema.fields)
         names = [f.name for f in schema.fields]

@@ -267,3 +267,80 @@ def test_schema_evolution_add_and_drop_column(spark, table):
     got = spark.table(qn)
     assert set(got.columns) == {"url", "doc_id"}  # latest (narrow) schema
     assert got.count() == 10
+
+
+def _blake2b64(path):
+    import hashlib
+    with open(path, "rb") as f:
+        return hashlib.blake2b(f.read(), digest_size=8).hexdigest()
+
+
+@pytest.mark.parametrize("days_col", [None, "warc_ts"])
+def test_lineage_from_written_files(spark, table, days_col):
+    """Each manifest entry certifies one written data file: its row count
+    is what Spark reads back from it, its input_hash is blake2b-64 of its
+    bytes, and `files` is exactly the non-empty parquet data files of the
+    epoch dir (no .crc checksum, no _SUCCESS marker)."""
+    df = _pages(spark, range(0, 30), 1).unionByName(
+        _pages(spark, range(30, 60), 2)).repartition(4, "doc_id")
+    table.commit(df, 0, partition_days_col=days_col)
+    m = table.manifests()[0]
+    epoch_dir = os.path.join(table.data_dir, "epoch=0")
+
+    on_disk = [os.path.join(root, n)
+               for root, _, names in os.walk(os.path.abspath(epoch_dir))
+               for n in names]
+    assert any(n.endswith(".crc") for n in on_disk)
+    assert any(os.path.basename(n) == "_SUCCESS" for n in on_disk)
+    data = {p for p in on_disk
+            if p.endswith(".parquet")
+            and not os.path.basename(p).startswith(".")
+            and spark.read.parquet(p).count() > 0}
+    assert set(m["files"]) == data and len(m["files"]) == len(data) > 2
+
+    parts = m["partitions"]
+    assert [os.path.abspath(os.path.join(table.table_dir, p["file"]))
+            for p in parts] == sorted(m["files"])
+    for p in parts:
+        path = os.path.join(table.table_dir, p["file"])
+        assert p["row_count"] == spark.read.parquet(path).count()
+        assert p["input_hash"] == _blake2b64(path)
+    assert m["row_count"] == sum(p["row_count"] for p in parts) == 60
+
+
+@pytest.mark.parametrize("days_col", [None, "warc_ts"])
+def test_empty_batch_commits_empty_manifest(spark, table, days_col):
+    empty = _pages(spark, range(0, 10), 1).limit(0)
+    assert table.commit(empty, 0, partition_days_col=days_col) is True
+    m = table.manifests()[0]
+    assert m["files"] == [] and m["partitions"] == []
+    assert m["row_count"] == 0
+    assert table.commit(empty, 0, partition_days_col=days_col) is False
+
+
+def test_commit_runs_no_more_jobs_than_its_write(spark, table):
+    """The write is the commit's only Spark work: lineage comes from the
+    written files on the driver, with no read-back scan of the epoch."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df = _pages(spark, range(0, 30), 1).repartition(4, "doc_id")
+    bare = os.path.join(SCRATCH, "iceberg_bare_write")
+    shutil.rmtree(bare, ignore_errors=True)
+    try:
+        n_write = jobs("bare_write",
+                       lambda: df.write.mode("overwrite").parquet(bare))
+    finally:
+        shutil.rmtree(bare, ignore_errors=True)
+    n_commit = jobs("sink_commit", lambda: table.commit(df, 0))
+    assert n_write >= 1
+    assert n_commit <= n_write

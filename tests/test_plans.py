@@ -91,6 +91,14 @@ def test_lsh_signature_udf_evaluated_once(spark):
     assert s.count("ArrowEvalPython") == 1, s
 
 
+def test_map_json_props_parses_json_once(spark):
+    """Filters on the parsed map get pushed below the parse and inline
+    from_json into every predicate (and the scan's DataFilters); the
+    plan must parse each props value once."""
+    s = _executed(queries.QUERIES["map_json_props"](spark, SF))
+    assert s.count("from_json(") == 1, s
+
+
 def test_range_join_is_equi_not_nested_loop(spark):
     s = _executed(queries.QUERIES["range_join_event_pairs"](spark, SF))
     assert "NestedLoop" not in s, "bucketed range join degenerated to NLJ"
