@@ -9,6 +9,10 @@ identically on both sides to absorb summation-order noise.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
+import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -16,11 +20,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import config, dedup, multimodal, plan, similarity, skew
+from . import config, dedup, multimodal, plan, similarity, skew, stream
 from .session import ensure_pyfiles, trim_zip_finders
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
+
+_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
 def register(name: str, sql: str | None = None):
@@ -50,6 +57,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(f_.dataType, TimestampNTZType):
             df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
     return df
+
+
+def _scratch_dir(prefix: str, sf_dir: str) -> str:
+    """Stable md5-keyed scratch path for a table a query builds once per
+    sf_dir and reuses."""
+    return os.path.join(
+        _SCRATCH, prefix + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
 
 
 # ===========================================================================
@@ -872,13 +886,9 @@ def ivf_topk_cosine(spark, sf_dir):
     (k-means codebook + cell-partitioned assignment built once per
     sf_dir, partition-pruned probes — round-2 verdict items #5/#4);
     recall vs brute_force_topk is pinned by tests/test_dedup_recall.py."""
-    import hashlib
-    import os
     _ensure_session_confs(spark)
     ensure_pyfiles(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qivf_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    tdir = _scratch_dir("qivf_", sf_dir)
     return similarity.ivf_topk_trained(
         spark, _t(spark, sf_dir, "embeddings"), tdir, target_id=0, k=10)
 
@@ -1181,14 +1191,9 @@ def iceberg_scan_pages(spark, sf_dir):
     is the even-doc_id half, i.e. exactly epoch 0's content. Exercises
     commit manifests, snapshot-isolated listing, partition layout, and
     the time-travel read path end-to-end under the driver's hash check."""
-    import hashlib
-    import os
-
     from .sink import IcebergLiteTable
     _ensure_session_confs(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qiceberg_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    tdir = _scratch_dir("qiceberg_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
         pages = plan.pages_from_documents(spark, sf_dir).drop("html")
@@ -1219,18 +1224,10 @@ def iceberg_stream_scan(spark, sf_dir):
     (fused-scan shape). Both epochs of the committed pages table stream
     through a per-lang aggregate; the twin aggregates the same logical
     content."""
-    import hashlib
-    import os
-    import tempfile as _tf
-    import uuid as _uuid
-
     from .sink import IcebergLiteTable
-    from .session import ensure_pyfiles as _ep
     _ensure_session_confs(spark)
-    _ep(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qicestream_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    ensure_pyfiles(spark)
+    tdir = _scratch_dir("qicestream_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
         pages = plan.pages_from_documents(spark, sf_dir).drop("html")
@@ -1241,14 +1238,7 @@ def iceberg_stream_scan(spark, sf_dir):
            .agg(F.count(F.lit(1)).alias("n_pages"),
                 F.sum("doc_id").alias("id_sum"),
                 F.sum(F.unix_micros("warc_ts")).alias("ts_sum")))
-    qname = f"icestream_{_uuid.uuid4().hex[:8]}"
-    ckpt = _tf.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, tdir):
-        q = (agg.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return spark.table(qname)
+    return _drain_to_memory(spark, agg, "complete", tdir)
 
 
 @register("salted_host_agg", f"""
@@ -1279,20 +1269,20 @@ def salted_host_agg(spark, sf_dir):
 # Streaming (run to completion with availableNow; deterministic)
 # ===========================================================================
 
-import contextlib
-import os as _os
+# per-partition input bytes of a drain (see _drain_width)
+_DRAIN_TARGET_BYTES = 32 << 20
 
 
 def _input_bytes(*paths: str) -> int:
     total = 0
     for p in paths:
-        if _os.path.isdir(p):
-            for root, _dirs, files in _os.walk(p):
+        if os.path.isdir(p):
+            for root, _dirs, files in os.walk(p):
                 for fn in files:
                     if not fn.startswith((".", "_")):
-                        total += _os.path.getsize(_os.path.join(root, fn))
-        elif _os.path.exists(p):
-            total += _os.path.getsize(p)
+                        total += os.path.getsize(os.path.join(root, fn))
+        elif os.path.exists(p):
+            total += os.path.getsize(p)
     return total
 
 
@@ -1308,16 +1298,14 @@ def _drain_width(spark, *paths: str):
     THE SESSION DEFAULT (one partition per core, see session.get_spark)
     — so a driver-fixture drain uses 8 stores on a large host and never
     more than the session's width on a small one, while a
-    production-sized backlog keeps the session's full width (override
-    the per-partition target with GLCMSTREAM_DRAIN_TARGET_BYTES).
+    production-sized backlog keeps the session's full width.
     Results are unchanged — partitioning only moves rows among tasks;
     the same reasoning landed in round 4 for the recrawl bench leg. The
     GLCM stateful paths run at the session width itself, which already
     follows the core count."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    target = int(_os.environ.get("GLCMSTREAM_DRAIN_TARGET_BYTES",
-                                 str(32 << 20)))
-    width = min(default, max(8, _input_bytes(*paths) // target))
+    width = min(default,
+                max(8, _input_bytes(*paths) // _DRAIN_TARGET_BYTES))
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         yield width
@@ -1325,15 +1313,36 @@ def _drain_width(spark, *paths: str):
         spark.conf.set("spark.sql.shuffle.partitions", str(default))
 
 
-def _run_stream_to_memory(sdf, name_prefix: str) -> tuple:
-    qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    q = (sdf.writeStream.format("memory").queryName(qname)
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return qname
+def _drain_to_memory(spark, sdf, output_mode: str,
+                     *paths: str) -> DataFrame:
+    """stream.drain of `sdf` into a memory table under a fresh temp
+    checkpoint, returned as a DataFrame. With input `paths` the drain
+    runs at _drain_width(spark, *paths), else at the session width."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_q_")
+    with (_drain_width(spark, *paths) if paths
+          else contextlib.nullcontext()):
+        name = stream.drain(sdf, output_mode, ckpt)
+    return spark.table(name)
+
+
+def _events_stream(spark, sf_dir):
+    """The events fixture as a file stream with `ts` as TIMESTAMP."""
+    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return (spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+            .withColumn("ts", F.col("ts").cast("timestamp")))
+
+
+def _final_windows(emissions: DataFrame) -> DataFrame:
+    """Last (fullest) update-mode emission per (lang, host,
+    window_start), features rounded to 4 places."""
+    w = (Window.partitionBy("lang", "host", "window_start")
+         .orderBy(F.desc("n_docs")))
+    return (emissions.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("lang", "host", "window_start", "n_docs",
+                    *[F.round(c, 4).alias(c)
+                      for c in config.HARALICK_FEATURES]))
 
 
 @register("streaming_tumbling_events", """
@@ -1345,18 +1354,13 @@ def streaming_tumbling_events(spark, sf_dir):
     """True Structured Streaming tumbling-window aggregate over the events
     fixture (file micro-batch source, event-time watermark, availableNow),
     checked against the batch SQL semantics."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (spark.readStream.schema(raw_schema)
-           .option("pathGlobFilter", "events.parquet")
-           .parquet(sf_dir)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
+    sdf = _events_stream(spark, sf_dir)
     agg = (sdf.withWatermark("ts", "1 minute")
            .groupBy(F.window("ts", "10 minutes"), "event_type")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.round(F.sum("value"), 2).alias("sum_value")))
-    with _drain_width(spark, f"{sf_dir}/events.parquet"):
-        qname = _run_stream_to_memory(agg, "tumble")
-    return (spark.table(qname)
+    return (_drain_to_memory(spark, agg, "complete",
+                             f"{sf_dir}/events.parquet")
             .select(F.unix_timestamp(F.col("window.start"))
                     .alias("window_start"),
                     "event_type", "n", "sum_value"))
@@ -1373,18 +1377,13 @@ FROM ex GROUP BY ws
 def streaming_sliding_events(spark, sf_dir):
     """Sliding windows (10 min / 5 min hop) — each event lands in 2
     overlapping windows; oracle enumerates the offsets explicitly."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (spark.readStream.schema(raw_schema)
-           .option("pathGlobFilter", "events.parquet")
-           .parquet(sf_dir)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
+    sdf = _events_stream(spark, sf_dir)
     agg = (sdf.withWatermark("ts", "1 minute")
            .groupBy(F.window("ts", "10 minutes", "5 minutes"))
            .agg(F.count(F.lit(1)).alias("n"),
                 F.round(F.sum("value"), 2).alias("sum_value")))
-    with _drain_width(spark, f"{sf_dir}/events.parquet"):
-        qname = _run_stream_to_memory(agg, "slide")
-    return (spark.table(qname)
+    return (_drain_to_memory(spark, agg, "complete",
+                             f"{sf_dir}/events.parquet")
             .select(F.unix_timestamp(F.col("window.start"))
                     .alias("window_start"), "n", "sum_value"))
 
@@ -1504,24 +1503,12 @@ def _derived_pages_dir(spark, sf_dir) -> str:
     parquet once per sf_dir (stable md5-keyed dir with a completion
     marker, so repeated queries() calls and concurrent driver runs reuse
     it)."""
-    import hashlib
-    import os
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qpages_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    out = _scratch_dir("qpages_", sf_dir)
     _ensure_session_confs(spark)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         pages = plan.pages_from_documents(spark, sf_dir)
         pages.coalesce(4).write.mode("overwrite").parquet(out)
     return out
-
-
-def _derived_pages_stream(spark, sf_dir):
-    """Open the derived pages table as a file micro-batch stream
-    (queries can't stream a derived DataFrame directly)."""
-    out = _derived_pages_dir(spark, sf_dir)
-    schema = spark.read.parquet(out).schema
-    return spark.readStream.schema(schema).parquet(out)
 
 
 @register("fused_windowed_counts", f"""
@@ -1539,26 +1526,15 @@ def fused_windowed_counts(spark, sf_dir):
     the fused==classic equality tests; the SQL-checkable projection here
     (exact per-window doc counts) proves the fused scan delivers every
     row to the right window exactly once."""
-    import tempfile as _tf
-    import uuid as _uuid
-
-    from . import fused, stream
-    from .session import ensure_pyfiles as _ep
-    _ep(spark)
+    from . import fused
+    ensure_pyfiles(spark)
     pdir = _derived_pages_dir(spark, sf_dir)
     mdir = pdir + "_manifests"
     feats = fused.fused_features_stream(spark, pdir, mdir,
                                         max_files_per_trigger=2,
                                         parallelism=16)
     agg = stream.windowed_agg_over_features(feats)
-    qname = f"fusedwin_{_uuid.uuid4().hex[:8]}"
-    ckpt = _tf.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, pdir):
-        q = (agg.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(qname)
+    return (_drain_to_memory(spark, agg, "complete", pdir)
             .select(F.unix_seconds(F.col("window.start")).alias("win_s"),
                     "lang", "host", "n_docs"))
 
@@ -1579,22 +1555,14 @@ def streaming_session_windows(spark, sf_dir):
     """True streaming session_window aggregation (30-min gap) over the
     events stream; single availableNow batch, update mode, so final
     sessions equal the batch gaps-and-islands oracle."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (spark.readStream.schema(raw_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
+    sdf = _events_stream(spark, sf_dir)
     sess = (sdf.withWatermark("ts", "1 minute")
             .groupBy(F.session_window("ts", "30 minutes").alias("sw"),
                      "user_id")
             .agg(F.count(F.lit(1)).alias("n_events")))
-    qname = f"sessq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, f"{sf_dir}/events.parquet"):
-        q = (sess.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(qname).groupBy("user_id")
+    return (_drain_to_memory(spark, sess, "complete",
+                             f"{sf_dir}/events.parquet")
+            .groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_sessions")))
 
 
@@ -1620,21 +1588,15 @@ def streaming_session_pages(spark, sf_dir):
     BASELINE.json:6 (round-1 exercised sessions only on events/user_id).
     5-minute gap; availableNow; final sessions equal the DuckDB
     gaps-and-islands oracle."""
-    sdf = (_derived_pages_stream(spark, sf_dir)
-           .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    pdir = _derived_pages_dir(spark, sf_dir)
+    sdf = (stream.pages_stream(spark, pdir, max_files_per_trigger=None)
            .withColumn("host", F.try_parse_url("url", F.lit("HOST"))))
     sess = (sdf.withWatermark("warc_ts", "1 minute")
             .groupBy(F.session_window("warc_ts", "5 minutes").alias("sw"),
                      "lang", "host")
             .agg(F.count(F.lit(1)).alias("n")))
-    qname = f"sesspages_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, _derived_pages_dir(spark, sf_dir)):
-        q = (sess.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(qname).groupBy("lang", "host")
+    return (_drain_to_memory(spark, sess, "complete", pdir)
+            .groupBy("lang", "host")
             .agg(F.count(F.lit(1)).alias("n_sessions"),
                  F.sum("n").alias("n_pages")))
 
@@ -1664,25 +1626,16 @@ def cep_click_purchase(spark, sf_dir):
     time-sorted events table makes stateful and declarative semantics
     exactly comparable."""
     from . import cep
-    from .session import ensure_pyfiles as _ep
-    _ep(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (spark.readStream.schema(raw_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
+    ensure_pyfiles(spark)
+    sdf = _events_stream(spark, sf_dir)
     # 0s delay: the single-file replay buffers everything in one batch
     # (nothing is ever late), and the trailing no-data batch's watermark
     # reaches max event time, firing every flush timeout — so the full
     # match set is emitted and comparable to the declarative twin.
     matched = cep.cep_click_purchase(sdf, watermark="0 seconds")
-    qname = f"cepq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, f"{sf_dir}/events.parquet"):
-        q = (matched.writeStream.format("memory").queryName(qname)
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return spark.table(qname).select("user_id", "click_us", "purchase_us")
+    return (_drain_to_memory(spark, matched, "update",
+                             f"{sf_dir}/events.parquet")
+            .select("user_id", "click_us", "purchase_us"))
 
 
 @register("streaming_dedup_urls", f"""
@@ -1691,18 +1644,11 @@ SELECT DISTINCT url FROM pages
 """)
 def streaming_dedup_urls(spark, sf_dir):
     """dropDuplicatesWithinWatermark over the derived pages stream."""
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    d = (sdf.withWatermark("warc_ts", "2 hours")
+    pdir = _derived_pages_dir(spark, sf_dir)
+    d = (stream.pages_stream(spark, pdir, max_files_per_trigger=None)
+         .withWatermark("warc_ts", "2 hours")
          .dropDuplicatesWithinWatermark(["url"]).select("url"))
-    qname = f"dedupq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    with _drain_width(spark, _derived_pages_dir(spark, sf_dir)):
-        q = (d.writeStream.format("memory").queryName(qname)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return spark.table(qname)
+    return _drain_to_memory(spark, d, "append", pdir)
 
 
 @register("streaming_stateful_glcm")  # rows-only: GLCM not SQL-expressible
@@ -1710,27 +1656,12 @@ def streaming_stateful_glcm(spark, sf_dir):
     """applyInPandasWithState incremental GLCM accumulation exposed as a
     driver-checkable query (full pipeline: stream -> watermark -> stateful
     co-occurrence accumulation -> features of the running total)."""
-    from pyspark.sql import Window as W
-
     from . import state as state_mod
     ensure_pyfiles(spark)
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
+                              max_files_per_trigger=None)
     out = state_mod.stateful_glcm_agg(sdf)
-    qname = f"stateq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    w = W.partitionBy("lang", "host", "window_start") \
-         .orderBy(F.desc("n_docs"))
-    final = (spark.table(qname)
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn", "n_batches"))
-    return final.select("lang", "host", "window_start", "n_docs",
-                        *[F.round(c, 4).alias(c)
-                          for c in config.HARALICK_FEATURES])
+    return _final_windows(_drain_to_memory(spark, out, "update"))
 
 
 @register("streaming_stateful_glcm_fused")  # rows-only: GLCM not SQL-expressible
@@ -1740,31 +1671,16 @@ def streaming_stateful_glcm_fused(spark, sf_dir):
     -> watermarked stateful co-occurrence accumulation. Same state
     stage as streaming_stateful_glcm; tests pin exact equality with the
     batch oracle (test_fused_stateful_glcm_matches_batch)."""
-    from pyspark.sql import Window as W
-
     from . import fused, state as state_mod
     ensure_pyfiles(spark)
     _ensure_session_confs(spark)
     pages_dir = _derived_pages_dir(spark, sf_dir)
     mdir = pages_dir + "_manifests"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_statefused_")
     gvecs = fused.fused_gvec_stream(spark, pages_dir, mdir,
                                     max_files_per_trigger=8,
                                     parallelism=16)
     out = state_mod.stateful_glcm_agg_fused(gvecs)
-    qname = f"statefq_{uuid.uuid4().hex[:8]}"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    w = W.partitionBy("lang", "host", "window_start") \
-         .orderBy(F.desc("n_docs"))
-    final = (spark.table(qname)
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn", "n_batches"))
-    return final.select("lang", "host", "window_start", "n_docs",
-                        *[F.round(c, 4).alias(c)
-                          for c in config.HARALICK_FEATURES])
+    return _final_windows(_drain_to_memory(spark, out, "update"))
 
 
 @register("streaming_stateful_glcm_bucketed")  # rows-only: GLCM not SQL-expressible
@@ -1776,27 +1692,12 @@ def streaming_stateful_glcm_bucketed(spark, sf_dir):
     test_stateful_glcm_bucketed_matches_batch); this is the engine's
     fast path for the same semantics (~5.5 s vs ~12.6 s at the bench
     fixture, see state.py cost anatomy)."""
-    from pyspark.sql import Window as W
-
     from . import state as state_mod
     ensure_pyfiles(spark)
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
+                              max_files_per_trigger=None)
     out = state_mod.stateful_glcm_agg_bucketed(sdf)
-    qname = f"bktq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    w = W.partitionBy("lang", "host", "window_start") \
-         .orderBy(F.desc("n_docs"))
-    final = (spark.table(qname)
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn", "n_batches"))
-    return final.select("lang", "host", "window_start", "n_docs",
-                        *[F.round(c, 4).alias(c)
-                          for c in config.HARALICK_FEATURES])
+    return _final_windows(_drain_to_memory(spark, out, "update"))
 
 
 @register("streaming_stateful_glcm_sliding")  # rows-only: GLCM not SQL-expressible
@@ -1809,24 +1710,17 @@ def streaming_stateful_glcm_sliding(spark, sf_dir):
     emissions, pinned by test_bucketed_panes_match_per_pane); exactness
     vs the independent html-per-window batch route is pinned by
     test_stateful_glcm_sliding_matches_batch."""
-    from pyspark.sql import Window as W
-
     from . import state as state_mod
     ensure_pyfiles(spark)
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
+                              max_files_per_trigger=None)
     panes = state_mod.stateful_glcm_pane_agg_bucketed(sdf)
-    qname = f"slideq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    q = (panes.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
     # one-shuffle finalizer: worker-side latest-per-pane + local window
     # expansion (bit-identical to latest_panes -> finalize_sliding_windows,
     # pinned by test_sliding_from_emissions_matches_two_shuffle; shuffles
     # 1x the pane payload instead of 1 + L/S copies)
-    final = state_mod.sliding_windows_from_emissions(spark.table(qname))
+    final = state_mod.sliding_windows_from_emissions(
+        _drain_to_memory(spark, panes, "update"))
     return final.select(
         "lang", "host",
         F.unix_micros("window_start").alias("window_start_us"), "n_docs",
@@ -1846,16 +1740,10 @@ def streaming_stateful_glcm_session(spark, sf_dir):
     pinned by test_stateful_glcm_session_matches_batch."""
     from . import state as state_mod
     ensure_pyfiles(spark)
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
+                              max_files_per_trigger=None)
     sess = state_mod.stateful_glcm_session_agg_bucketed(sdf)
-    qname = f"sessglcmq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-    q = (sess.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    final = state_mod.final_sessions(spark.table(qname))
+    final = state_mod.final_sessions(_drain_to_memory(spark, sess, "update"))
     return final.select(
         "lang", "host",
         F.unix_micros("session_start").alias("session_start_us"),
@@ -1869,12 +1757,7 @@ def _derived_pages_cdc_dir(spark, sf_dir) -> str:
     file stream replays them as 4 micro-batches in event-time order
     (the mtime-tie landmine makes an unsorted directory replay
     nondeterministically — CLAUDE.md)."""
-    import hashlib
-    import os
-
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qcdc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    out = _scratch_dir("qcdc_", sf_dir)
     if not os.path.exists(os.path.join(out, "_DONE")):
         import time as _time
 
@@ -1920,32 +1803,24 @@ def streaming_cdc_upsert(spark, sf_dir):
     keeps exactly the newest version of every key. Scale shape: the
     shadow map is delta-sized (key, max merge epoch), and each epoch's
     dedup shuffles only (url, ts) pairs."""
-    import tempfile as _tf
-    import uuid as _uuid
-
-    from pyspark.sql import Window as W
-
     from .sink import IcebergLiteTable
     _ensure_session_confs(spark)
     cdc_dir = _derived_pages_cdc_dir(spark, sf_dir)
     schema = spark.read.parquet(cdc_dir).schema
     sdf = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", "1").parquet(cdc_dir))
-    table = IcebergLiteTable(_tf.mkdtemp(prefix="cdc_tbl_"))
+    table = IcebergLiteTable(tempfile.mkdtemp(prefix="cdc_tbl_"))
 
     def fb(batch_df, epoch_id):
-        w = W.partitionBy("url").orderBy(F.desc("warc_ts"),
-                                         F.desc("doc_id"))
+        w = Window.partitionBy("url").orderBy(F.desc("warc_ts"),
+                                              F.desc("doc_id"))
         latest = (batch_df.withColumn("_rn", F.row_number().over(w))
                   .filter(F.col("_rn") == 1).drop("_rn"))
         table.merge_commit(latest, int(epoch_id), key_col="url")
 
-    ckpt = _tf.mkdtemp(prefix=f"ckpt_cdc_{_uuid.uuid4().hex[:8]}_")
     with _drain_width(spark, cdc_dir):
-        q = (sdf.writeStream.foreachBatch(fb)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        stream.drain(sdf, "append", tempfile.mkdtemp(prefix="ckpt_cdc_"),
+                     fb)
     return (table.read_latest(spark, "url")
             .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
             .groupBy("lang")
@@ -1973,33 +1848,20 @@ def stream_static_join(spark, sf_dir):
     static_docs = F.broadcast(
         _t(spark, sf_dir, "documents").select("doc_id", "source"))
 
-    def _run(agg_df, prefix):
-        qname = f"{prefix}_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_")
-        q = (agg_df.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return spark.table(qname)
-
     pdir = _derived_pages_dir(spark, sf_dir)
-    sdf = _derived_pages_stream(spark, sf_dir) \
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    with _drain_width(spark, pdir):
-        counts = _run(
-            sdf.withWatermark("warc_ts", "1 hour")
-            .join(static_docs, "doc_id")
-            .groupBy("source").agg(F.count(F.lit(1)).alias("n_pages")),
-            "ssj_pages")
-
-        sdf2 = _derived_pages_stream(spark, sf_dir) \
-            .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-        urls = _run(
-            sdf2.withWatermark("warc_ts", "2 hours")
-            .dropDuplicatesWithinWatermark(["url"])
-            .join(static_docs, "doc_id")
-            .groupBy("source").agg(F.count(F.lit(1)).alias("n_urls")),
-            "ssj_urls")
+    counts = _drain_to_memory(
+        spark, stream.pages_stream(spark, pdir, max_files_per_trigger=None)
+        .withWatermark("warc_ts", "1 hour")
+        .join(static_docs, "doc_id")
+        .groupBy("source").agg(F.count(F.lit(1)).alias("n_pages")),
+        "complete", pdir)
+    urls = _drain_to_memory(
+        spark, stream.pages_stream(spark, pdir, max_files_per_trigger=None)
+        .withWatermark("warc_ts", "2 hours")
+        .dropDuplicatesWithinWatermark(["url"])
+        .join(static_docs, "doc_id")
+        .groupBy("source").agg(F.count(F.lit(1)).alias("n_urls")),
+        "complete", pdir)
     return counts.join(urls, "source")
 
 
@@ -2070,16 +1932,11 @@ def iceberg_merge_upsert(spark, sf_dir):
     re-crawl rows keyed by url; read_latest() resolves shadowing so the
     table shows exactly one row per url — the newest crawl. The oracle
     recomputes latest-crawl-per-url declaratively over the same pages."""
-    import hashlib
-    import os
-
     from pyspark.sql import Window as W
 
     from .sink import IcebergLiteTable
     _ensure_session_confs(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qmerge_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    tdir = _scratch_dir("qmerge_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
         pages = plan.pages_from_documents(spark, sf_dir).drop("html")
@@ -2111,22 +1968,15 @@ def iceberg_compacted_scan(spark, sf_dir):
     rewritten into one snapshot; the scan after compaction must produce
     the identical row set — the oracle aggregates the original logical
     content, so any row lost or duplicated by the rewrite hash-fails."""
-    import hashlib
-    import os
-    import shutil
-    import uuid as _uuid
-
     from .sink import IcebergLiteTable
     _ensure_session_confs(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qcompact_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    tdir = _scratch_dir("qcompact_", sf_dir)
     # crash-safe build (round-3 advice #1): commits + compact run under a
     # tmp dir that is atomically renamed into place only after compact()
     # succeeds — a run that dies mid-build leaves no partial table at
     # tdir, so the rebuild guard can key on the dir's existence alone
     if not os.path.isdir(tdir):
-        tmp = tdir + f".tmp-{_uuid.uuid4().hex[:8]}"
+        tmp = tdir + f".tmp-{uuid.uuid4().hex[:8]}"
         table = IcebergLiteTable(tmp)
         pages = plan.pages_from_documents(spark, sf_dir).drop("html")
         for i in range(3):
@@ -2345,18 +2195,11 @@ def iceberg_schema_evolution(spark, sf_dir):
     pre-evolution rows — the oracle reproduces exactly that union, so a
     reader that dropped old rows, lost the new column, or back-filled
     anything but NULL hash-fails."""
-    import hashlib
-    import os
-    import shutil
-    import uuid as _uuid
-
     from .sink import IcebergLiteTable
     _ensure_session_confs(spark)
-    tdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".scratch",
-        "qevolve_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8])
+    tdir = _scratch_dir("qevolve_", sf_dir)
     if not os.path.isdir(tdir):
-        tmp = tdir + f".tmp-{_uuid.uuid4().hex[:8]}"
+        tmp = tdir + f".tmp-{uuid.uuid4().hex[:8]}"
         table = IcebergLiteTable(tmp)
         pages = plan.pages_from_documents(spark, sf_dir)
         table.commit(pages.filter(F.col("doc_id") % 2 == 0)
@@ -2523,11 +2366,7 @@ def streaming_sliding_continuous(spark, sf_dir):
     from . import state as state_mod
     from .sink import IcebergLiteTable
     ensure_pyfiles(spark)
-    out_dir = _derived_pages_dir(spark, sf_dir)
-    schema = spark.read.parquet(out_dir).schema
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", "2").parquet(out_dir)
-           .withColumn("warc_ts", F.col("warc_ts").cast("timestamp")))
+    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir), 2)
     table = IcebergLiteTable(tempfile.mkdtemp(prefix="contslide_"))
     state_mod.sliding_glcm_stream_continuous(
         sdf, table, tempfile.mkdtemp(prefix="ckpt_contslide_"))

@@ -33,16 +33,14 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
         os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "mimalloc")
     except Exception:
         pass
-    master = master or os.environ.get("GLCMSTREAM_MASTER", "local[*]")
-    b = (SparkSession.builder.appName(app).master(master)
+    b = (SparkSession.builder.appName(app).master(master or "local[*]")
          .config("spark.sql.session.timeZone", config.SESSION_TZ)
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                 os.environ.get("GLCMSTREAM_ARROW_BATCH",
-                                str(config.ARROW_MAX_RECORDS)))
+                 str(config.ARROW_MAX_RECORDS))
          .config("spark.sql.parquet.filterPushdown", "true")
          .config("spark.driver.memory",
                  os.environ.get("GLCMSTREAM_DRIVER_MEM", "24g"))
@@ -57,10 +55,8 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
                  + " -XX:ParallelGCThreads=8 -XX:ConcGCThreads=2")
          # the UI's event-log/servlet threads burn a core at 32-way for
          # nothing a benchmark or test ever reads
-         .config("spark.ui.enabled",
-                 os.environ.get("GLCMSTREAM_UI", "false"))
-         .config("spark.sql.files.maxPartitionBytes",
-                 os.environ.get("GLCMSTREAM_MAX_PARTITION_BYTES", "32m"))
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.files.maxPartitionBytes", "32m")
          .config("spark.sql.files.openCostInBytes",
                  os.environ.get("GLCMSTREAM_OPEN_COST", "4194304"))
          # vectorized parquet reader holds batchSize rows of EVERY column
@@ -68,8 +64,7 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
          # is ~200-400 MiB per task wave -> GC churn. 128 rows ~ 6-12 MiB
          # (measured 2.1x on the featurize scan; narrow scans unaffected
          # at these scales)
-         .config("spark.sql.parquet.columnarReaderBatchSize",
-                 os.environ.get("GLCMSTREAM_PARQUET_BATCH_ROWS", "128"))
+         .config("spark.sql.parquet.columnarReaderBatchSize", "128")
          .config("spark.sql.streaming.stateStore.providerClass",
                  "org.apache.spark.sql.execution.streaming.state."
                  "RocksDBStateStoreProvider")

@@ -53,7 +53,10 @@ not ship.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
 import zlib
 from collections.abc import Iterator
 
@@ -65,7 +68,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
-from . import config, kernel
+from . import config, kernel, stream
 from .session import trim_zip_finders
 
 L2 = config.GRAY_LEVELS * config.GRAY_LEVELS
@@ -855,7 +858,6 @@ class ContinuousSlidingEmitter:
     def __init__(self, table, length: str = config.SLIDING_WINDOW[0],
                  slide: str = config.SLIDING_WINDOW[1],
                  watermark: str = config.WATERMARK_DELAY):
-        import json as _json
         self.table = table
         self.l_us = _duration_us(length)
         self.s_us = _duration_us(slide)
@@ -870,7 +872,7 @@ class ContinuousSlidingEmitter:
         self._last_epoch = None     # last FULLY processed engine epoch
         if os.path.exists(self._meta_path):
             with open(self._meta_path) as f:
-                m = _json.load(f)
+                m = json.load(f)
             self.emit_bound_us = m["emit_bound_us"]
             self.event_lb_us = m["event_lb_us"]
             self._store_v = m["store_v"]
@@ -886,10 +888,9 @@ class ContinuousSlidingEmitter:
         return f"{self._store_base}_v{v}"
 
     def _save_meta(self) -> None:
-        import json as _json
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
-            _json.dump({"emit_bound_us": self.emit_bound_us,
+            json.dump({"emit_bound_us": self.emit_bound_us,
                         "event_lb_us": self.event_lb_us,
                         "store_v": self._store_v,
                         "flush_seq": self._flush_seq,
@@ -897,15 +898,13 @@ class ContinuousSlidingEmitter:
         os.replace(tmp, self._meta_path)
 
     def _gc_stores(self) -> None:
-        import glob as _glob
-        import shutil as _shutil
-        for d in _glob.glob(self._store_base + "_v*"):
+        for d in glob.glob(self._store_base + "_v*"):
             try:
                 v = int(d.rsplit("_v", 1)[1])
             except ValueError:
                 continue
             if v != self._store_v:
-                _shutil.rmtree(d, ignore_errors=True)
+                shutil.rmtree(d, ignore_errors=True)
 
     def _read_store(self, spark):
         if self._store_v < 0:
@@ -1043,12 +1042,7 @@ def sliding_glcm_stream_continuous(pages_stream: DataFrame, table,
     panes = stateful_glcm_pane_agg_bucketed(pages_stream, slide=slide,
                                             watermark=watermark,
                                             buckets=buckets)
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    q = (panes.writeStream.outputMode("update")
-         .option("checkpointLocation", checkpoint_dir)
-         .foreachBatch(em.process)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream.drain(panes, "update", checkpoint_dir, em.process)
     em.flush(pages_stream.sparkSession)
     return em
 

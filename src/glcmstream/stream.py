@@ -4,11 +4,24 @@ The same kernel module backs batch and streaming by construction, so the
 determinism gate (same input stream + watermark -> identical output rows,
 BASELINE.json:6) reduces to Spark's own exactly-once machinery plus the
 sum-monoid state in state.py.
+
+Drain contract: `drain` is the one place the engine starts a streaming
+query. It creates the checkpoint dir, runs the query with
+trigger(availableNow=True) — every input file present at start, then
+the trailing no-data epoch that lets the watermark close what is left —
+and returns when the query terminates. Given a foreachBatch function it
+hands each epoch to it (sinks, emitters, MERGE); without one it drains
+into a fresh memory table and returns that table's name. Resuming from
+the same checkpoint dir skips every committed epoch. A new streaming
+path drains through here (or through `run_to_sink`), so anything that
+must see every epoch hooks in at one function.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,12 +143,26 @@ def dedup_stream(sdf: DataFrame, watermark: str = "1 hour") -> DataFrame:
             .dropDuplicatesWithinWatermark(["url"]))
 
 
+def drain(sdf: DataFrame, output_mode: str, checkpoint_dir: str,
+          foreach_batch: Callable[[DataFrame, int], None] | None = None
+          ) -> str | None:
+    """availableNow run of `sdf` to termination (see the module
+    docstring). Returns the memory table's name when no `foreach_batch`
+    is given, else None."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    w = (sdf.writeStream.outputMode(output_mode)
+         .option("checkpointLocation", checkpoint_dir))
+    name = None
+    if foreach_batch is None:
+        name = f"drain_{uuid.uuid4().hex[:12]}"
+        w = w.format("memory").queryName(name)
+    else:
+        w = w.foreachBatch(foreach_batch)
+    w.trigger(availableNow=True).start().awaitTermination()
+    return name
+
+
 def run_to_sink(sdf: DataFrame, table, checkpoint_dir: str,
                 output_mode: str = "update") -> None:
     """availableNow run of a streaming DF into an IcebergLiteTable."""
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    q = (sdf.writeStream.outputMode(output_mode)
-         .option("checkpointLocation", checkpoint_dir)
-         .foreachBatch(table.foreach_batch())
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(sdf, output_mode, checkpoint_dir, table.foreach_batch())

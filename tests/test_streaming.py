@@ -774,12 +774,12 @@ def test_drain_width_capped_at_session_width(spark, tmp_path, monkeypatch):
         assert s.conf.get(key) == str(width)
     assert s.conf.get(key) == "4"
     # a backlog far above the per-partition target is still capped
-    monkeypatch.setenv("GLCMSTREAM_DRAIN_TARGET_BYTES", "1")
+    monkeypatch.setattr(queries, "_DRAIN_TARGET_BYTES", 1)
     with queries._drain_width(s, str(small)) as width:
         assert width == 4
     assert s.conf.get(key) == "4"
     # on a wide session a small drain narrows to the floor of 8
-    monkeypatch.delenv("GLCMSTREAM_DRAIN_TARGET_BYTES")
+    monkeypatch.undo()
     s.conf.set(key, "32")
     with queries._drain_width(s, str(small)) as width:
         assert width == 8
