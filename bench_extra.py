@@ -314,10 +314,13 @@ def main() -> None:
               file=sys.stderr)
 
     def cc_prop():
+        # the leg name predates the star-only connected_components:
+        # it now times the public function end to end
         edges = cc_graph()
         n_comp = (dedup.connected_components(edges)
                   .select("component_id").distinct().count())
-        print(f"  propagation components={n_comp}", file=sys.stderr)
+        print(f"  connected_components components={n_comp}",
+              file=sys.stderr)
 
     run("cc_star_100k", cc_star)
     if legs.get("cc_star_100k") is not None and star_rounds:
@@ -325,8 +328,7 @@ def main() -> None:
     run("cc_minlabel_100k", cc_prop)
 
     # ---- one-shuffle sliding finalizer at PRODUCTION L/S (r5 verdict
-    # #8: the 13x shuffle-volume claim was analytic; time both paths on
-    # a 1 h / 5 min (r = 12) widened pane fixture and pin parity) ------
+    # #8): timed on a 1 h / 5 min (r = 12) widened pane fixture --------
     from glcmstream import state as state_mod
 
     def prod_ls_emissions(n_keys=2000, panes_per_key=48, seed=7):
@@ -355,27 +357,7 @@ def main() -> None:
             emis_prod, length="1 hour", slide="5 minutes").count()
         print(f"  one-shuffle windows={n}", file=sys.stderr)
 
-    def two_shuffle_prod():
-        n = state_mod.finalize_sliding_windows(
-            state_mod.latest_panes(emis_prod),
-            length="1 hour", slide="5 minutes").count()
-        print(f"  two-shuffle windows={n}", file=sys.stderr)
-
     run("sliding_prod_ls_one_shuffle", one_shuffle_prod)
-    run("sliding_prod_ls_two_shuffle", two_shuffle_prod)
-    if (not sel or "sliding_prod_ls_parity" in sel):
-        a = state_mod.sliding_windows_from_emissions(
-            emis_prod, length="1 hour", slide="5 minutes")
-        b = state_mod.finalize_sliding_windows(
-            state_mod.latest_panes(emis_prod),
-            length="1 hour", slide="5 minutes")
-        cols = ["lang", "host", "window_start"]
-        pa_ = a.toPandas().sort_values(cols).reset_index(drop=True)
-        pb_ = b.toPandas().sort_values(cols).reset_index(drop=True)
-        pd.testing.assert_frame_equal(pa_[pb_.columns], pb_)
-        legs["sliding_prod_ls_parity"] = {"bit_identical": True,
-                                          "windows": len(pa_)}
-        print("  prod-L/S parity: bit-identical", file=sys.stderr)
 
     print(json.dumps({"legs": legs, "cpus": CPUS,
                       "n_docs": bench.N_DOCS}))

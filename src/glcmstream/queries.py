@@ -1317,12 +1317,20 @@ def _drain_to_memory(spark, sdf, output_mode: str,
                      *paths: str) -> DataFrame:
     """stream.drain of `sdf` into a memory table under a fresh temp
     checkpoint, returned as a DataFrame. With input `paths` the drain
-    runs at _drain_width(spark, *paths), else at the session width."""
+    runs at _drain_width(spark, *paths), else at the session width.
+    The checkpoint dir and the memory table's temp view are removed
+    after the drain: the returned DataFrame's plan holds the memory
+    sink's rows itself, so a long-lived session keeps neither."""
     ckpt = tempfile.mkdtemp(prefix="ckpt_q_")
-    with (_drain_width(spark, *paths) if paths
-          else contextlib.nullcontext()):
-        name = stream.drain(sdf, output_mode, ckpt)
-    return spark.table(name)
+    try:
+        with (_drain_width(spark, *paths) if paths
+              else contextlib.nullcontext()):
+            name = stream.drain(sdf, output_mode, ckpt)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
 
 
 def _events_stream(spark, sf_dir):
@@ -1716,9 +1724,9 @@ def streaming_stateful_glcm_sliding(spark, sf_dir):
                               max_files_per_trigger=None)
     panes = state_mod.stateful_glcm_pane_agg_bucketed(sdf)
     # one-shuffle finalizer: worker-side latest-per-pane + local window
-    # expansion (bit-identical to latest_panes -> finalize_sliding_windows,
-    # pinned by test_sliding_from_emissions_matches_two_shuffle; shuffles
-    # 1x the pane payload instead of 1 + L/S copies)
+    # expansion (bit-identical to the independent html route, pinned by
+    # test_sliding_from_emissions_matches_batch_html; shuffles 1x the
+    # pane payload instead of 1 + L/S copies)
     final = state_mod.sliding_windows_from_emissions(
         _drain_to_memory(spark, panes, "update"))
     return final.select(
@@ -2284,7 +2292,7 @@ def dedup_components(spark, sf_dir):
     (jaccard_word_pairs' exact edges) resolved into connected
     components -> (doc_id, component_id = min doc id in the group),
     the keep-one-of-each-group step of a training-data dedup pipeline.
-    Distributed min-label propagation (dedup.connected_components);
+    Large-star/small-star contraction (dedup.connected_components);
     the DuckDB twin derives the identical edge set and closes it with
     a recursive CTE, so the component assignment is value-checked
     end-to-end."""
@@ -2299,21 +2307,12 @@ def dedup_components(spark, sf_dir):
 
 @register("dedup_components_star", _COMPONENTS_SQL)
 def dedup_components_star(spark, sf_dir):
-    """The O(log^2 n) alternating large-star/small-star contraction
-    (Kiveris et al., SoCC 2014) — connected_components' fallback for
-    pair graphs whose diameter exceeds the propagation budget (round-4
-    verdict #4) — under the driver's value-hash check: same edge set as
-    dedup_components, propagation budget forced to 0 so the star path
-    computes every component, against the identical recursive-CTE
-    oracle. Adversarial-diameter agreement with a union-find reference
-    is pinned by test_connected_components_synthetic_graphs."""
-    from . import dedup
-    edges = QUERIES["jaccard_word_pairs"](spark, sf_dir) \
-        .select("id_a", "id_b")
-    return (dedup.connected_components(edges, max_iter=0)
-            .select(F.col("id").alias("doc_id"),
-                    F.col("component_id").cast("bigint")
-                    .alias("component_id")))
+    """dedup_components under its earlier name for the star
+    contraction (Kiveris et al., SoCC 2014), which is now the only
+    connected-components path: same code, same recursive-CTE oracle.
+    Adversarial-diameter agreement with a union-find reference is
+    pinned by test_connected_components_synthetic_graphs."""
+    return dedup_components(spark, sf_dir)
 
 
 @register("dedup_keep_best", _KEEP_BEST_SQL)
@@ -2355,8 +2354,8 @@ def dedup_keep_best(spark, sf_dir):
 def streaming_sliding_continuous(spark, sf_dir):
     """CONTINUOUS per-epoch sliding-window emission (round-4 verdict
     #3): the pane stream drives a foreachBatch
-    ContinuousSlidingEmitter — each epoch upserts pane count vectors
-    into a bounded pane store and commits every window the (proxied,
+    ContinuousSlidingEmitter — each epoch appends its pane count vectors
+    to a bounded pane log and commits every window the (proxied,
     conservative) watermark closed since the previous epoch into an
     exactly-once IcebergLiteTable; the drain flush carries only the
     tail. Window VALUES are identical to the drain-time assembly

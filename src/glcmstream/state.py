@@ -34,6 +34,17 @@ passes a key's window end (plus RETAIN_US, or the session gap), and it
 also switches on Spark's late-row filter in front of the state function,
 so no row older than the watermark ever reaches evicted state.
 
+Sliding windows have ONE assembly, `sliding_windows_from_emissions`:
+raw pane emissions -> latest emission per pane -> window sums and
+features, in one shuffle. The registry query runs it once over a
+drain's emissions; `ContinuousSlidingEmitter` runs it every epoch over
+its pane log. The log is append-only: one parquet segment per epoch
+(`_paneseg_<epoch>` under the table dir) holding that epoch's pane rows,
+named with its max pane_start in the emitter's meta json. A segment is
+pruned once its max pane_start + L is at or below the emit bound. Crash
+order per epoch: write the segment, commit the windows, save the meta,
+then delete every pane dir the meta does not name.
+
 Cost model (measured at 55k docs / 13.4k (lang,host,window) keys x 2
 epochs, local[32]): the python state function itself is ~1.4s of wall
 (balanced across workers; per-key input conversion + vector sum +
@@ -153,13 +164,13 @@ def _pack_counts(counts: np.ndarray) -> bytes:
     (one (0,0) pad-pair hot cell aside), so the 8 KiB blob compresses
     ~8x — and the emission payload is what every downstream pass moves:
     the update-mode sink, the finalizer's exchange, the continuous
-    emitter's pane store. At the 55k-doc bench fixture that is ~255 MB
+    emitter's pane log. At the 55k-doc bench fixture that is ~255 MB
     of emissions shrunk to ~35 MB for ~60 ms of worker CPU; on the
     memory-bandwidth-contended host this is the difference between the
     sliding leg amplifying under load and not. Deterministic (fixed
     level, one zlib), so the per-key and bucketed pane paths still emit
     byte-identical rows. Internal wire format: every consumer
-    (finalizers, emitter store) is in this module."""
+    (the finalizer, the emitter's log) is in this module."""
     return zlib.compress(counts.astype("<i8").tobytes(), 1)
 
 
@@ -583,109 +594,19 @@ def stateful_glcm_pane_agg_bucketed(pages_stream: DataFrame,
     return _window_agg(pages_stream, slide, watermark, True, buckets)
 
 
-def latest_panes(emissions: DataFrame) -> DataFrame:
-    """Resolve update-mode pane emissions to each pane's FINAL count
-    vector with a hash aggregation (max_by on n_docs — a touched pane
-    always gains docs, so n_docs strictly increases across its
-    emissions and max_by is unambiguous). One partial-aggregated
-    exchange of 8 KiB pane rows; the row_number-window alternative
-    sorts the same payload through a single-pass window."""
-    return (emissions.groupBy("lang", "host", "pane_start")
-            .agg(F.max_by("counts", "n_docs").alias("counts"),
-                 F.max("n_docs").alias("n_docs")))
-
-
-def finalize_sliding_windows(panes: DataFrame,
-                             length: str = config.SLIDING_WINDOW[0],
-                             slide: str = config.SLIDING_WINDOW[1]
-                             ) -> DataFrame:
-    """Latest-per-pane count vectors -> sliding-window features: each
-    pane belongs to exactly length/slide windows (window_start =
-    pane_start - i*slide), so the expansion shuffles L/S copies of each
-    8 KiB PANE row (pane cardinality ~ key-count, not doc-count). The
-    pane->window sum runs as ONE mapInPandas pass over data
-    repartitioned+sorted by window key — contiguous groups summed with
-    np.add.reduceat and featurized in stacked batches — because
-    per-group applyInPandas pays ~200 us/group of protocol overhead
-    (measured 37 s at 80k windows vs ~6 s this way; same anatomy as the
-    bucketed state fix). Exact by the GLCM sum-monoid law."""
-    l_us, s_us = _duration_us(length), _duration_us(slide)
-    assert l_us % s_us == 0, "slide must divide window length"
-    r = l_us // s_us
-    cols = ["lang", "host", "window_start"]
-
-    def assemble(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        trim_zip_finders()
-        carry_key = None
-        carry_counts = None
-        carry_docs = 0
-
-        def rows_of(keys, counts, docs):
-            return pd.DataFrame({
-                "lang": [k[0] for k in keys],
-                "host": [k[1] for k in keys],
-                "window_start": [k[2] for k in keys],
-                "n_docs": docs, **_features(counts)})
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mats = _unpack_counts_rows(pdf["counts"])
-            # contiguous group boundaries over the sorted partition
-            keyframe = pdf[cols]
-            change = (keyframe != keyframe.shift()).any(axis=1).to_numpy()
-            change[0] = True
-            starts = np.flatnonzero(change)
-            gsum = np.add.reduceat(mats, starts, axis=0)
-            gdocs = np.add.reduceat(pdf["n_docs"].to_numpy(), starts)
-            gkeys = [tuple(keyframe.iloc[s]) for s in starts]
-            # merge the carried group from the previous Arrow batch
-            if carry_key is not None:
-                if gkeys[0] == carry_key:
-                    gsum[0] += carry_counts
-                    gdocs[0] += carry_docs
-                else:
-                    gkeys.insert(0, carry_key)
-                    gsum = np.vstack([carry_counts[None, :], gsum])
-                    gdocs = np.concatenate([[carry_docs], gdocs])
-            # the last group may continue into the next batch: carry it
-            carry_key = gkeys[-1]
-            carry_counts = gsum[-1].copy()
-            carry_docs = int(gdocs[-1])
-            if len(gkeys) > 1:
-                yield rows_of(gkeys[:-1], gsum[:-1], gdocs[:-1])
-        if carry_key is not None:
-            yield rows_of([carry_key], carry_counts[None, :],
-                          np.array([carry_docs]))
-
-    exploded = (panes
-                .withColumn("_i", F.explode(F.array(
-                    *[F.lit(i) for i in range(r)])))
-                .withColumn("window_start", F.timestamp_micros(
-                    F.unix_micros("pane_start")
-                    - F.col("_i").cast("long") * F.lit(s_us)))
-                .select("lang", "host", "window_start", "counts",
-                        "n_docs"))
-    return (exploded.repartition(*cols).sortWithinPartitions(*cols)
-            .mapInPandas(assemble, SLIDING_OUTPUT_SCHEMA))
-
-
 def sliding_windows_from_emissions(emissions: DataFrame,
                                    length: str = config.SLIDING_WINDOW[0],
                                    slide: str = config.SLIDING_WINDOW[1]
                                    ) -> DataFrame:
-    """ONE-shuffle sliding finalizer over raw update-mode pane emissions.
-
-    latest_panes + finalize_sliding_windows spend two exchanges: a
-    groupBy resolving each pane's final counts, then an explode of L/S
-    copies of every 8 KiB pane row through a second shuffle. This path
-    repartitions the raw emissions ONCE by (lang, host) and does both
-    steps worker-side:
+    """The sliding-window assembly: raw update-mode pane emissions ->
+    sliding-window features in ONE shuffle. The emissions repartition
+    once by (lang, host) and both steps run worker-side:
 
     - latest-per-pane: rows arrive sorted by (lang, host, pane_start,
       n_docs); a touched pane's n_docs strictly increases across its
-      emissions, so the last row of a pane's run is its final state
-      (the same argument that makes latest_panes' max_by unambiguous).
+      emissions, so the last row of a pane's run is its final state.
+      Emissions from any number of epochs (or stores) may be unioned
+      in: only the fullest one per pane counts.
     - pane->window expansion: the windows a pane touches are
       window_start = pane_start - i*slide, i < r = L/S. Candidates are
       generated worker-side as fused int64 codes (8 BYTES each, not
@@ -696,12 +617,13 @@ def sliding_windows_from_emissions(emissions: DataFrame,
       per-key span + r < BIG, so codes are strictly increasing across
       the sorted partition and a window's [code, code+r) range can
       never cross into another key's block. Counts are integers, so
-      any summation order is bit-identical to the reduceat path
-      (pinned by test_sliding_from_emissions_matches_two_shuffle).
+      any summation order is bit-identical to the independent html
+      route (pinned by test_sliding_from_emissions_matches_batch_html).
 
-    Shuffle volume drops from (1 + L/S) x pane payload to 1x — at a
-    production 1 h / 5 min window that is 13x — and one whole exchange
-    stage disappears from the plan. Assembly is partition-resident
+    Each pane row crosses the exchange once; the L/S window copies are
+    8-byte codes, never 8 KiB pane copies (a groupBy-then-explode plan
+    shuffles (1 + L/S) x the pane payload in two exchanges, 13x at a
+    production 1 h / 5 min window). Assembly is partition-resident
     (one concat of the partition's Arrow chunks): pane rows are
     key-cardinality, not doc-cardinality, so a shuffle partition holds
     them comfortably; spark.sql.shuffle.partitions (one partition per
@@ -826,14 +748,46 @@ def batch_glcm_agg_sliding(pages: DataFrame,
             .applyInPandas(agg_group, SLIDING_OUTPUT_SCHEMA))
 
 
+# segment schema: pane_start as unix micros, the pre-log store's layout
+_SEGMENT_DDL = ("lang string, host string, pane_start long, counts binary, "
+                "n_docs long")
+
+
+def _max_pane_start(seg_dir: str) -> int | None:
+    """Largest pane_start of a written pane-log segment, from its part
+    files' parquet footer statistics (no Spark job); None when the
+    segment holds no rows."""
+    # imported here: the emitter runs on the driver, while every python
+    # worker imports this module for the state functions
+    import pyarrow.parquet as pq
+    tops = []
+    for path in glob.glob(os.path.join(seg_dir, "part-*")):
+        md = pq.read_metadata(path)
+        j = md.schema.names.index("pane_start")
+        tops += [md.row_group(i).column(j).statistics.max
+                 for i in range(md.num_row_groups)
+                 if md.row_group(i).num_rows]
+    return max(tops, default=None)
+
+
 class ContinuousSlidingEmitter:
-    """Per-EPOCH closed-window emission for the pane-based sliding path
-    (round-4 verdict #3: finalize_sliding_windows used to run only as a
-    batch pass after the drain — exact, but all emission latency was
-    deferred to the end). Drive the pane stream's foreachBatch through
-    `process`; each epoch upserts the new pane count vectors into a
-    parquet pane store and emits every window the watermark has closed
-    since the previous epoch; `flush` emits only the tail after drain.
+    """Per-EPOCH closed-window emission for the pane-based sliding path.
+    Drive the pane stream's foreachBatch through `process`; each epoch
+    appends its pane emissions to a pane log and emits every window the
+    watermark has closed since the previous epoch; `flush` emits only
+    the tail after a drain.
+
+    Pane log (under the table dir): one parquet SEGMENT per epoch,
+    `_paneseg_<epoch>`, holding only that epoch's pane rows (written
+    once, overwritten on replay; its max pane_start comes from the
+    footers). The meta json `_sliding_meta.json` names every live
+    segment with its max pane_start. A window is assembled by
+    sliding_windows_from_emissions over the live segments, which keeps
+    the fullest emission of each pane, so the log never needs a
+    latest-per-pane rewrite: an epoch costs one exchange that carries
+    each live pane row once. A `_panestore_v<n>` store written by the
+    earlier versioned-store layout resumes as one more segment, with
+    the meta's event_lb_us as its max.
 
     Watermark proxy (no access to the engine's internal watermark from
     foreachBatch): a touched pane proves an event with ts >= pane_start
@@ -844,30 +798,34 @@ class ContinuousSlidingEmitter:
     passed every pane of the window, so its counts are final — and late
     by at most one slide + one epoch, never wrong. Windows are selected
     by a monotone emit bound (prev < end <= new), so each window emits
-    EXACTLY once, through IcebergLiteTable's idempotent epoch commit;
-    the emitter's own scalars (bound, event-ts proxy) persist in a
-    meta json rewritten before each commit, so a crash-restart resumes
-    without re-emitting (replayed epochs no-op on the manifest check).
+    EXACTLY once, through IcebergLiteTable's idempotent epoch commit.
 
-    Scale shape: the store holds only OPEN panes (panes whose every
-    containing window has emitted are pruned by the same bound), i.e.
-    O(active keys x L/S) rows of 8 KiB — corpus-size independent; the
-    per-epoch assembly reuses finalize_sliding_windows' reduceat path
-    over that bounded store."""
+    Prune rule: a segment whose max pane_start + L is at or below the
+    emit bound leaves the log — every window containing one of its
+    panes has emitted — so the log holds O(active keys x L/S) pane
+    rows, corpus-size independent.
+
+    Crash order, per epoch: write the segment, commit the windows, save
+    the meta (bound, event proxy, live segments, last epoch), then
+    delete every pane dir the meta does not name (pruned segments, and
+    at construction whatever a crash left behind). A crash before the
+    meta save replays the epoch: its segment is rewritten and the
+    duplicate table commit no-ops; a crash after it makes the replay a
+    no-op."""
 
     def __init__(self, table, length: str = config.SLIDING_WINDOW[0],
                  slide: str = config.SLIDING_WINDOW[1],
                  watermark: str = config.WATERMARK_DELAY):
         self.table = table
+        self.length, self.slide = length, slide
         self.l_us = _duration_us(length)
         self.s_us = _duration_us(slide)
         self.delay_us = _duration_us(watermark)
         self._meta_path = os.path.join(table.table_dir,
                                        "_sliding_meta.json")
-        self._store_base = os.path.join(table.table_dir, "_panestore")
         self.emit_bound_us = None   # all windows with end <= this emitted
         self.event_lb_us = None     # max pane_start over PAST epochs
-        self._store_v = -1
+        self.segments = {}          # live segment dir name -> max pane_start
         self._flush_seq = 0
         self._last_epoch = None     # last FULLY processed engine epoch
         if os.path.exists(self._meta_path):
@@ -875,67 +833,46 @@ class ContinuousSlidingEmitter:
                 m = json.load(f)
             self.emit_bound_us = m["emit_bound_us"]
             self.event_lb_us = m["event_lb_us"]
-            self._store_v = m["store_v"]
             self._flush_seq = m.get("flush_seq", 0)
             self._last_epoch = m.get("last_epoch")
-        # sweep store versions the meta does NOT point at: a crash
-        # before _save_meta orphans new_v (rewritten on replay anyway);
-        # a crash after _save_meta but before GC leaves the superseded
-        # old version behind
-        self._gc_stores()
-
-    def _store_dir(self, v: int) -> str:
-        return f"{self._store_base}_v{v}"
+            if "segments" in m:
+                self.segments = m["segments"]
+            elif m["store_v"] >= 0 and self.event_lb_us is not None:
+                self.segments = {f"_panestore_v{m['store_v']}":
+                                 self.event_lb_us}
+        self._gc()
 
     def _save_meta(self) -> None:
+        """Drop the segments the emit bound has passed, persist the
+        scalars and the live segments, then delete unnamed pane dirs."""
+        if self.emit_bound_us is not None:
+            self.segments = {n: m for n, m in self.segments.items()
+                             if m + self.l_us > self.emit_bound_us}
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"emit_bound_us": self.emit_bound_us,
                         "event_lb_us": self.event_lb_us,
-                        "store_v": self._store_v,
+                        "segments": self.segments,
                         "flush_seq": self._flush_seq,
                         "last_epoch": self._last_epoch}, f)
         os.replace(tmp, self._meta_path)
+        self._gc()
 
-    def _gc_stores(self) -> None:
-        for d in glob.glob(self._store_base + "_v*"):
-            try:
-                v = int(d.rsplit("_v", 1)[1])
-            except ValueError:
-                continue
-            if v != self._store_v:
+    def _gc(self) -> None:
+        for d in glob.glob(os.path.join(self.table.table_dir, "_pane*")):
+            if os.path.basename(d) not in self.segments:
                 shutil.rmtree(d, ignore_errors=True)
-
-    def _read_store(self, spark):
-        if self._store_v < 0:
-            return None
-        try:
-            return spark.read.parquet(self._store_dir(self._store_v))
-        except Exception:
-            # an all-pruned epoch can leave a part-file-less parquet
-            # dir (schema uninferrable) — an empty store and no store
-            # are equivalent
-            return None
-
-    def _write_store(self, df) -> None:
-        new_v = self._store_v + 1
-        df.write.mode("overwrite").parquet(self._store_dir(new_v))
-        # deletion of the superseded version is DEFERRED to _gc_stores
-        # AFTER the meta json durably points at new_v: deleting here
-        # would open a crash window where the persisted store_v names a
-        # directory that no longer exists — a restart would silently
-        # lose every open pane and emit undercounted windows
-        self._store_v = new_v
 
     def _emit(self, spark, lo_us: int | None, hi_us: int,
               epoch_id: int) -> None:
         """Assemble + commit windows with end in (lo_us, hi_us]."""
-        store = self._read_store(spark)
-        if store is None:
+        if not self.segments:
             return
-        wins = finalize_sliding_windows(
-            store.withColumn("pane_start",
-                             F.timestamp_micros("pane_start")))
+        panes = spark.read.schema(_SEGMENT_DDL).parquet(
+            *[os.path.join(self.table.table_dir, n) for n in self.segments])
+        wins = sliding_windows_from_emissions(
+            panes.withColumn("pane_start", F.timestamp_micros("pane_start")),
+            self.length, self.slide)
         end_us = F.unix_micros("window_start") + F.lit(self.l_us)
         cond = end_us <= F.lit(hi_us)
         if lo_us is not None:
@@ -951,7 +888,7 @@ class ContinuousSlidingEmitter:
         if epoch_id is not None and epoch_id == self._last_epoch:
             # Engine replay of an epoch whose process() already ran to
             # completion (crash after _save_meta, before the engine's
-            # own checkpoint commit): store, emit bound, event proxy
+            # own checkpoint commit): segment, emit bound, event proxy
             # and table commit are all already applied and persisted.
             # Recomputing here would derive a LARGER watermark from the
             # already-advanced event_lb, no-op on the duplicate table
@@ -959,29 +896,17 @@ class ContinuousSlidingEmitter:
             # never committed — permanently skipping them. Idempotent
             # replay is therefore a full no-op.
             return
-        spark = batch_df.sparkSession
-        # the epoch's pane rows feed TWO actions (the store write and the
-        # max(pane_start) proxy); without a persist each re-executes the
-        # stateful pane stage's lineage, doubling the dominant
-        # applyInPandasWithState cost every epoch (round-5 advice #2)
-        batch_df.persist()
-        try:
-            new = (batch_df
-                   .select("lang", "host",
-                           F.unix_micros("pane_start").alias("pane_start"),
-                           "counts", "n_docs"))
-            old = self._read_store(spark)
-            merged = latest_panes(new if old is None else old.union(new)
-                                  ).select("lang", "host", "pane_start",
-                                           "counts", "n_docs")
-            # prune panes whose every containing window has emitted
-            if self.emit_bound_us is not None:
-                merged = merged.filter(
-                    F.col("pane_start") + self.l_us > self.emit_bound_us)
-            self._write_store(merged)
-            batch_max = (new.agg(F.max("pane_start")).collect()[0][0])
-        finally:
-            batch_df.unpersist()
+        name = f"_paneseg_{epoch_id}"
+        seg = os.path.join(self.table.table_dir, name)
+        # the epoch's pane rows run through the stateful stage ONCE:
+        # the segment write is the only action on batch_df
+        (batch_df.select("lang", "host",
+                         F.unix_micros("pane_start").alias("pane_start"),
+                         "counts", "n_docs")
+         .write.mode("overwrite").parquet(seg))
+        batch_max = _max_pane_start(seg)
+        if batch_max is not None:
+            self.segments[name] = batch_max
         # close windows under the PRE-ingest watermark proxy (panes seen
         # in epochs < e bound the event max Spark derived this epoch's
         # watermark from)
@@ -996,18 +921,17 @@ class ContinuousSlidingEmitter:
             # between replays the epoch, the idempotent table commit
             # no-ops, and the bound then advances — the reverse order
             # could advance the bound past windows never committed
-            self._emit(spark, lo, wm_lower, epoch_id)
+            self._emit(batch_df.sparkSession, lo, wm_lower, epoch_id)
             self.emit_bound_us = wm_lower
         self._last_epoch = epoch_id
         self._save_meta()
-        self._gc_stores()
 
     def flush(self, spark) -> None:
         """Drain tail: emit every window assembled from data seen so
         far, exactly once. NON-terminal: the bound advances only to
         event_lb + slide + length — one slide PAST the largest possible
         window end over panes seen (event_lb + L; the extra slide is
-        conservative and covers no pane the store could hold) — and
+        conservative and covers no pane the log could hold) — and
         each flush commits under a fresh sequenced epoch id — so a
         periodic availableNow deployment (drain, flush, later drain new
         backlog, flush again) keeps emitting new windows. The price of

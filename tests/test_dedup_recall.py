@@ -408,10 +408,10 @@ def test_ann_lsh_sf001_query_returns_rows(spark):
         assert r.cosine >= 0.4
 
 def test_connected_components_synthetic_graphs(spark):
-    """Min-label propagation must resolve chains, stars, cliques and
+    """Connected components must resolve chains, stars, cliques and
     singletons-by-absence correctly: components get the min member id,
     arrival/edge order is irrelevant (symmetric closure), and the
-    convergence loop stops on its own (diameter rounds)."""
+    star-contraction loop stops on its own."""
     edges = [
         # chain 1-2-3-4 (diameter 3: worst case for propagation)
         (2, 1), (2, 3), (4, 3),
@@ -427,21 +427,17 @@ def test_connected_components_synthetic_graphs(spark):
            (10, 10), (11, 10), (12, 10), (13, 10),
            (20, 20), (21, 20), (22, 20)}
     assert got == exp
-    # deep-but-within-budget diameter (round-6): a 28-node chain needs
-    # ~27 PROPAGATION rounds without triggering the star fallback. The
-    # loop must localCheckpoint each round — with the per-round cache()
-    # it replaced, Catalyst planning time grows with the round count
-    # and this tiny graph alone takes minutes (the same plan-growth
-    # blow-up the star fallback fixed in round 5, latent in the
-    # propagation loop until the 100k-edge bench leg exposed it).
+    # deep chain (round-6): every round must localCheckpoint — with a
+    # per-round cache(), Catalyst planning time grows with the round
+    # count and a tiny 28-node chain alone takes minutes.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(28)], ["id_a", "id_b"])
     lbl = dedup.connected_components(chain).collect()
     assert {r.component_id for r in lbl} == {0} and len(lbl) == 29
     # adversarial diameter (round-4 verdict #4): a 600-node path graph
-    # whose ids are seeded-shuffled (so the min label must propagate
-    # across ~600 hops, >> any propagation budget) must CONVERGE via
-    # the large-star/small-star fallback instead of raising, agreeing
+    # whose ids are seeded-shuffled (so a min label would have to
+    # propagate across ~600 hops) must CONVERGE via the
+    # large-star/small-star contraction instead of raising, agreeing
     # exactly with a test-side union-find
     rng = np.random.default_rng(7)
     ids = rng.permutation(100_000)[:600].tolist()
@@ -463,10 +459,10 @@ def test_connected_components_synthetic_graphs(spark):
                 for x in parent}
     deep_df = spark.createDataFrame(chain, ["id_a", "id_b"])
     got_deep = {(r.id, r.component_id) for r in
-                dedup.connected_components(deep_df, max_iter=3).collect()}
+                dedup.connected_components(deep_df).collect()}
     assert got_deep == exp_deep
-    # property sweep: random sparse graphs, star path forced
-    # (max_iter=0) vs union-find — catches shape-specific bugs the two
+    # property sweep: random sparse graphs, star contraction vs
+    # union-find — catches shape-specific bugs the two
     # chains can't (multi-component, cycles, hubs, isolated pairs)
     for seed in (11, 12, 13):
         rng2 = np.random.default_rng(seed)
@@ -491,7 +487,7 @@ def test_connected_components_synthetic_graphs(spark):
                 for x in parent2}
         gdf = spark.createDataFrame(g_edges, ["id_a", "id_b"])
         got2 = {(r.id, r.component_id) for r in
-                dedup.connected_components(gdf, max_iter=0).collect()}
+                dedup.connected_components(gdf).collect()}
         assert got2 == exp2, f"seed {seed}"
     # jaccard-edge end-to-end: components of planted near-dup docs
     pdf, planted = _mk_docs()

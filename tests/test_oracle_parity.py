@@ -3,9 +3,11 @@ its oracle_sql() twin in DuckDB (row count + column names + order-
 insensitive values), mirroring CORRECTNESS_r{N}.json semantics.
 """
 
+import glob
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -88,6 +90,27 @@ def test_rows_only_queries_run(spark, name):
     n = df.count()
     assert n >= 0
     assert len(df.columns) > 0
+
+
+def test_registry_drain_leaves_no_checkpoint_or_view(spark):
+    """A streaming registry query drains into a memory table under a
+    temp checkpoint. Both are gone once the query returns, and the
+    returned frame still holds the drained rows: it matches the oracle
+    after the cleanup."""
+    name = "streaming_tumbling_events"
+
+    def leftovers():
+        return (set(glob.glob(os.path.join(tempfile.gettempdir(),
+                                           "ckpt_q_*"))),
+                {t.name for t in spark.catalog.listTables()
+                 if t.isTemporary})
+
+    before = leftovers()
+    qdf = ALL_QUERIES[name](spark, SF)
+    assert leftovers() == before
+    pd.testing.assert_frame_equal(_canon(qdf.toPandas()),
+                                  _canon(_duck(ORACLES[name])),
+                                  check_dtype=False)
 
 
 def test_entry_smoke(spark):

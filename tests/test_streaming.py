@@ -145,10 +145,7 @@ def test_stateful_glcm_sliding_matches_batch(spark, pages_dir):
     table = IcebergLiteTable(_scratch("tbl_panes"))
     stream.run_to_sink(panes, table, _scratch("ckpt_panes"))
 
-    latest = _latest_per_key(table.read(spark),
-                             ["lang", "host", "pane_start"])
-    got_df = state.finalize_sliding_windows(
-        latest.select("lang", "host", "pane_start", "counts", "n_docs"))
+    got_df = state.sliding_windows_from_emissions(table.read(spark))
     exp_df = state.batch_glcm_agg_sliding(
         stream.read_pages_batch(spark, pages_dir))
     cols = ["lang", "host", "window_start"]
@@ -171,13 +168,13 @@ def test_stateful_glcm_sliding_matches_batch(spark, pages_dir):
         g[cols + ["n_docs"]], spark_win[cols + ["n_docs"]])
 
 
-def test_sliding_from_emissions_matches_two_shuffle(spark, pages_dir):
+def test_sliding_from_emissions_matches_batch_html(spark, pages_dir):
     """The one-shuffle finalizer (worker-side latest-per-pane + local
-    candidate expansion via fused-code searchsorted cumsum) must be
-    row-for-row BIT-identical to latest_panes -> finalize_sliding_windows
-    over the same raw update-mode emissions — integer count sums make
-    every summation order exact, so even the float features match to
-    the last bit."""
+    candidate expansion via fused-code searchsorted cumsum) over raw
+    multi-epoch update-mode emissions must be row-for-row BIT-identical
+    to the independent batch route (html duplicated per window, counts
+    from the kernel) — integer count sums make every summation order
+    exact, so even the float features match to the last bit."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     panes = state.stateful_glcm_pane_agg_bucketed(sdf, buckets=16)
     qname = "pane_emis_fused"
@@ -190,10 +187,11 @@ def test_sliding_from_emissions_matches_two_shuffle(spark, pages_dir):
     # multi-epoch emissions actually present (a pane emitted twice)
     assert (emis.groupBy("lang", "host", "pane_start").count()
             .agg(F.max("count")).collect()[0][0] >= 2)
-    old = state.finalize_sliding_windows(state.latest_panes(emis))
+    exp = state.batch_glcm_agg_sliding(
+        stream.read_pages_batch(spark, pages_dir))
     new = state.sliding_windows_from_emissions(emis)
     cols = ["lang", "host", "window_start"]
-    o = old.toPandas().sort_values(cols).reset_index(drop=True)
+    o = exp.toPandas().sort_values(cols).reset_index(drop=True)
     m = new.toPandas().sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(m[o.columns], o)
 
@@ -203,15 +201,16 @@ def test_sliding_from_emissions_null_host_and_gaps(spark):
     finalizer: NULL hosts (malformed URLs), panes with multi-epoch
     duplicate emissions (later n_docs supersedes), and grid GAPS wider
     than the window so candidate ranges must not bleed across them —
-    pinned against the two-shuffle reference path on the same input."""
+    pinned against an expectation built in plain Python: the fullest
+    emission per pane, summed over the r final panes of each window."""
     import numpy as np
     s_us = 300_000_000  # 5 minutes, the config slide
+    r = 2               # 10-minute windows
     base = pd.Timestamp("2026-01-01 00:00:00")
 
-    def blob(seed):
+    def mat(seed):
         rng = np.random.default_rng(seed)
-        m = rng.integers(0, 50, size=1024, dtype=np.int64)
-        return state._pack_counts(m)  # the pane-emission wire codec
+        return rng.integers(0, 50, size=1024, dtype=np.int64)
 
     rows = []
     for lang, host, gslots, docs in [
@@ -224,16 +223,35 @@ def test_sliding_from_emissions_null_host_and_gaps(spark):
             # stale earlier emission for some panes (smaller n_docs,
             # different counts) — must lose to the final one
             if i == 0:
-                rows.append((lang, host, ts, blob(99), nd - 1, 1))
-            rows.append((lang, host, ts, blob(gs), nd, 2))
+                rows.append((lang, host, ts, 99, nd - 1, 1))
+            rows.append((lang, host, ts, gs, nd, 2))
     emis = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["lang", "host", "pane_start",
-                                    "counts", "n_docs", "n_batches"]),
+        pd.DataFrame([(lang, host, ts, state._pack_counts(mat(seed)), nd,
+                       nb) for lang, host, ts, seed, nd, nb in rows],
+                     columns=["lang", "host", "pane_start", "counts",
+                              "n_docs", "n_batches"]),
         schema=state.PANE_OUTPUT_SCHEMA)
-    old = state.finalize_sliding_windows(state.latest_panes(emis))
+    final = {}
+    for lang, host, ts, seed, nd, _ in rows:
+        if (lang, host, ts) not in final or nd > final[lang, host, ts][1]:
+            final[lang, host, ts] = (seed, nd)
+    wins = {}
+    for (lang, host, ts), (seed, nd) in final.items():
+        for i in range(r):
+            ws = ts - pd.Timedelta(microseconds=i * s_us)
+            acc = wins.setdefault((lang, host, ws),
+                                  [np.zeros(1024, np.int64), 0])
+            acc[0] += mat(seed)
+            acc[1] += nd
+    keys = list(wins)
+    exp = pd.DataFrame({
+        "lang": [k[0] for k in keys], "host": [k[1] for k in keys],
+        "window_start": [k[2] for k in keys],
+        "n_docs": [wins[k][1] for k in keys],
+        **state._features(np.stack([wins[k][0] for k in keys]))})
     new = state.sliding_windows_from_emissions(emis)
     cols = ["lang", "host", "window_start"]
-    o = old.toPandas().sort_values(cols).reset_index(drop=True)
+    o = exp.sort_values(cols).reset_index(drop=True)
     m = new.toPandas().sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(m[o.columns], o)
     # r=2 at the 10min/5min config: every pane spawns 2 candidate
@@ -1211,6 +1229,20 @@ def test_salted_streaming_agg_exact(spark, pages_dir):
     pd.testing.assert_frame_equal(got, exp)
 
 
+def _pane_dirs(tdir):
+    """The emitter's pane dirs under a table dir."""
+    return sorted(n for n in os.listdir(tdir) if n.startswith("_pane"))
+
+
+def _dir_bytes(d):
+    out = {}
+    for root, _, names in os.walk(d):
+        for n in names:
+            with open(os.path.join(root, n), "rb") as f:
+                out[os.path.relpath(os.path.join(root, n), d)] = f.read()
+    return out
+
+
 def test_continuous_sliding_replayed_epoch_is_noop(spark):
     """Crash-protocol hardening of the continuous emitter, exercised by
     driving process() directly with synthetic pane batches:
@@ -1222,36 +1254,17 @@ def test_continuous_sliding_replayed_epoch_is_noop(spark):
        proxy, no-op on the duplicate table epoch id, and advance the
        emit bound past windows never committed (silently skipping
        them forever).
-    2. The on-disk meta must never point at a deleted pane-store
-       directory (store GC is deferred until after the meta save), and
-       stale store versions are swept at construction.
+    2. The on-disk meta must never name a deleted pane-log segment
+       (pruned segments are deleted only after the meta save), and a
+       pane dir the meta does not name is swept at construction.
 
     A replayed run must end byte-identical (including emission epochs)
     to an uninterrupted reference run over the same batches."""
     import json
 
-    import numpy as np
+    from pane_batches import pane_batches
 
-    L2 = state.L2
-
-    def counts(seed, n):
-        rng = np.random.default_rng(seed)
-        # pane emissions carry the wire codec, not raw i8
-        return state._pack_counts(rng.integers(1, 50, L2) * n)
-
-    def batch(rows):
-        data = [(lang, host, pd.Timestamp(ts).to_pydatetime(),
-                 counts(seed, n), n, 1)
-                for (lang, host, ts, seed, n) in rows]
-        return spark.createDataFrame(data, state.PANE_OUTPUT_SCHEMA)
-
-    batches = [
-        batch([("en", "h1", "2026-01-01 00:00:00", 1, 3),
-               ("en", "h1", "2026-01-01 00:05:00", 2, 2)]),
-        batch([("en", "h1", "2026-01-01 00:30:00", 3, 4)]),
-        batch([("de", "h2", "2026-01-01 00:45:00", 4, 1)]),
-        batch([("en", "h1", "2026-01-01 01:10:00", 5, 2)]),
-    ]
+    batches = pane_batches(spark)
 
     def run(tag, replay_epoch=None):
         tdir = _scratch(f"tbl_replay_{tag}")
@@ -1260,9 +1273,11 @@ def test_continuous_sliding_replayed_epoch_is_noop(spark):
         meta_path = em._meta_path
         for eid, b in enumerate(batches):
             em.process(b, eid)
-            # invariant 2: the PERSISTED store version always exists
+            # invariant 2: every PERSISTED segment exists
             m = json.load(open(meta_path))
-            assert os.path.isdir(em._store_dir(m["store_v"]))
+            assert m["segments"]
+            for name in m["segments"]:
+                assert os.path.isdir(os.path.join(tdir, name))
             if replay_epoch == eid:
                 before_rows = table.read(spark).count()
                 before_meta = open(meta_path).read()
@@ -1284,12 +1299,94 @@ def test_continuous_sliding_replayed_epoch_is_noop(spark):
     assert len(ref) > 0
     pd.testing.assert_frame_equal(got, ref)  # includes the epoch column
 
-    # stale-version sweep at construction (post-meta-save crash leaves
-    # a superseded store dir behind; the next restart removes it and
-    # keeps the live one)
-    em = state.ContinuousSlidingEmitter(rep_table, watermark="5 minutes")
-    stale = em._store_dir(99)
+    # unnamed-dir sweep at construction (a crash before the meta save
+    # leaves the epoch's segment behind, one after it the pruned ones;
+    # the next restart removes them and keeps the named ones)
+    tdir = rep_table.table_dir
+    stale = os.path.join(tdir, "_paneseg_99")
     os.makedirs(stale, exist_ok=True)
     em2 = state.ContinuousSlidingEmitter(rep_table, watermark="5 minutes")
     assert not os.path.exists(stale)
-    assert os.path.isdir(em2._store_dir(em2._store_v))
+    m = json.load(open(em2._meta_path))
+    assert _pane_dirs(tdir) == sorted(m["segments"])
+
+
+def test_continuous_sliding_appends_one_segment_per_epoch(spark):
+    """The emitter's pane log is append-only: each process() call adds
+    exactly one segment holding only that epoch's pane rows, leaves
+    every existing segment's files byte-identical, and deletes a
+    segment once the emit bound passes its max pane_start + L."""
+    import json
+
+    from pane_batches import EPOCHS, pane_batches
+
+    tdir = _scratch("tbl_panelog")
+    table = IcebergLiteTable(tdir)
+    em = state.ContinuousSlidingEmitter(table, watermark="5 minutes")
+    pruned, before_max = set(), {}
+    for eid, b in enumerate(pane_batches(spark)):
+        before = {n: _dir_bytes(os.path.join(tdir, n))
+                  for n in _pane_dirs(tdir)}
+        em.process(b, eid)
+        m = json.load(open(em._meta_path))
+        after = _pane_dirs(tdir)
+        seg = f"_paneseg_{eid}"
+        assert after == sorted(m["segments"])
+        assert set(after) - set(before) == {seg}
+        # the new segment holds exactly this epoch's pane rows
+        rows = pq.read_table(os.path.join(tdir, seg)).to_pandas()
+        assert len(rows) == len(EPOCHS[eid])
+        assert m["segments"][seg] == int(rows["pane_start"].max())
+        for n in set(before) & set(after):
+            assert _dir_bytes(os.path.join(tdir, n)) == before[n], n
+        # pruned exactly when the bound has passed max pane_start + L
+        bound = m["emit_bound_us"]
+        for n in set(before) - set(after):
+            pruned.add(n)
+            assert before_max[n] + em.l_us <= bound
+        for n in after:
+            assert bound is None or m["segments"][n] + em.l_us > bound
+        before_max = dict(m["segments"])
+    assert pruned == {"_paneseg_0", "_paneseg_1"}
+    em.flush(spark)
+    assert _pane_dirs(tdir) == []
+    assert len(table.read(spark).toPandas()) > 0
+
+
+def test_continuous_sliding_resumes_from_corpus(spark):
+    """Format corpus: tests/corpus/sliding_emitter_v0 is a table dir an
+    earlier emitter layout (a versioned latest-panes store,
+    `_panestore_v<n>`) wrote from epochs 0-1 of the synthetic pane
+    batches, with no flush (scripts/make_emitter_corpus.py). Resumed
+    with epochs 2-3 and a flush, it must end with exactly the rows of
+    an uninterrupted run, each window once."""
+    corpus = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "corpus", "sliding_emitter_v0")
+    from pane_batches import pane_batches
+
+    batches = pane_batches(spark)
+    wm = "0 seconds"  # the corpus' watermark: epoch 1 commits a window
+    tdir = os.path.join(_scratch("tbl_corpus"), "table")
+    shutil.copytree(corpus, tdir)
+    resumed = IcebergLiteTable(tdir)
+    em = state.ContinuousSlidingEmitter(resumed, watermark=wm)
+    assert em.segments == {"_panestore_v1": em.event_lb_us}
+    for eid in (2, 3):
+        em.process(batches[eid], eid)
+    em.flush(spark)
+    assert _pane_dirs(tdir) == []
+
+    ref = IcebergLiteTable(_scratch("tbl_corpus_ref"))
+    em = state.ContinuousSlidingEmitter(ref, watermark=wm)
+    for eid, b in enumerate(batches):
+        em.process(b, eid)
+    em.flush(spark)
+
+    cols = ["lang", "host", "window_start"]
+    got = resumed.read(spark).toPandas()
+    exp = ref.read(spark).toPandas()
+    assert not got.duplicated(cols).any()
+    assert 1 in set(got["epoch"])  # the corpus' own commit survives
+    got = got.sort_values(cols).reset_index(drop=True)[exp.columns]
+    exp = exp.sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)  # includes the epoch column
