@@ -40,10 +40,15 @@ features, in one shuffle. The registry query runs it once over a
 drain's emissions; `ContinuousSlidingEmitter` runs it every epoch over
 its pane log. The log is append-only: one parquet segment per epoch
 (`_paneseg_<epoch>` under the table dir) holding that epoch's pane rows,
-named with its max pane_start in the emitter's meta json. A segment is
-pruned once its max pane_start + L is at or below the emit bound. Crash
-order per epoch: write the segment, commit the windows, save the meta,
-then delete every pane dir the meta does not name.
+named with its max pane_start in the emitter's meta json. Each epoch's
+scan covers every live segment, but only the panes of the windows it
+emits enter the assembly's exchange. A segment is
+pruned whole, once its max pane_start + L is at or below the emit
+bound, so a pane touched in k epochs sits in the log k times, and
+event time that arrives out of order keeps segments live (bound and
+measurements: the emitter's docstring). Crash order per epoch: write
+the segment, commit the windows, save the meta, then delete every pane
+dir the meta does not name.
 
 Cost model (measured at 55k docs / 13.4k (lang,host,window) keys x 2
 epochs, local[32]): the python state function itself is ~1.4s of wall
@@ -784,10 +789,12 @@ class ContinuousSlidingEmitter:
     segment with its max pane_start. A window is assembled by
     sliding_windows_from_emissions over the live segments, which keeps
     the fullest emission of each pane, so the log never needs a
-    latest-per-pane rewrite: an epoch costs one exchange that carries
-    each live pane row once. A `_panestore_v<n>` store written by the
-    earlier versioned-store layout resumes as one more segment, with
-    the meta's event_lb_us as its max.
+    latest-per-pane rewrite: an epoch costs one exchange, and it carries
+    only the rows of panes a window with end in (lo, hi] holds
+    (lo - L < pane_start < hi), one per live segment that touched the
+    pane. A `_panestore_v<n>` store written by the earlier
+    versioned-store layout resumes as one more segment, with the meta's
+    event_lb_us as its max.
 
     Watermark proxy (no access to the engine's internal watermark from
     foreachBatch): a touched pane proves an event with ts >= pane_start
@@ -802,8 +809,19 @@ class ContinuousSlidingEmitter:
 
     Prune rule: a segment whose max pane_start + L is at or below the
     emit bound leaves the log — every window containing one of its
-    panes has emitted — so the log holds O(active keys x L/S) pane
-    rows, corpus-size independent.
+    panes has emitted. Segments leave whole, so the log holds every
+    pane row of each live segment: a segment stays until the event
+    proxy has moved L + watermark delay past its max, and the log is
+    (epochs in that span) x (pane rows per epoch) — a pane touched in k
+    live epochs is held k times, where a latest-panes store held it
+    once. Out-of-order event time stretches the span: a segment whose
+    rows reach the stream's event-time frontier stays until the
+    frontier moves on, or until the flush. Measured with
+    scripts/emitter_traffic.py on sf0.1 pages (one file per trigger):
+    20 time-ordered files keep 6 segments of ~670 rows against a
+    ~630-row store; 20 shuffled files, whose first epoch sets the
+    frontier, keep all 19 segments, 570 rows against 89, until the
+    flush.
 
     Crash order, per epoch: write the segment, commit the windows, save
     the meta (bound, event proxy, live segments, last epoch), then
@@ -868,8 +886,14 @@ class ContinuousSlidingEmitter:
         """Assemble + commit windows with end in (lo_us, hi_us]."""
         if not self.segments:
             return
+        # a window with end in (lo, hi] holds only panes with
+        # lo - L < pane_start < hi: the rest stay out of the exchange
+        keep = F.col("pane_start") < hi_us
+        if lo_us is not None:
+            keep = keep & (F.col("pane_start") > lo_us - self.l_us)
         panes = spark.read.schema(_SEGMENT_DDL).parquet(
-            *[os.path.join(self.table.table_dir, n) for n in self.segments])
+            *[os.path.join(self.table.table_dir, n) for n in self.segments]
+        ).filter(keep)
         wins = sliding_windows_from_emissions(
             panes.withColumn("pane_start", F.timestamp_micros("pane_start")),
             self.length, self.slide)

@@ -1353,6 +1353,54 @@ def test_continuous_sliding_appends_one_segment_per_epoch(spark):
     assert len(table.read(spark).toPandas()) > 0
 
 
+def test_continuous_sliding_emit_reads_only_window_panes(spark,
+                                                         monkeypatch):
+    """Each _emit hands the assembly only the live panes a window with
+    end in (lo, hi] can hold, lo - L < pane_start < hi, and still
+    emits every window of the unfiltered drain-time assembly."""
+    from pane_batches import pane_batches
+
+    seen = []
+    assemble = state.sliding_windows_from_emissions
+
+    def spy(panes, length, slide):
+        seen[-1].append(sorted(r.pane_start for r in panes.collect()))
+        return assemble(panes, length, slide)
+
+    monkeypatch.setattr(state, "sliding_windows_from_emissions", spy)
+    batches = pane_batches(spark)
+    table = IcebergLiteTable(_scratch("tbl_emit_panes"))
+    em = state.ContinuousSlidingEmitter(table, watermark="5 minutes")
+    emit = em._emit
+
+    def bounded_emit(spark_, lo, hi, epoch_id):
+        seen.append([lo, hi])
+        emit(spark_, lo, hi, epoch_id)
+
+    em._emit = bounded_emit
+    for eid, b in enumerate(batches):
+        em.process(b, eid)
+    em.flush(spark)
+    assert len(seen) == 4 and seen[-1][0] is not None
+    for lo, hi, starts in seen:
+        us = [int(pd.Timestamp(s).value // 1000) for s in starts]
+        assert all(u < hi and (lo is None or u > lo - em.l_us)
+                   for u in us), (lo, hi, starts)
+    assert seen[0][2] == [] and seen[1][2] != []
+
+    monkeypatch.undo()
+    emissions = batches[0]
+    for b in batches[1:]:
+        emissions = emissions.unionByName(b)
+    ref = state.sliding_windows_from_emissions(
+        emissions, em.length, em.slide).toPandas()
+    cols = list(ref.columns)
+    got = table.read(spark).toPandas()[cols]
+    pd.testing.assert_frame_equal(
+        got.sort_values(cols[:3]).reset_index(drop=True),
+        ref.sort_values(cols[:3]).reset_index(drop=True))
+
+
 def test_continuous_sliding_resumes_from_corpus(spark):
     """Format corpus: tests/corpus/sliding_emitter_v0 is a table dir an
     earlier emitter layout (a versioned latest-panes store,
