@@ -128,21 +128,6 @@ def main() -> None:
 
     run("stateful_accum_bucketed", stateful_accum)
 
-    # ---- stateful accum per-key (A/B control) --------------------------
-    def stateful_perkey():
-        c = os.path.join(SCRATCH, "extra_ckpt2b")
-        shutil.rmtree(c, ignore_errors=True)
-        sdf = stream.pages_stream(spark, pages_dir,
-                                  max_files_per_trigger=32)
-        st = state.stateful_glcm_agg(sdf)
-        q = (st.writeStream.format("memory").queryName("extra_state_pk")
-             .outputMode("update").option("checkpointLocation", c)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        spark.table("extra_state_pk").count()
-
-    run("stateful_perkey", stateful_perkey)
-
     # ---- sliding: pane drain and finalizer SEPARATELY ------------------
     def pane_drain():
         c = os.path.join(SCRATCH, "extra_ckpt2c")

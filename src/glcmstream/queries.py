@@ -1693,13 +1693,12 @@ def streaming_stateful_glcm_fused(spark, sf_dir):
 
 @register("streaming_stateful_glcm_bucketed")  # rows-only: GLCM not SQL-expressible
 def streaming_stateful_glcm_bucketed(spark, sf_dir):
-    """The protocol-amortized stateful accumulation (state keyed by
-    hash bucket, per-bucket vectorized sums + features) as a
-    driver-checkable query — final rows must be identical to
-    streaming_stateful_glcm's (pinned exactly by
-    test_stateful_glcm_bucketed_matches_batch); this is the engine's
-    fast path for the same semantics (~5.5 s vs ~12.6 s at the bench
-    fixture, see state.py cost anatomy)."""
+    """The stateful accumulation through its `*_bucketed` alias (state
+    keyed by hash bucket, per-bucket vectorized sums + features; the
+    engine's only state layout, ~5.5 s where one state group per key
+    took ~12.6 s at the bench fixture, see state.py cost anatomy) —
+    final rows must be identical to streaming_stateful_glcm's (the
+    batch oracle pins both, test_stateful_glcm_bucketed_matches_batch)."""
     from . import state as state_mod
     ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
@@ -1714,8 +1713,8 @@ def streaming_stateful_glcm_sliding(spark, sf_dir):
     verdict #1): stream -> map-side gvec -> per-PANE
     applyInPandasWithState count accumulation -> pane->window assembly
     (each 4 KiB gvec crosses the state exchange once, not length/slide
-    times). Runs the protocol-amortized bucketed pane path (identical
-    emissions, pinned by test_bucketed_panes_match_per_pane); exactness
+    times). Pane state is hash-bucketed (emissions independent of the
+    bucket count, pinned by test_bucketed_panes_match_per_pane); exactness
     vs the independent html-per-window batch route is pinned by
     test_stateful_glcm_sliding_matches_batch."""
     from . import state as state_mod
@@ -1739,9 +1738,9 @@ def streaming_stateful_glcm_sliding(spark, sf_dir):
 def streaming_stateful_glcm_session(spark, sf_dir):
     """SESSION-window stateful GLCM accumulation keyed by (lang, host)
     (round-3 verdict #1; BASELINE.json:6 names all three window kinds):
-    open session fragments live in hash-bucketed state (the
-    protocol-amortized path, emissions pinned identical to the
-    per-(lang, host) path by test_bucketed_sessions_match_per_key);
+    open session fragments live in hash-bucketed state (emissions
+    independent of the bucket count, pinned by
+    test_bucketed_sessions_match_per_key);
     update-mode emissions + maximal-interval selection recover the
     exact final session set — including sessions still open at the
     drain. Exactness vs the independent gaps-and-islands oracle is
@@ -2367,13 +2366,20 @@ def streaming_sliding_continuous(spark, sf_dir):
     ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir), 2)
     table = IcebergLiteTable(tempfile.mkdtemp(prefix="contslide_"))
-    state_mod.sliding_glcm_stream_continuous(
-        sdf, table, tempfile.mkdtemp(prefix="ckpt_contslide_"))
-    got = table.read(spark)
-    return got.select(
-        "lang", "host",
-        F.unix_micros("window_start").alias("window_start_us"), "n_docs",
-        *[F.round(c, 4).alias(c) for c in config.HARALICK_FEATURES])
+    ckpt = tempfile.mkdtemp(prefix="ckpt_contslide_")
+    try:
+        state_mod.sliding_glcm_stream_continuous(sdf, table, ckpt)
+        # table.read is lazy over the table dir: materialize the rows
+        # before the dir goes
+        return table.read(spark).select(
+            "lang", "host",
+            F.unix_micros("window_start").alias("window_start_us"),
+            "n_docs",
+            *[F.round(c, 4).alias(c) for c in config.HARALICK_FEATURES]
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(table.table_dir, ignore_errors=True)
 
 
 # ===========================================================================

@@ -7,7 +7,9 @@ The shuffle width defaults to the cluster's core count.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 import zipfile
@@ -119,6 +121,9 @@ def ensure_pyfiles(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.join(_SRC_DIR, "glcmstream")
     tmp = tempfile.mkdtemp(prefix="glcmstream_pyfiles_")
+    # Spark copies the zip into its own files dir, but reads this one
+    # while the session lives: remove it when the process exits
+    atexit.register(shutil.rmtree, tmp, True)
     zpath = os.path.join(tmp, "glcmstream.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for fn in sorted(os.listdir(pkg_dir)):

@@ -23,3 +23,26 @@ def test_golden(spark, name):
         entry.queries()[name](spark, goldens.GOLDEN_SF_DIR))
     pd.testing.assert_frame_equal(got, exp)
     assert len(got) > 0
+
+
+def test_sliding_continuous_query_leaves_no_temp_dirs(spark):
+    """The continuous sliding registry query drains into a temp table
+    under a temp checkpoint; both dirs are gone once it returns, and
+    the returned frame still holds the golden rows."""
+    import glob
+    import os
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    name = "streaming_sliding_continuous"
+
+    def leftovers():
+        return {d for p in ("contslide_*", "ckpt_contslide_*")
+                for d in glob.glob(os.path.join(tempfile.gettempdir(), p))}
+
+    before = leftovers()
+    df = entry.queries()[name](spark, goldens.GOLDEN_SF_DIR)
+    assert leftovers() == before
+    pd.testing.assert_frame_equal(goldens.canonical_pdf(df),
+                                  goldens.read_golden(name))

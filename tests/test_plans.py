@@ -152,7 +152,7 @@ def test_stratified_sample_rank_limit_pushed_down(spark):
 
 def test_stateful_state_exchanges_never_carry_html(spark):
     """Scale claim of every stateful-GLCM path (tumbling, pane and
-    session, per-key and bucketed): the html decodes map-side and only the fixed-size gvec
+    session): the html decodes map-side and only the fixed-size gvec
     crosses the state exchange — a plan whose Exchange carries html
     serializes the whole corpus per window at 10^12 docs. Streaming
     plans only materialize once started, so each path runs availableNow
@@ -172,11 +172,8 @@ def test_stateful_state_exchanges_never_carry_html(spark):
         fixtures.write_pages_parquet(d, n_docs=400, n_files=8)
 
     paths = {
-        "per_key": state.stateful_glcm_agg,
         "bucketed": state.stateful_glcm_agg_bucketed,
-        "pane": state.stateful_glcm_pane_agg,
         "pane_bucketed": state.stateful_glcm_pane_agg_bucketed,
-        "session": state.stateful_glcm_session_agg,
         "session_bucketed": state.stateful_glcm_session_agg_bucketed,
     }
     for name, fn in paths.items():

@@ -1,6 +1,8 @@
-"""session.trim_zip_finders: no Spark needed."""
+"""session.trim_zip_finders and ensure_pyfiles: no Spark needed."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -51,3 +53,29 @@ def test_trim_zip_finders_survives_invalidate_caches(tmp_path, monkeypatch):
             if path.startswith(archive):
                 del sys.path_importer_cache[path]
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_ensure_pyfiles_dir_removed_at_exit(tmp_path):
+    """The zip ensure_pyfiles hands to addPyFile lives in a temp dir
+    that is there while the process runs and gone after it exits."""
+    script = (
+        "import os, sys\n"
+        "from glcmstream import session\n"
+        "class SC:\n"
+        "    def addPyFile(self, path):\n"
+        "        self.path = path\n"
+        "class Spark:\n"
+        "    sparkContext = SC()\n"
+        "spark = Spark()\n"
+        "session.ensure_pyfiles(spark)\n"
+        "assert os.path.isfile(spark.sparkContext.path)\n"
+        "print(os.path.dirname(spark.sparkContext.path))\n")
+    src = os.path.dirname(os.path.dirname(session.__file__))
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        check=True, env={**os.environ, "PYTHONPATH": src,
+                         "TMPDIR": str(tmp_path)})
+    made = out.stdout.strip()
+    assert os.path.basename(made).startswith("glcmstream_pyfiles_")
+    assert os.path.dirname(made) == str(tmp_path)
+    assert not os.path.exists(made)

@@ -136,3 +136,116 @@ def test_batch_key_groups_matches_dict_loop(rows, with_window):
         assert docs[j] == len(ref[key])
         seen[key] = True
     assert len(seen) == len(ref)
+
+
+# ---------------------------------------------------------------------------
+# _bucket_window_fn without Spark: the same bucket rows, in any arrival
+# order and any split into Arrow chunks, must give the same emissions
+# and the same state. n_batches counts invocations (epochs), not the
+# chunks Spark cut a bucket's rows into (at most maxRecordsPerBatch
+# rows each, in arrival order).
+# ---------------------------------------------------------------------------
+
+class _FakeState:
+    """The GroupState surface the state functions use."""
+
+    def __init__(self, watermark_ms: int = 0):
+        self.value = None
+        self.watermark_ms = watermark_ms
+        self.timeout_ms = None
+        self.hasTimedOut = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
+_WIN_US = 300_000_000
+
+
+def _bucket_rows(rows, perm):
+    import pandas as pd
+
+    rows = [rows[i] for i in perm]
+    vecs = np.zeros((len(rows), state.L2), "<u4")
+    for i, r in enumerate(rows):
+        vecs[i, r[3] % state.L2] = 1 + r[3] // state.L2
+    return pd.DataFrame({
+        "lang": [_LANGS[r[0]] for r in rows],
+        "host": [_HOSTS[r[1]] for r in rows],
+        "ws_us": np.array([r[2] * _WIN_US for r in rows], np.int64),
+        "gvec": [v.tobytes() for v in vecs],
+    })
+
+
+def _drive(epochs, rng):
+    """Run one fake-state bucket through the epochs, each epoch's rows
+    in a random order cut into random chunks; returns every epoch's
+    emission, sorted by key, and the final state's fine keys."""
+    fn = state._bucket_window_fn(_WIN_US, counts=False)
+    st = _FakeState()
+    out = []
+    for rows in epochs:
+        pdf = _bucket_rows(rows, rng.permutation(len(rows)))
+        cuts = sorted(rng.choice(len(rows) + 1,
+                                 size=int(rng.integers(0, 4)),
+                                 replace=True))
+        chunks = [pdf.iloc[a:b] for a, b in
+                  zip([0, *cuts], [*cuts, len(rows)])]
+        emitted = list(fn((0,), iter(chunks), st))
+        key = ["lang", "host", "window_start"]
+        out.append(emitted[0].sort_values(key, na_position="first")
+                   .reset_index(drop=True) if emitted else None)
+    keys, meta, mats = state._unpack_bucket(st.get[0])
+    final = sorted((k + (int(m[0]), int(m[1]), int(m[2]), g.tobytes())
+                    for k, m, g in zip(keys, meta, mats)),
+                   key=repr)
+    return out, final
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    epochs=st.lists(
+        st.lists(st.tuples(st.integers(0, len(_LANGS) - 1),
+                           st.integers(0, len(_HOSTS) - 1),
+                           st.integers(0, 2),
+                           st.integers(0, 4 * 1024 - 1)),
+                 min_size=1, max_size=30),
+        min_size=1, max_size=3),
+    seeds=st.tuples(st.integers(0, 2**31 - 1), st.integers(0, 2**31 - 1)),
+)
+def test_bucket_window_fn_ignores_row_order_and_chunking(epochs, seeds):
+    import pandas as pd
+
+    out_a, state_a = _drive(epochs, np.random.default_rng(seeds[0]))
+    out_b, state_b = _drive(epochs, np.random.default_rng(seeds[1]))
+    for a, b in zip(out_a, out_b):
+        pd.testing.assert_frame_equal(a, b)
+    assert state_a == state_b
+    # every touched key counts one batch per epoch that touched it
+    touched: dict = {}
+    for rows in epochs:
+        for k in {(_LANGS[r[0]], _HOSTS[r[1]], r[2] * _WIN_US)
+                  for r in rows}:
+            touched[k] = touched.get(k, 0) + 1
+    last = out_a[-1]
+    for lang, host, ws, n_batches in zip(
+            last["lang"], last["host"], last["window_start"],
+            last["n_batches"]):
+        assert n_batches == touched[(lang, host, ws.value // 1000)]

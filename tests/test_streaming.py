@@ -374,9 +374,10 @@ def test_continuous_sliding_emitter_resumes(spark, pages_dir):
 
 
 def test_bucketed_panes_match_per_pane(spark, pages_dir):
-    """The protocol-amortized pane path must emit pane count vectors
-    whose latest-per-pane resolution is byte-identical to the per-pane
-    path's (pure execution-strategy fork, like tumbling's bucketing)."""
+    """Bucket-count invariance of the pane state: 16 buckets must emit
+    pane count vectors whose latest-per-pane resolution is
+    byte-identical to the default 128 buckets' (the bucket count is an
+    execution strategy, not a semantic)."""
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
@@ -424,9 +425,10 @@ def test_stateful_glcm_session_matches_batch(spark, pages_dir):
 
 
 def test_bucketed_sessions_match_per_key(spark, pages_dir):
-    """The protocol-amortized session path's final_sessions resolution
-    must be row-for-row identical to the per-(lang, host) path's (pure
-    execution-strategy fork)."""
+    """Bucket-count invariance of the session state: the final_sessions
+    resolution at 16 buckets must be row-for-row identical to the
+    default 128 buckets' (the bucket count is an execution strategy,
+    not a semantic)."""
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
@@ -483,10 +485,11 @@ def test_bucket_blob_roundtrips_oversize_keys():
 
 
 def test_bucketed_null_host_matches_per_key(spark):
-    """A malformed URL (NULL host) through the bucketed tumbling path
-    must neither crash nor diverge from the per-key path (round-4
-    advice #2: lang.encode()/host.encode() raised AttributeError on
-    None inside every bucketed state fn). Two failure modes are pinned:
+    """A malformed URL (NULL host) through the tumbling state must
+    neither crash nor diverge between 4 buckets and the default 128
+    (round-4 advice #2: lang.encode()/host.encode() raised
+    AttributeError on None inside every bucketed state fn). Two failure
+    modes are pinned:
     plain F.parse_url THROWS under Spark 4 ANSI (the engine must use
     try_parse_url so one bad URL can't kill a 100 TB stream), and the
     resulting NULL host must survive the packed-blob state format. The
@@ -1042,8 +1045,8 @@ def test_cep_state_evicted_after_watermark(spark):
 
 def test_glcm_state_evicted_after_watermark(spark):
     """GLCM window state leaves the store once the watermark passes the
-    window end + state.RETAIN_US, on the per-key and both bucketed
-    window paths (tumbling and pane). File 1 holds two hosts at t0;
+    window end + state.RETAIN_US, on both window paths (tumbling and
+    pane). File 1 holds two hosts at t0;
     file 2 holds one host at t0+3h, which moves the watermark to
     t0+2h30 and fires the t0 keys' event-time timeouts in the drain's
     final no-data batch. Only the t0+3h key may remain in state (read
@@ -1103,14 +1106,6 @@ def test_glcm_state_evicted_after_watermark(spark):
     exp = (state.batch_glcm_agg(batch).drop("n_batches").toPandas()
            .sort_values(cols).reset_index(drop=True))
     late_key = ("en", "c.example.com")
-
-    emis, op, left = run(state.stateful_glcm_agg, "evict_pk")
-    assert [(r.key.lang, r.key.host, r.key.window_start) for r in left] \
-        == [late_key + (late.to_pydatetime(),)]
-    assert op["numRowsTotal"] == 1 and op["numRowsRemoved"] == 2
-    got = (_latest_per_key(emis, cols).drop("n_batches").toPandas()
-           .sort_values(cols).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, exp)
 
     emis, op, left = run(
         lambda s: state.stateful_glcm_agg_bucketed(s, buckets=4),
@@ -1389,6 +1384,60 @@ def test_continuous_sliding_emit_reads_only_window_panes(spark,
     assert seen[0][2] == [] and seen[1][2] != []
 
     monkeypatch.undo()
+    emissions = batches[0]
+    for b in batches[1:]:
+        emissions = emissions.unionByName(b)
+    ref = state.sliding_windows_from_emissions(
+        emissions, em.length, em.slide).toPandas()
+    cols = list(ref.columns)
+    got = table.read(spark).toPandas()[cols]
+    pd.testing.assert_frame_equal(
+        got.sort_values(cols[:3]).reset_index(drop=True),
+        ref.sort_values(cols[:3]).reset_index(drop=True))
+
+
+def test_continuous_sliding_emit_runs_one_job(spark):
+    """Each _emit runs one Spark action, the table commit's write (its
+    shuffle stage included): no count() or cache pass over the window
+    selection runs outside the commit. An epoch that closes no window
+    commits a manifest without files, and the table still holds exactly
+    the windows of the drain-time assembly."""
+    from pane_batches import pane_batches
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    batches = pane_batches(spark)
+    table = IcebergLiteTable(_scratch("tbl_emit_jobs"))
+    em = state.ContinuousSlidingEmitter(table, watermark="5 minutes")
+    emit, commit, jobs = em._emit, table.commit, []
+
+    def in_group(group, fn, *args):
+        sc.setJobGroup(group, group)
+        try:
+            return fn(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def counted_emit(spark_, lo, hi, epoch_id):
+        in_group(f"emit_{epoch_id}", emit, spark_, lo, hi, epoch_id)
+        bus.waitUntilEmpty()
+        jobs.append(tuple(len(sc.statusTracker().getJobIdsForGroup(
+            f"{g}_{epoch_id}")) for g in ("emit", "commit")))
+
+    def grouped_commit(df, epoch_id):
+        return in_group(f"commit_{epoch_id}", commit, df, epoch_id)
+
+    em._emit = counted_emit
+    table.commit = grouped_commit
+    for eid, b in enumerate(batches):
+        em.process(b, eid)
+    em.flush(spark)
+    # (jobs outside the commit, jobs inside it) per _emit
+    assert len(jobs) == 4 and all(
+        out == 0 and inside >= 1 for out, inside in jobs), jobs
+    assert any(m["row_count"] == 0 and m["files"] == []
+               for m in table.manifests())
+
     emissions = batches[0]
     for b in batches[1:]:
         emissions = emissions.unionByName(b)
