@@ -173,7 +173,9 @@ def _job(spark, mode: str, pages_dir: str,
         hands = int(os.environ.get("GLCM_FUSED_TASKS", "128"))
         mdir = os.path.join(REPO, ".scratch",
                             os.path.basename(pages_dir) + f"_hands{hands}")
-        feats = fused.fused_features_drain(spark, pages_dir, mdir, hands)
+        feats = fused.fused_features_stream(
+            spark, pages_dir, mdir, max_files_per_trigger=None,
+            parallelism=hands)
         return stream.windowed_agg_over_features(
             feats, window=os.environ.get("GLCM_SCALE_WINDOW", "10 minutes"))
     sdf = stream.pages_stream(

@@ -152,11 +152,17 @@ def main() -> None:
           .trigger(availableNow=True).start())
     wq.awaitTermination()
 
+    # the headline drain scans hand manifests (one per task); the
+    # per-file layout above stays for the warm subset
+    hmdir = os.path.join(SCRATCH, f"bench_hands_{N_DOCS}")
+    fused.write_hand_manifests(
+        pages_dir, hmdir, min(4 * CPUS, len(fused.plan_splits(pages_dir))))
+
     def headline_leg(tag: str) -> tuple[float, int]:
         c = os.path.join(SCRATCH, f"bench_ckpt_fused_{tag}")
         shutil.rmtree(c, ignore_errors=True)
         t0 = time.perf_counter()
-        feats = fused.fused_features_stream(spark, pages_dir, mdir,
+        feats = fused.fused_features_stream(spark, pages_dir, hmdir,
                                             max_files_per_trigger=None,
                                             parallelism=4 * CPUS)
         agg = stream.windowed_agg_over_features(feats)
@@ -339,8 +345,9 @@ def main() -> None:
         _fx.write_pages_parquet(bigdir, n_docs=big_docs, n_files=16,
                                 min_tokens=12000, max_tokens=20000,
                                 row_group_rows=128)
-    bmdir = os.path.join(SCRATCH, f"bench_manifests_big_{big_docs}")
-    fused.write_split_manifests(bigdir, bmdir)
+    bmdir = os.path.join(SCRATCH, f"bench_hands_big_{big_docs}")
+    fused.write_hand_manifests(
+        bigdir, bmdir, min(4 * CPUS, len(fused.plan_splits(bigdir))))
     # Untimed page-cache warm pass: fused runs first and would otherwise
     # read the ~800 MB fixture cold while classic reads it warm — the A/B
     # must compare compute paths, not disk state. (~800 MB « RAM.)

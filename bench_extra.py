@@ -96,11 +96,17 @@ def main() -> None:
           .trigger(availableNow=True).start())
     wq.awaitTermination()
 
+    # the headline drain scans hand manifests (one per task); the
+    # per-file layout above stays for the warm subset
+    hmdir = os.path.join(SCRATCH, f"bench_hands_{bench.N_DOCS}")
+    fused.write_hand_manifests(
+        pages_dir, hmdir, min(4 * CPUS, len(fused.plan_splits(pages_dir))))
+
     # ---- headline fused leg (single attempt, probe-bracketed) ----------
     def headline():
         c = os.path.join(SCRATCH, "extra_ckpt_fused")
         shutil.rmtree(c, ignore_errors=True)
-        feats = fused.fused_features_stream(spark, pages_dir, mdir,
+        feats = fused.fused_features_stream(spark, pages_dir, hmdir,
                                             max_files_per_trigger=None,
                                             parallelism=4 * CPUS)
         agg = stream.windowed_agg_over_features(feats)
@@ -214,8 +220,9 @@ def main() -> None:
         _fx.write_pages_parquet(bigdir, n_docs=big_docs, n_files=16,
                                 min_tokens=12000, max_tokens=20000,
                                 row_group_rows=128)
-    bmdir = os.path.join(SCRATCH, f"bench_manifests_big_{big_docs}")
-    fused.write_split_manifests(bigdir, bmdir)
+    bmdir = os.path.join(SCRATCH, f"bench_hands_big_{big_docs}")
+    fused.write_hand_manifests(
+        bigdir, bmdir, min(4 * CPUS, len(fused.plan_splits(bigdir))))
 
     def _warm_pagecache():
         for _f in sorted(os.listdir(bigdir)):

@@ -26,6 +26,17 @@ On a real cluster the same plan shape holds: executors' python workers
 read from the object store / local NVMe directly (pyarrow speaks s3/hdfs),
 and the JVM never touches page bytes. Equality with the classic path is
 exact — same kernel, same inputs — proven by tests/test_fused.py.
+
+Fan-out: every task pays a fixed python-runner cost, so a scan that
+reads all its splits at once — the batch scan, or a stream drained with
+no max_files_per_trigger — deals them into one LPT-balanced hand per
+core (`_hands`) and runs one task per hand; a drain's hands are its
+manifest files, so its scan needs no exchange. Only a bounded-trigger
+stream repartitions each micro-batch's splits (`_stream_fanout`).
+Measured on a 4-core host, fused_features_batch over 60 small-page
+files (3720 docs, 60 splits), warm: 4.8-5.2 s as 60 tasks, each with a
+second python runner for the split rows, and 0.35-0.38 s as 4 tasks
+over spark.range hand ids (first call in a session: 7.8 s and 0.5 s).
 """
 
 from __future__ import annotations
@@ -76,10 +87,7 @@ def plan_splits(pages_dir: str) -> list[tuple[str, int, int]]:
 def _splits_by_cost(pages_dir: str) -> list[tuple[str, int, int]]:
     """Splits sorted by row-group byte size DESCENDING (deterministic
     path/rg tiebreak). Row counts are near-uniform but GLCM cost is
-    content-proportional, so bytes are the cost proxy. A descending list
-    dealt round-robin across n tasks is LPT-style static balancing: every
-    task gets one split from each cost stratum, shrinking the last-wave
-    straggler tail that otherwise idles ~10% of a 32-core run."""
+    content-proportional, so bytes are the cost proxy."""
     rows = []
     for fn in sorted(os.listdir(pages_dir)):
         if not fn.endswith(".parquet"):
@@ -93,31 +101,26 @@ def _splits_by_cost(pages_dir: str) -> list[tuple[str, int, int]]:
     return [(p, rg, n) for _, p, rg, n in rows]
 
 
-def _deal(splits: list, n: int) -> list:
-    """Arrange a cost-desc split list so `parallelize(out, n)`'s contiguous
-    slices hold round-robin-dealt (balanced) hands."""
-    hands: list[list] = [[] for _ in range(n)]
-    for i, s in enumerate(splits):
-        hands[i % n].append(s)
-    return [s for h in hands for s in h]
+def _hands(spark: SparkSession, n_splits: int,
+           parallelism: int | None) -> int:
+    """The fan-out rule of every one-pass scan (batch, or a stream whose
+    trigger takes all manifests at once): min(parallelism or
+    defaultParallelism, splits) hands, hand j = splits[j::n] of the
+    cost-desc list. Dealing a descending list round-robin is LPT-style
+    static balancing: every hand gets one split from each cost stratum
+    and hand sizes differ by at most one split. One hand is one task, so
+    a scan pays the python-runner cost once per core, not once per
+    split."""
+    return max(1, min(parallelism or spark.sparkContext.defaultParallelism,
+                      n_splits))
 
 
-def write_split_manifests(pages_dir: str, manifest_dir: str,
-                          files_per_manifest: int = 1) -> str:
-    """Materialize splits as tiny manifest parquet files covering
-    `files_per_manifest` data files each, so
-    `readStream(maxFilesPerTrigger=k)` replays k manifests per micro-batch
-    — the same epoch cadence as streaming the data files themselves. A
-    backlog drain (trigger availableNow, one epoch) passes a large
-    files_per_manifest so the manifest scan is a single file open instead
-    of a listing barrier before the fused stage."""
-    splits = _splits_by_cost(pages_dir)  # cost-desc (see _deal rationale)
-    by_file: dict[str, list[tuple[str, int, int]]] = {}
-    for s in splits:
-        by_file.setdefault(s[0], []).append(s)
-    paths = sorted(by_file)
-    groups = [paths[i:i + files_per_manifest]
-              for i in range(0, len(paths), files_per_manifest)]
+def _write_manifests(manifest_dir: str, groups: list[list]) -> str:
+    """Write manifest-<i>.parquet holding groups[i]'s split rows (kept
+    in the given order). A dir already holding the last manifest is left
+    as it is: a resumed stream must see the files its WAL tracked. So a
+    drain (hand manifests) and a bounded stream (one per data file) each
+    need their own dir: either keeps a layout the other wrote there."""
     marker = os.path.join(manifest_dir,
                           f"manifest-{len(groups)-1:04d}.parquet")
     if os.path.exists(marker):
@@ -126,12 +129,7 @@ def write_split_manifests(pages_dir: str, manifest_dir: str,
     schema = pa.schema([pa.field("path", pa.string()),
                         pa.field("row_group", pa.int32()),
                         pa.field("n_rows", pa.int64())])
-    for i, grp in enumerate(groups):
-        in_grp = set(grp)
-        # keep global cost-desc order within the manifest: the streaming
-        # repartition deals rows round-robin, so descending cost order
-        # yields balanced task hands (LPT) exactly like the batch path
-        rows = [s for s in splits if s[0] in in_grp]
+    for i, rows in enumerate(groups):
         tbl = pa.table({"path": [r[0] for r in rows],
                         "row_group": [r[1] for r in rows],
                         "n_rows": [r[2] for r in rows]}, schema=schema)
@@ -140,6 +138,32 @@ def write_split_manifests(pages_dir: str, manifest_dir: str,
         os.replace(tmp, os.path.join(manifest_dir,
                                      f"manifest-{i:04d}.parquet"))
     return manifest_dir
+
+
+def write_split_manifests(pages_dir: str, manifest_dir: str) -> str:
+    """One manifest per data file (its splits in cost-desc order), so
+    `readStream(maxFilesPerTrigger=k)` replays k manifests per
+    micro-batch — the same epoch cadence as streaming the data files
+    themselves."""
+    by_file: dict[str, list[tuple[str, int, int]]] = {}
+    for s in _splits_by_cost(pages_dir):
+        by_file.setdefault(s[0], []).append(s)
+    return _write_manifests(manifest_dir,
+                            [by_file[p] for p in sorted(by_file)])
+
+
+def write_hand_manifests(pages_dir: str, manifest_dir: str,
+                         hands: int) -> str:
+    """Backlog-drain manifest layout: `hands` manifest files, file j
+    holding the LPT-dealt hand j of the cost-desc split list. Each
+    manifest is a few KiB, far below spark.sql.files.openCostInBytes
+    (4 MiB), so with hands <= the scan's minimum partition count (the
+    core count) Spark plans exactly one scan task per manifest file and
+    the fused stage needs NO repartition exchange: the scan IS the
+    balanced fan-out."""
+    splits = _splits_by_cost(pages_dir)
+    return _write_manifests(manifest_dir,
+                            [splits[j::hands] for j in range(hands)])
 
 
 def binary_views(arr: pa.Array) -> list[np.ndarray]:
@@ -231,115 +255,107 @@ def _gvec_split_batches(it: Iterator[pa.RecordBatch]
             names=["url", "warc_ts_us", "lang", "gvec"])
 
 
-def _features_df(splits_df: DataFrame) -> DataFrame:
-    out = splits_df.mapInArrow(_featurize_split_batches, FUSED_OUT_DDL)
+def _features_df(splits_df: DataFrame,
+                 body=_featurize_split_batches) -> DataFrame:
+    out = splits_df.mapInArrow(body, FUSED_OUT_DDL)
     return out.select(
         "url", F.timestamp_micros("warc_ts_us").alias("warc_ts"), "lang",
         *_FEATS)
 
 
+def _hand_splits(hands: list[list], it: Iterator[pa.RecordBatch]
+                 ) -> Iterator[pa.RecordBatch]:
+    """Hand ids in (the `id` rows of spark.range), split rows out."""
+    for mb in it:
+        for j in mb.column("id").to_pylist():
+            yield pa.RecordBatch.from_pydict(
+                {"path": [s[0] for s in hands[j]],
+                 "row_group": [s[1] for s in hands[j]]})
+
+
 def fused_features_batch(spark: SparkSession, pages_dir: str,
                          parallelism: int | None = None) -> DataFrame:
-    """Batch fused scan: split metadata seeded one-split-per-task (exact,
-    no shuffle — `repartition(n)` deals round-robin from a random offset
-    per input partition, which Poisson-collides small split counts into
-    2-3x task skew), then worker-side read+featurize. The scheduler's
-    dynamic task assignment load-balances uneven split costs."""
+    """Batch fused scan: the splits dealt into `_hands` hands, one hand
+    per task — spark.range gives task j the hand id j (exact, no
+    shuffle, no python RDD: `repartition(n)` deals round-robin from a
+    random offset per input partition, which Poisson-collides small
+    split counts into 2-3x task skew, and a createDataFrame over a
+    python RDD costs a second python runner per task, ~1.7 s on its
+    first use in a session) — then worker-side read+featurize."""
     splits = _splits_by_cost(pages_dir)
-    n = min(parallelism or len(splits), max(len(splits), 1))
-    rdd = spark.sparkContext.parallelize(_deal(splits, n), n)
-    df = spark.createDataFrame(rdd, SPLIT_SCHEMA)
-    return _features_df(df)
+    n = _hands(spark, len(splits), parallelism)
+    hands = [splits[j::n] for j in range(n)]
+    return _features_df(
+        spark.range(0, n, 1, n),
+        lambda it: _featurize_split_batches(_hand_splits(hands, it)))
 
 
 def _stream_fanout(spark: SparkSession, pages_dir: str,
                    parallelism: int | None) -> int:
-    """Streaming split fan-out: the caller's parallelism, else 4 tasks
-    per core. Capped at the TABLE'S SPLIT COUNT, like
-    fused_features_batch always has: a repartition(n) with n > splits
-    produces empty partitions whose tasks still pay the ~180 ms python-
-    runner fixed cost each (measured on the 80-split bigpage fixture:
+    """Split fan-out of a bounded-trigger stream, whose micro-batches
+    each take a few per-file manifests: the caller's parallelism, else 4
+    tasks per core, dealt by a `repartition` of every micro-batch's
+    split rows. Capped at the TABLE'S SPLIT COUNT: a repartition(n) with
+    n > splits produces empty partitions whose tasks still pay the
+    python-runner cost each (measured on the 80-split bigpage fixture:
     parallelism 128 -> 80 saves ~1 s of pure empty-task overhead per
-    epoch). At production split counts (>= thousands) the cap is a
-    no-op and the caller's parallelism stays in charge."""
+    epoch)."""
     n = parallelism or 4 * spark.sparkContext.defaultParallelism
     n_splits = len(plan_splits(pages_dir))
     return max(1, min(n, n_splits) if n_splits else n)
 
 
+def _split_stream(spark: SparkSession, pages_dir: str, manifest_dir: str,
+                  max_files_per_trigger: int | None,
+                  parallelism: int | None) -> DataFrame:
+    """The split rows both fused streams scan, fanned out over tasks.
+
+    A bounded trigger streams one manifest per data file and deals each
+    micro-batch's splits over `_stream_fanout` tasks. Without
+    max_files_per_trigger every manifest lands in one epoch (a backlog
+    drain), so the manifests are the `_hands` hands instead and the scan
+    plans one task per hand with no exchange."""
+    r = spark.readStream.schema(SPLIT_SCHEMA)
+    if max_files_per_trigger:
+        write_split_manifests(pages_dir, manifest_dir)
+        sdf = r.option("maxFilesPerTrigger", str(max_files_per_trigger)) \
+            .parquet(manifest_dir)
+        return sdf.repartition(_stream_fanout(spark, pages_dir, parallelism))
+    write_hand_manifests(pages_dir, manifest_dir, _hands(
+        spark, len(plan_splits(pages_dir)), parallelism))
+    return r.parquet(manifest_dir)
+
+
 def fused_features_stream(spark: SparkSession, pages_dir: str,
                           manifest_dir: str,
                           max_files_per_trigger: int | None = 1,
-                          parallelism: int | None = None,
-                          files_per_manifest: int = 1) -> DataFrame:
+                          parallelism: int | None = None) -> DataFrame:
     """Streaming fused scan over the split-manifest log (Iceberg-style).
 
-    The WAL tracks manifest files; each micro-batch fans its split rows
-    across `parallelism` tasks (metadata-only exchange), each of which
-    reads and featurizes its row groups worker-side.
+    The WAL tracks manifest files; each micro-batch's split rows are
+    spread over tasks by `_split_stream` (a metadata-only exchange for a
+    bounded trigger, none for a drain), each of which reads and
+    featurizes its row groups worker-side. Every task pays a fixed
+    python-runner cost (~0.1-0.2 s on a 4-core host), so a drain runs
+    one task per core: on the 1536-page backlog (12 splits) the fused
+    stage took ~1.2 s over 12 tasks and ~0.7 s over 4 tasks of 3 splits.
     """
-    write_split_manifests(pages_dir, manifest_dir, files_per_manifest)
-    r = spark.readStream.schema(SPLIT_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    sdf = r.parquet(manifest_dir)
-    sdf = sdf.repartition(_stream_fanout(spark, pages_dir, parallelism))
-    return _features_df(sdf)
+    return _features_df(_split_stream(spark, pages_dir, manifest_dir,
+                                      max_files_per_trigger, parallelism))
 
 
 def fused_gvec_stream(spark: SparkSession, pages_dir: str,
                       manifest_dir: str,
                       max_files_per_trigger: int | None = 1,
-                      parallelism: int | None = None,
-                      files_per_manifest: int = 1) -> DataFrame:
+                      parallelism: int | None = None) -> DataFrame:
     """Streaming fused scan emitting per-doc gvec rows for the stateful
     path (state.stateful_glcm_agg_fused): same manifest-log WAL and
     split fan-out as fused_features_stream, but the worker emits the
     packed count vector instead of reduced features so the state stage
     can keep accumulating across micro-batches."""
-    write_split_manifests(pages_dir, manifest_dir, files_per_manifest)
-    r = spark.readStream.schema(SPLIT_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    sdf = r.parquet(manifest_dir)
-    sdf = sdf.repartition(_stream_fanout(spark, pages_dir, parallelism))
+    sdf = _split_stream(spark, pages_dir, manifest_dir,
+                        max_files_per_trigger, parallelism)
     out = sdf.mapInArrow(_gvec_split_batches, GVEC_OUT_DDL)
     return out.select(
         "url", F.timestamp_micros("warc_ts_us").alias("warc_ts"), "lang",
         "gvec")
-
-
-def write_hand_manifests(pages_dir: str, manifest_dir: str,
-                         hands: int) -> str:
-    """Backlog-drain manifest layout: `hands` manifest files, file j
-    holding the LPT-dealt hand j of the cost-desc split list. With
-    spark.sql.files.openCostInBytes >= maxPartitionBytes the scan gives
-    exactly one task per manifest file, so the fused stage needs NO
-    repartition exchange at all — scan IS the balanced fan-out (one
-    fewer stage barrier in the epoch's critical path)."""
-    splits = _splits_by_cost(pages_dir)
-    marker = os.path.join(manifest_dir, f"manifest-{hands-1:04d}.parquet")
-    if os.path.exists(marker):
-        return manifest_dir
-    os.makedirs(manifest_dir, exist_ok=True)
-    schema = pa.schema([pa.field("path", pa.string()),
-                        pa.field("row_group", pa.int32()),
-                        pa.field("n_rows", pa.int64())])
-    for j in range(hands):
-        rows = splits[j::hands]
-        tbl = pa.table({"path": [r[0] for r in rows],
-                        "row_group": [r[1] for r in rows],
-                        "n_rows": [r[2] for r in rows]}, schema=schema)
-        tmp = os.path.join(manifest_dir, f".tmp-manifest-{j:04d}.parquet")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(manifest_dir,
-                                     f"manifest-{j:04d}.parquet"))
-    return manifest_dir
-
-
-def fused_features_drain(spark: SparkSession, pages_dir: str,
-                         manifest_dir: str, hands: int) -> DataFrame:
-    """One-epoch backlog drain over hand manifests (no exchange)."""
-    write_hand_manifests(pages_dir, manifest_dir, hands)
-    sdf = spark.readStream.schema(SPLIT_SCHEMA).parquet(manifest_dir)
-    return _features_df(sdf)

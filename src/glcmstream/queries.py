@@ -1817,6 +1817,7 @@ def streaming_cdc_upsert(spark, sf_dir):
     sdf = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", "1").parquet(cdc_dir))
     table = IcebergLiteTable(tempfile.mkdtemp(prefix="cdc_tbl_"))
+    ckpt = tempfile.mkdtemp(prefix="ckpt_cdc_")
 
     def fb(batch_df, epoch_id):
         w = Window.partitionBy("url").orderBy(F.desc("warc_ts"),
@@ -1825,11 +1826,16 @@ def streaming_cdc_upsert(spark, sf_dir):
                   .filter(F.col("_rn") == 1).drop("_rn"))
         table.merge_commit(latest, int(epoch_id), key_col="url")
 
-    with _drain_width(spark, cdc_dir):
-        stream.drain(sdf, "append", tempfile.mkdtemp(prefix="ckpt_cdc_"),
-                     fb)
-    return (table.read_latest(spark, "url")
-            .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    try:
+        with _drain_width(spark, cdc_dir):
+            stream.drain(sdf, "append", ckpt, fb)
+        # read_latest is lazy over the table dir: materialize the rows
+        # before the dir goes
+        latest = table.read_latest(spark, "url").localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(table.table_dir, ignore_errors=True)
+    return (latest.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
             .groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n_urls"),
                  F.sum(F.unix_micros("warc_ts")).cast("bigint")

@@ -5,8 +5,8 @@ replayed epoch, and later epochs still shadow earlier ones (the
 north-rule exactly-once + resume contract on the MERGE path).
 """
 
+import glob
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import Window as W
@@ -51,19 +51,18 @@ def _latest_rows(spark, table):
         for r in table.read_latest(spark, "url").collect())
 
 
-def test_cdc_upsert_resume_equals_uninterrupted(spark):
+def test_cdc_upsert_resume_equals_uninterrupted(spark, tmp_path):
     cdc_dir = qmod._derived_pages_cdc_dir(spark, SF)
 
-    ref_tbl = IcebergLiteTable(tempfile.mkdtemp(prefix="cdc_ref_"))
-    _run_cdc(spark, cdc_dir, ref_tbl,
-             tempfile.mkdtemp(prefix="ckpt_cdc_ref_"))
+    ref_tbl = IcebergLiteTable(str(tmp_path / "ref"))
+    _run_cdc(spark, cdc_dir, ref_tbl, str(tmp_path / "ckpt_ref"))
     want = _latest_rows(spark, ref_tbl)
     assert len(want) > 0
 
     # crash after 2 of 4 epochs, then resume from the same checkpoint;
     # the crashed epoch may replay — merge_commit must no-op on it
-    tbl = IcebergLiteTable(tempfile.mkdtemp(prefix="cdc_resume_"))
-    ckpt = tempfile.mkdtemp(prefix="ckpt_cdc_resume_")
+    tbl = IcebergLiteTable(str(tmp_path / "resume"))
+    ckpt = str(tmp_path / "ckpt_resume")
     first = _run_cdc(spark, cdc_dir, tbl, ckpt, stop_after=2)
     assert len(first) == 2
     assert len(_latest_rows(spark, tbl)) < len(want)  # mid-stream state
@@ -72,12 +71,37 @@ def test_cdc_upsert_resume_equals_uninterrupted(spark):
     assert _latest_rows(spark, tbl) == want
 
 
-def test_cdc_replayed_epoch_is_noop(spark):
+def test_cdc_replayed_epoch_is_noop(spark, tmp_path):
     cdc_dir = qmod._derived_pages_cdc_dir(spark, SF)
-    tbl = IcebergLiteTable(tempfile.mkdtemp(prefix="cdc_noop_"))
-    _run_cdc(spark, cdc_dir, tbl, tempfile.mkdtemp(prefix="ckpt_n1_"))
+    tbl = IcebergLiteTable(str(tmp_path / "noop"))
+    _run_cdc(spark, cdc_dir, tbl, str(tmp_path / "ckpt_n1"))
     want = _latest_rows(spark, tbl)
     # a fresh checkpoint replays every epoch id from 0 — every
     # merge_commit must return False and leave the table untouched
-    _run_cdc(spark, cdc_dir, tbl, tempfile.mkdtemp(prefix="ckpt_n2_"))
+    _run_cdc(spark, cdc_dir, tbl, str(tmp_path / "ckpt_n2"))
     assert _latest_rows(spark, tbl) == want
+
+
+def test_cdc_registry_query_rows_and_no_temp_dirs(spark, tmp_path):
+    """The registry query aggregates the MERGEd table's latest rows per
+    lang, and removes its temp table and checkpoint before it returns."""
+    import __spark_entry__ as entry
+
+    def leftovers():
+        return {d for p in ("cdc_tbl_*", "ckpt_cdc_*")
+                for d in glob.glob(os.path.join(tempfile.gettempdir(), p))}
+
+    tbl = IcebergLiteTable(str(tmp_path / "ref"))
+    _run_cdc(spark, qmod._derived_pages_cdc_dir(spark, SF), tbl,
+             str(tmp_path / "ckpt_ref"))
+    want: dict = {}
+    for r in tbl.read_latest(spark, "url").select(
+            "lang", F.unix_micros(F.col("warc_ts").cast("timestamp"))
+            .alias("us")).collect():
+        n, us = want.get(r["lang"], (0, 0))
+        want[r["lang"]] = (n + 1, us + r["us"])
+
+    before = leftovers()
+    got = entry.queries()["streaming_cdc_upsert"](spark, SF).collect()
+    assert leftovers() == before
+    assert {r["lang"]: (r["n_urls"], r["ts_sum"]) for r in got} == want

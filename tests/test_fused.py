@@ -9,6 +9,7 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -175,3 +176,59 @@ def test_fused_stream_resumes_from_checkpoint(spark, pages_rg_dir):
     q2.awaitTermination()
     final = seen[-1]
     assert sum(v[0] for v in final.values()) == 660
+
+
+def test_fused_drain_scans_one_balanced_hand_per_task(spark, pages_rg_dir):
+    """A drain (max_files_per_trigger=None) takes every manifest in one
+    epoch, so its manifests are LPT hands of the splits: no exchange
+    between the manifest scan and the mapInArrow, every scan task holds
+    floor(k/n) or ceil(k/n) of the k splits, and the windowed aggregate
+    equals its batch twin."""
+    k = len(fused.plan_splits(pages_rg_dir))
+    n = min(spark.sparkContext.defaultParallelism, k)
+    mdir = os.path.join(SCRATCH, "pages_fused_600_hands")
+    ckpt = os.path.join(SCRATCH, "ckpt_fused_hands")
+    for d in (mdir, ckpt, ckpt + "_splits"):
+        shutil.rmtree(d, ignore_errors=True)
+
+    feats = fused.fused_features_stream(spark, pages_rg_dir, mdir,
+                                        max_files_per_trigger=None)
+    q = (stream.windowed_agg_over_features(feats).writeStream
+         .format("memory").queryName("fused_hands").outputMode("complete")
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    # complete mode runs no trailing no-data epoch: the last execution is
+    # the one that scanned the manifests
+    lines = q._jsq.explainInternal(False).splitlines()
+    top = next(i for i, s in enumerate(lines) if "MapInArrow" in s)
+    scan = next(i for i in range(top, len(lines)) if "FileScan" in lines[i])
+    assert not any("Exchange" in s for s in lines[top:scan]), lines
+
+    # the same source the drain scans, one row per scan task
+    per_task = []
+
+    def count_splits(df, eid):
+        per_task.extend(r.n for r in df.mapInArrow(
+            lambda it: iter([pa.RecordBatch.from_pydict(
+                {"n": [sum(b.num_rows for b in it)]})]),
+            "n long").collect())
+
+    (spark.readStream.schema(fused.SPLIT_SCHEMA).parquet(mdir).writeStream
+     .foreachBatch(count_splits).option("checkpointLocation",
+                                        ckpt + "_splits")
+     .trigger(availableNow=True).start().awaitTermination())
+    assert sum(per_task) == k and len(per_task) == n
+    assert set(per_task) <= {k // n, -(-k // n)}, per_task
+
+    def canon(rows):
+        pdf = pd.DataFrame([r.asDict() for r in rows])
+        return (pdf.assign(window=pdf["window"].astype(str))
+                .sort_values(["window", "lang", "host"])
+                .reset_index(drop=True).round(6))
+
+    twin = stream.windowed_agg_over_features(
+        fused.fused_features_batch(spark, pages_rg_dir)).collect()
+    got = canon(spark.table("fused_hands").collect())
+    assert got["n_docs"].sum() == 660
+    pd.testing.assert_frame_equal(got, canon(twin))

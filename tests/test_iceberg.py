@@ -220,7 +220,7 @@ def test_lineage_keys_unique_for_partitioned_commit(spark, table):
     assert sum(p["row_count"] for p in m["partitions"]) == 20
 
 
-def test_schema_evolution_add_and_drop_column(spark, table):
+def test_schema_evolution_add_and_drop_column(spark, table, tmp_path):
     """Iceberg-style schema evolution: the snapshot's schema is the
     latest live manifest's. A column added in a later commit reads as
     NULL for older epochs; a column dropped later is invisible even
@@ -256,12 +256,11 @@ def test_schema_evolution_add_and_drop_column(spark, table):
 
     # the incremental streaming read follows the same contract: latest
     # schema out, NULL backfill for pre-evolution files
-    import tempfile
     sdf = table.read_stream(spark)
     qn = "evostream"
     q = (sdf.writeStream.format("memory").queryName(qn)
          .outputMode("append")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_evo_"))
+         .option("checkpointLocation", str(tmp_path / "ck_evo"))
          .trigger(availableNow=True).start())
     q.awaitTermination()
     got = spark.table(qn)

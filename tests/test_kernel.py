@@ -227,3 +227,38 @@ def test_extract_text_roundtrip_byte_identical():
 def test_extract_text_fallback():
     assert kernel.extract_text(b"<div>hello <b>x</b></div>") == "hello x"
     assert kernel.extract_text(None) == ""
+
+
+# ---------------------------------------------------------------------------
+# glcm_counts_htmls: per-document counts in any chunk
+# ---------------------------------------------------------------------------
+
+page_len_st = st.one_of(
+    st.none(),
+    st.sampled_from([0, 1, 255, 256, 257, 65535, 65536, 65537, 300_000]),
+    st.integers(0, 70_000))
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(page_len_st, min_size=1, max_size=8),
+       st.sampled_from([1, 8, 256]), st.integers(0, 2**32 - 1))
+def test_counts_htmls_per_document_in_mixed_chunks(lens, alphabet, seed):
+    """A page's counts inside a chunk of pages of any sizes equal its
+    counts alone, and the explicit sum over all 8 (distance, angle)
+    displacements of glcm_counts_batch over full decoded planes.
+    `alphabet` 1 makes content bytes equal to the zero padding."""
+    rng = np.random.default_rng(seed)
+    htmls = [None if n is None else
+             rng.integers(0, alphabet, n, dtype=np.uint8).tobytes()
+             for n in lens]
+    mixed = kernel.glcm_counts_htmls(htmls)
+    planes = kernel.decode_planes(htmls)
+    full = np.zeros_like(mixed)
+    for d in config.GLCM_DISTANCES:
+        for theta in config.GLCM_ANGLES:
+            dr, dc = kernel.displacement(d, theta)
+            full += kernel.glcm_counts_batch(planes, dr=dr, dc=dc)
+    np.testing.assert_array_equal(mixed, full)
+    for k, html in enumerate(htmls):
+        np.testing.assert_array_equal(kernel.glcm_counts_htmls([html])[0],
+                                      mixed[k])
