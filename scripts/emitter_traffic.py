@@ -18,7 +18,7 @@ Prints one JSON line per process() call:
 - wall_s: the call's wall time;
 - emit_read: pane rows the call's _emit read (parquet footers of the
   pane dirs it names: the live log segments, or the latest-panes store);
-- pane_dirs, pane_rows: `_pane*` dirs under the table dir after the
+- pane_dirs, pane_rows: `*pane*` dirs under the table dir after the
   call, and their rows;
 - in_rec, out_rec, shuf_rec: input, output and shuffle-write records of
   the Spark stages the call ran (the stateful pane stage, the pane
@@ -62,7 +62,6 @@ def main() -> None:
     sc = spark.sparkContext
     gw, st = sc._gateway, sc._jsc.sc().statusStore()
     bus = sc._jsc.sc().listenerBus()
-    queries.ensure_pyfiles(spark)
 
     def stage_records():
         bus.waitUntilEmpty()
@@ -116,7 +115,7 @@ def main() -> None:
             process(self, batch_df, epoch_id)
             wall = time.perf_counter() - t0
             new = [v for k, v in stage_records().items() if k not in before]
-            live = glob.glob(os.path.join(self.table.table_dir, "_pane*"))
+            live = glob.glob(os.path.join(self.table.table_dir, "*pane*"))
             lines.append({"epoch": epoch_id, "wall_s": round(wall, 3),
                           "emit_read": rec["emit_read"],
                           "pane_dirs": len(live), "pane_rows": _rows(live),

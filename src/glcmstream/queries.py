@@ -5,11 +5,20 @@ Every implemented operator from SURVEY.md §2 is exposed as a callable
 string. Column aliases match exactly between both sides (driver hashes
 values after sorting columns by name). Floating aggregates are rounded
 identically on both sides to absorb summation-order noise.
+
+Session contract: a registry query never touches the caller's session.
+`QUERIES[name]` ships the package to the workers, opens a child
+`spark.newSession()`, copies every modifiable conf of the caller into
+it, pins UTC and Arrow there (`_PINNED`; timestamps are compared against
+DuckDB's naive-UTC values) and runs the query body on the child. A body
+may change its own session (a drain's shuffle width, a UDTF, temp
+views): the returned DataFrame is bound to the child, so the caller's
+conf, temp views and functions are the same after the call as before.
 """
 
 from __future__ import annotations
 
-import contextlib
+import functools
 import hashlib
 import os
 import shutil
@@ -29,27 +38,37 @@ ORACLE: dict[str, str] = {}
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
+_PINNED = {"spark.sql.session.timeZone": config.SESSION_TZ,
+           "spark.sql.execution.arrow.pyspark.enabled": "true"}
+
 
 def register(name: str, sql: str | None = None):
+    """Register `fn` under `name`: QUERIES holds a wrapper that runs
+    `fn` on a child session (module docstring); the decorator returns
+    the plain `fn`, so registrations stack and bodies call each other
+    without opening a second child."""
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_pyfiles(spark)
+            child = spark.newSession()
+            # a child starts from the builder confs only (e.g. 200
+            # shuffle partitions, not the width get_spark set)
+            for k, v in spark.conf.getAll.items():
+                if spark.conf.isModifiable(k):
+                    child.conf.set(k, v)
+            for k, v in _PINNED.items():
+                child.conf.set(k, v)
+            return fn(child, sf_dir)
+        QUERIES[name] = run
         if sql is not None:
             ORACLE[name] = sql
         return fn
     return deco
 
 
-def _ensure_session_confs(spark: SparkSession) -> None:
-    """Pin runtime-settable confs the oracle comparison depends on, even
-    when running under the driver's own session (timestamps are compared
-    against DuckDB's naive-UTC values)."""
-    spark.conf.set("spark.sql.session.timeZone", config.SESSION_TZ)
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql.types import TimestampNTZType
-    _ensure_session_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     # driver parquet carries TIMESTAMP_NTZ; event-time ops (watermark,
     # unix_micros) need TIMESTAMP — cast under the pinned UTC session tz
@@ -328,7 +347,6 @@ FROM j GROUP BY url
 """)
 def recrawl_interval_join(spark, sf_dir):
     """Batch twin of the stream-stream re-crawl interval join."""
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     p1 = pages.select(F.col("url"), F.col("warc_ts").alias("t1"))
     p2 = pages.select(F.col("url").alias("url2"),
@@ -508,7 +526,6 @@ SELECT regexp_extract(url, 'https://([^/]+)/', 1) AS host,
 FROM pages GROUP BY 1
 """)
 def string_fns_hosts(spark, sf_dir):
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     return (pages.select(
         F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
@@ -804,14 +821,12 @@ def ngram_jaccard_pairs(spark, sf_dir):
 
 @register("minhash_lsh_dedup")  # rows-only: md5-seeded minhash not in SQL
 def minhash_lsh_dedup(spark, sf_dir):
-    ensure_pyfiles(spark)
     d = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(d, threshold=0.4)
 
 
 @register("simhash_buckets")  # rows-only
 def simhash_buckets(spark, sf_dir):
-    ensure_pyfiles(spark)
     d = _t(spark, sf_dir, "documents")
     sh = d.select("doc_id", dedup.simhash_udf("text").alias("simhash"))
     return (sh.groupBy(F.pmod(F.col("simhash"), F.lit(64)).alias("bucket"))
@@ -826,7 +841,6 @@ def simhash_near_pairs(spark, sf_dir):
     planted-pair recall are pinned by tests/test_dedup_recall.py.
     On the driver corpus this finds ~12 genuine near-signature pairs at
     sf0.01 — deterministic for fixed data."""
-    ensure_pyfiles(spark)
     d = _t(spark, sf_dir, "documents")
     return dedup.simhash_near_pairs(d)
 
@@ -886,8 +900,6 @@ def ivf_topk_cosine(spark, sf_dir):
     (k-means codebook + cell-partitioned assignment built once per
     sf_dir, partition-pruned probes — round-2 verdict items #5/#4);
     recall vs brute_force_topk is pinned by tests/test_dedup_recall.py."""
-    _ensure_session_confs(spark)
-    ensure_pyfiles(spark)
     tdir = _scratch_dir("qivf_", sf_dir)
     return similarity.ivf_topk_trained(
         spark, _t(spark, sf_dir, "embeddings"), tdir, target_id=0, k=10)
@@ -900,7 +912,6 @@ def ann_lsh_pairs(spark, sf_dir):
     (sf0.01) — the threshold must sit inside the data's range for the
     operator to demonstrate retrieval; recall vs brute force is pinned by
     tests/test_dedup_recall.py on planted near-duplicates."""
-    ensure_pyfiles(spark)
     return similarity.lsh_near_neighbors(
         _t(spark, sf_dir, "embeddings"), min_cosine=0.4)
 
@@ -993,7 +1004,6 @@ FROM documents GROUP BY 1
 def multimodal_metadata(spark, sf_dir):
     """mapInPandas binary decode plumbing; fake decoder is a pure
     function of byte length so the SQL twin reproduces it."""
-    ensure_pyfiles(spark)
     bin_df = multimodal.documents_as_binary(spark, sf_dir)
     meta = multimodal.decode_metadata(bin_df)
     return (meta.groupBy("modality")
@@ -1025,7 +1035,6 @@ def multimodal_resize(spark, sf_dir):
     """Resize/downsample plumbing (mapInPandas strided byte sampling to a
     fixed-size thumbnail) — the exact strided selection verified byte-sum
     -for-byte-sum by the SQL twin (ascii text payloads: byte == char)."""
-    ensure_pyfiles(spark)
     bin_df = (multimodal.documents_as_binary(spark, sf_dir)
               .filter(F.col("doc_id") < 40))
     return multimodal.resize_stub(bin_df, target=256)
@@ -1039,7 +1048,6 @@ FROM (SELECT ((octet_length(encode(text)) % 24 + 1) + 7) // 8
       FROM documents)
 """)
 def multimodal_frame_sample(spark, sf_dir):
-    ensure_pyfiles(spark)
     bin_df = multimodal.documents_as_binary(spark, sf_dir)
     frames = multimodal.frame_sample_stub(bin_df, every_n=8)
     per_doc = frames.groupBy("doc_id").agg(
@@ -1061,8 +1069,6 @@ def extract_text_invariant(spark, sf_dir):
     """BASELINE.json:15 invariant: extracted text is byte-identical to
     the fixture text per url. The oracle counts all pages (invariant true
     by construction), so any extractor regression breaks the match."""
-    _ensure_session_confs(spark)
-    ensure_pyfiles(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     ext = pages.withColumn("extracted", plan.extract_text_udf("html"))
     return (ext.filter(F.sha2(F.col("extracted"), 256)
@@ -1074,8 +1080,6 @@ def extract_text_invariant(spark, sf_dir):
 def glcm_lang_profile(spark, sf_dir):
     """Flagship payload: html -> plane -> GLCM -> Haralick, aggregated
     per (lang, host)."""
-    _ensure_session_confs(spark)
-    ensure_pyfiles(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     feats = plan.featurize(pages)
     return (feats.groupBy("lang")
@@ -1087,8 +1091,6 @@ def glcm_lang_profile(spark, sf_dir):
 @register("rendertile_profile")  # rows-only
 def rendertile_profile(spark, sf_dir):
     """Sliding-window rendertile stats per document, aggregated by lang."""
-    _ensure_session_confs(spark)
-    ensure_pyfiles(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     rt = pages.withColumn("r", plan.rendertile_udf("html")).drop("html")
     return (rt.groupBy("lang")
@@ -1123,7 +1125,6 @@ def udtf_token_explode(spark, sf_dir):
                 if w:
                     yield (w,)
 
-    _ensure_session_confs(spark)
     spark.udtf.register("split_tokens", SplitTokens)
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     d.createOrReplaceTempView("udtf_docs")
@@ -1192,7 +1193,6 @@ def iceberg_scan_pages(spark, sf_dir):
     commit manifests, snapshot-isolated listing, partition layout, and
     the time-travel read path end-to-end under the driver's hash check."""
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
     tdir = _scratch_dir("qiceberg_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
@@ -1225,8 +1225,6 @@ def iceberg_stream_scan(spark, sf_dir):
     through a per-lang aggregate; the twin aggregates the same logical
     content."""
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
-    ensure_pyfiles(spark)
     tdir = _scratch_dir("qicestream_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
@@ -1252,7 +1250,6 @@ FROM pages GROUP BY 1
 def salted_host_agg(spark, sf_dir):
     """Salted two-phase aggregation over the deliberately hot host key;
     the oracle is the *unsalted* group-by — proving salting is exact."""
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     pre = pages.select(
         F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
@@ -1286,11 +1283,12 @@ def _input_bytes(*paths: str) -> int:
     return total
 
 
-@contextlib.contextmanager
-def _drain_width(spark, *paths: str):
-    """Scale-adaptive shuffle/state width for one-epoch availableNow
-    backlog drains (guide §2: derive partitioning from input size, never
-    a constant tuned to one host). A streaming query bakes its state
+def _drain_width(spark, *paths: str) -> int:
+    """Set the scale-adaptive shuffle/state width of a one-epoch
+    availableNow backlog drain on `spark` (a query's child session, so
+    nothing restores it: the body's later steps run at it too) and
+    return it. Guide §2: derive partitioning from input size, never a
+    constant tuned to one host. A streaming query bakes its state
     partition count in at FIRST start from spark.sql.shuffle.partitions,
     and every state store instance is per-epoch fixed cost (RocksDB
     open + commit; measured ~0.45 s per drain going 32 -> 8 on a 32-core
@@ -1307,10 +1305,7 @@ def _drain_width(spark, *paths: str):
     width = min(default,
                 max(8, _input_bytes(*paths) // _DRAIN_TARGET_BYTES))
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield width
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(default))
+    return width
 
 
 def _drain_to_memory(spark, sdf, output_mode: str,
@@ -1321,11 +1316,11 @@ def _drain_to_memory(spark, sdf, output_mode: str,
     The checkpoint dir and the memory table's temp view are removed
     after the drain: the returned DataFrame's plan holds the memory
     sink's rows itself, so a long-lived session keeps neither."""
+    if paths:
+        _drain_width(spark, *paths)
     ckpt = tempfile.mkdtemp(prefix="ckpt_q_")
     try:
-        with (_drain_width(spark, *paths) if paths
-              else contextlib.nullcontext()):
-            name = stream.drain(sdf, output_mode, ckpt)
+        name = stream.drain(sdf, output_mode, ckpt)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     rows = spark.table(name)
@@ -1440,7 +1435,6 @@ FROM pages GROUP BY url
 def dedup_first_crawl(spark, sf_dir):
     """URL-level dedup keeping the earliest crawl (deterministic min,
     not dropDuplicates whose survivor is partition-order dependent)."""
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     return (pages.groupBy("url")
             .agg(F.floor(F.unix_micros(F.min("warc_ts")) / 1e6)
@@ -1457,12 +1451,11 @@ GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
 """)
 def grouping_sets_orders(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    name = f"orders_gs_{uuid.uuid4().hex[:8]}"
-    o.createOrReplaceTempView(name)
-    return spark.sql(f"""
+    o.createOrReplaceTempView("orders_gs")
+    return spark.sql("""
         SELECT o_orderpriority, o_orderstatus, count(*) AS n,
                round(sum(o_totalprice), 0) AS total
-        FROM {name}
+        FROM orders_gs
         GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
                                 (o_orderpriority, o_orderstatus))""")
 
@@ -1512,7 +1505,6 @@ def _derived_pages_dir(spark, sf_dir) -> str:
     marker, so repeated queries() calls and concurrent driver runs reuse
     it)."""
     out = _scratch_dir("qpages_", sf_dir)
-    _ensure_session_confs(spark)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         pages = plan.pages_from_documents(spark, sf_dir)
         pages.coalesce(4).write.mode("overwrite").parquet(out)
@@ -1535,7 +1527,6 @@ def fused_windowed_counts(spark, sf_dir):
     (exact per-window doc counts) proves the fused scan delivers every
     row to the right window exactly once."""
     from . import fused
-    ensure_pyfiles(spark)
     pdir = _derived_pages_dir(spark, sf_dir)
     mdir = pdir + "_manifests"
     feats = fused.fused_features_stream(spark, pdir, mdir,
@@ -1634,7 +1625,6 @@ def cep_click_purchase(spark, sf_dir):
     time-sorted events table makes stateful and declarative semantics
     exactly comparable."""
     from . import cep
-    ensure_pyfiles(spark)
     sdf = _events_stream(spark, sf_dir)
     # 0s delay: the single-file replay buffers everything in one batch
     # (nothing is ever late), and the trailing no-data batch's watermark
@@ -1660,12 +1650,18 @@ def streaming_dedup_urls(spark, sf_dir):
 
 
 @register("streaming_stateful_glcm")  # rows-only: GLCM not SQL-expressible
+@register("streaming_stateful_glcm_bucketed")
 def streaming_stateful_glcm(spark, sf_dir):
     """applyInPandasWithState incremental GLCM accumulation exposed as a
     driver-checkable query (full pipeline: stream -> watermark -> stateful
-    co-occurrence accumulation -> features of the running total)."""
+    co-occurrence accumulation -> features of the running total). State
+    is keyed by hash bucket, per-bucket vectorized sums + features (the
+    engine's only state layout, ~5.5 s where one state group per key
+    took ~12.6 s at the bench fixture, see state.py cost anatomy);
+    `streaming_stateful_glcm_bucketed` is the same plan under the name of
+    the `*_bucketed` alias (the batch oracle pins both,
+    test_stateful_glcm_bucketed_matches_batch)."""
     from . import state as state_mod
-    ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
                               max_files_per_trigger=None)
     out = state_mod.stateful_glcm_agg(sdf)
@@ -1680,30 +1676,12 @@ def streaming_stateful_glcm_fused(spark, sf_dir):
     stage as streaming_stateful_glcm; tests pin exact equality with the
     batch oracle (test_fused_stateful_glcm_matches_batch)."""
     from . import fused, state as state_mod
-    ensure_pyfiles(spark)
-    _ensure_session_confs(spark)
     pages_dir = _derived_pages_dir(spark, sf_dir)
     mdir = pages_dir + "_manifests"
     gvecs = fused.fused_gvec_stream(spark, pages_dir, mdir,
                                     max_files_per_trigger=8,
                                     parallelism=16)
     out = state_mod.stateful_glcm_agg_fused(gvecs)
-    return _final_windows(_drain_to_memory(spark, out, "update"))
-
-
-@register("streaming_stateful_glcm_bucketed")  # rows-only: GLCM not SQL-expressible
-def streaming_stateful_glcm_bucketed(spark, sf_dir):
-    """The stateful accumulation through its `*_bucketed` alias (state
-    keyed by hash bucket, per-bucket vectorized sums + features; the
-    engine's only state layout, ~5.5 s where one state group per key
-    took ~12.6 s at the bench fixture, see state.py cost anatomy) —
-    final rows must be identical to streaming_stateful_glcm's (the
-    batch oracle pins both, test_stateful_glcm_bucketed_matches_batch)."""
-    from . import state as state_mod
-    ensure_pyfiles(spark)
-    sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
-                              max_files_per_trigger=None)
-    out = state_mod.stateful_glcm_agg_bucketed(sdf)
     return _final_windows(_drain_to_memory(spark, out, "update"))
 
 
@@ -1718,7 +1696,6 @@ def streaming_stateful_glcm_sliding(spark, sf_dir):
     vs the independent html-per-window batch route is pinned by
     test_stateful_glcm_sliding_matches_batch."""
     from . import state as state_mod
-    ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
                               max_files_per_trigger=None)
     panes = state_mod.stateful_glcm_pane_agg_bucketed(sdf)
@@ -1746,7 +1723,6 @@ def streaming_stateful_glcm_session(spark, sf_dir):
     drain. Exactness vs the independent gaps-and-islands oracle is
     pinned by test_stateful_glcm_session_matches_batch."""
     from . import state as state_mod
-    ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir),
                               max_files_per_trigger=None)
     sess = state_mod.stateful_glcm_session_agg_bucketed(sdf)
@@ -1770,7 +1746,6 @@ def _derived_pages_cdc_dir(spark, sf_dir) -> str:
 
         import pyarrow as pa
         import pyarrow.parquet as pq
-        _ensure_session_confs(spark)
         pdf = (plan.pages_from_documents(spark, sf_dir).drop("html")
                .orderBy("warc_ts", "doc_id").toPandas())
         # pandas defaults to ns precision; Spark's parquet reader
@@ -1811,8 +1786,8 @@ def streaming_cdc_upsert(spark, sf_dir):
     shadow map is delta-sized (key, max merge epoch), and each epoch's
     dedup shuffles only (url, ts) pairs."""
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
     cdc_dir = _derived_pages_cdc_dir(spark, sf_dir)
+    _drain_width(spark, cdc_dir)
     schema = spark.read.parquet(cdc_dir).schema
     sdf = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", "1").parquet(cdc_dir))
@@ -1827,8 +1802,7 @@ def streaming_cdc_upsert(spark, sf_dir):
         table.merge_commit(latest, int(epoch_id), key_col="url")
 
     try:
-        with _drain_width(spark, cdc_dir):
-            stream.drain(sdf, "append", ckpt, fb)
+        stream.drain(sdf, "append", ckpt, fb)
         # read_latest is lazy over the table dir: materialize the rows
         # before the dir goes
         latest = table.read_latest(spark, "url").localCheckpoint(eager=True)
@@ -1948,7 +1922,6 @@ def iceberg_merge_upsert(spark, sf_dir):
     from pyspark.sql import Window as W
 
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
     tdir = _scratch_dir("qmerge_", sf_dir)
     table = IcebergLiteTable(tdir)
     if not table.is_committed(1):
@@ -1982,7 +1955,6 @@ def iceberg_compacted_scan(spark, sf_dir):
     the identical row set — the oracle aggregates the original logical
     content, so any row lost or duplicated by the rewrite hash-fails."""
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
     tdir = _scratch_dir("qcompact_", sf_dir)
     # crash-safe build (round-3 advice #1): commits + compact run under a
     # tmp dir that is atomically renamed into place only after compact()
@@ -2135,7 +2107,6 @@ def heavy_hitters_hosts(spark, sf_dir):
     proving the two-phase sketch-then-verify answer is exact. At 100 TB
     the full-key shuffle is the thing you can't afford; this scans once
     and shuffles only <=k rows per batch."""
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     hosted = pages.select(
         F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"))
@@ -2167,7 +2138,6 @@ def corpus_clean_stats(spark, sf_dir):
     dedup shuffle, so only (doc_id, lang, ts, ntok, 32B hash) rows move;
     the quality filter prunes before the exchange; the final agg is a
     partial-agg hash groupBy on a low-cardinality key."""
-    _ensure_session_confs(spark)
     pages = plan.pages_from_documents(spark, sf_dir)
     pre = pages.select(
         "doc_id", "lang", F.unix_micros("warc_ts").alias("ts_us"),
@@ -2209,7 +2179,6 @@ def iceberg_schema_evolution(spark, sf_dir):
     reader that dropped old rows, lost the new column, or back-filled
     anything but NULL hash-fails."""
     from .sink import IcebergLiteTable
-    _ensure_session_confs(spark)
     tdir = _scratch_dir("qevolve_", sf_dir)
     if not os.path.isdir(tdir):
         tmp = tdir + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -2292,32 +2261,24 @@ FROM ranked WHERE rn = 1
 
 
 @register("dedup_components", _COMPONENTS_SQL)
+@register("dedup_components_star", _COMPONENTS_SQL)
 def dedup_components(spark, sf_dir):
     """Near-duplicate CLUSTERING: the word-Jaccard pair graph
     (jaccard_word_pairs' exact edges) resolved into connected
     components -> (doc_id, component_id = min doc id in the group),
     the keep-one-of-each-group step of a training-data dedup pipeline.
-    Large-star/small-star contraction (dedup.connected_components);
-    the DuckDB twin derives the identical edge set and closes it with
+    Large-star/small-star contraction (dedup.connected_components;
+    Kiveris et al., SoCC 2014), the only connected-components path, so
+    `dedup_components_star`, its earlier name, is the same query.
+    The DuckDB twin derives the identical edge set and closes it with
     a recursive CTE, so the component assignment is value-checked
-    end-to-end."""
-    from . import dedup
-    edges = QUERIES["jaccard_word_pairs"](spark, sf_dir) \
-        .select("id_a", "id_b")
+    end-to-end; adversarial-diameter agreement with a union-find
+    reference is pinned by test_connected_components_synthetic_graphs."""
+    edges = jaccard_word_pairs(spark, sf_dir).select("id_a", "id_b")
     return (dedup.connected_components(edges)
             .select(F.col("id").alias("doc_id"),
                     F.col("component_id").cast("bigint")
                     .alias("component_id")))
-
-
-@register("dedup_components_star", _COMPONENTS_SQL)
-def dedup_components_star(spark, sf_dir):
-    """dedup_components under its earlier name for the star
-    contraction (Kiveris et al., SoCC 2014), which is now the only
-    connected-components path: same code, same recursive-CTE oracle.
-    Adversarial-diameter agreement with a union-find reference is
-    pinned by test_connected_components_synthetic_graphs."""
-    return dedup_components(spark, sf_dir)
 
 
 @register("dedup_keep_best", _KEEP_BEST_SQL)
@@ -2332,7 +2293,7 @@ def dedup_keep_best(spark, sf_dir):
     component_id (bounded groups). Value-checked against the DuckDB
     recursive-CTE + window twin."""
     from pyspark.sql import Window as W
-    comp = QUERIES["dedup_components"](spark, sf_dir) \
+    comp = dedup_components(spark, sf_dir) \
         .withColumnRenamed("component_id", "_cid")
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 120)
@@ -2369,7 +2330,6 @@ def streaming_sliding_continuous(spark, sf_dir):
     by test_continuous_sliding_emission_per_epoch."""
     from . import state as state_mod
     from .sink import IcebergLiteTable
-    ensure_pyfiles(spark)
     sdf = stream.pages_stream(spark, _derived_pages_dir(spark, sf_dir), 2)
     table = IcebergLiteTable(tempfile.mkdtemp(prefix="contslide_"))
     ckpt = tempfile.mkdtemp(prefix="ckpt_contslide_")

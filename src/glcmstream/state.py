@@ -719,7 +719,7 @@ class ContinuousSlidingEmitter:
     the tail after a drain.
 
     Pane log (under the table dir): one parquet SEGMENT per epoch,
-    `_paneseg_<epoch>`, holding only that epoch's pane rows (written
+    `paneseg_<epoch>`, holding only that epoch's pane rows (written
     once, overwritten on replay; its max pane_start comes from the
     footers). The meta json `_sliding_meta.json` names every live
     segment with its max pane_start. A window is assembled by
@@ -728,9 +728,11 @@ class ContinuousSlidingEmitter:
     latest-per-pane rewrite: an epoch costs one exchange, and it carries
     only the rows of panes a window with end in (lo, hi] holds
     (lo - L < pane_start < hi), one per live segment that touched the
-    pane. A `_panestore_v<n>` store written by the earlier
-    versioned-store layout resumes as one more segment, with the meta's
-    event_lb_us as its max.
+    pane. Segment names come from the meta, so a `_paneseg_<epoch>`
+    segment of the earlier naming (a leading `_` that Spark's file
+    source treats as hidden) still resumes, and a `_panestore_v<n>`
+    store written by the earlier versioned-store layout resumes as one
+    more segment, with the meta's event_lb_us as its max.
 
     Watermark proxy (no access to the engine's internal watermark from
     foreachBatch): a touched pane proves an event with ts >= pane_start
@@ -813,7 +815,9 @@ class ContinuousSlidingEmitter:
         self._gc()
 
     def _gc(self) -> None:
-        for d in glob.glob(os.path.join(self.table.table_dir, "_pane*")):
+        # `paneseg_<n>`, and `_paneseg_<n>` / `_panestore_v<n>` of the
+        # earlier layouts
+        for d in glob.glob(os.path.join(self.table.table_dir, "*pane*")):
             if os.path.basename(d) not in self.segments:
                 shutil.rmtree(d, ignore_errors=True)
 
@@ -853,7 +857,7 @@ class ContinuousSlidingEmitter:
             # never committed — permanently skipping them. Idempotent
             # replay is therefore a full no-op.
             return
-        name = f"_paneseg_{epoch_id}"
+        name = f"paneseg_{epoch_id}"
         seg = os.path.join(self.table.table_dir, name)
         # the epoch's pane rows run through the stateful stage ONCE:
         # the segment write is the only action on batch_df

@@ -8,6 +8,7 @@ import math
 import os
 import sys
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pandas as pd
@@ -69,9 +70,41 @@ ORACLES = entrymod.oracle_sql()
 ALL_QUERIES = entrymod.queries()
 
 
+def _caller(spark, width=None):
+    """A driver session that is not the engine's: New York time, at
+    `width` shuffle partitions (default: the fixture session's)."""
+    c = spark.newSession()
+    c.conf.set("spark.sql.session.timeZone", "America/New_York")
+    c.conf.set("spark.sql.shuffle.partitions",
+               str(width or spark.conf.get("spark.sql.shuffle.partitions")))
+    return c
+
+
+def _footprint(s):
+    """What a registry query must leave as it found it on its caller:
+    the conf, the temporary views and the registered functions."""
+    return (s.conf.getAll,
+            sorted(t.name for t in s.catalog.listTables() if t.isTemporary),
+            sorted(r[0] for r in s.sql("SHOW USER FUNCTIONS").collect()))
+
+
+@pytest.fixture(scope="module")
+def caller(spark):
+    return _caller(spark)
+
+
+def _run(caller, name, action):
+    """`action` of query `name` run from `caller`, whose footprint must
+    be the same after the call and the action as before."""
+    before = _footprint(caller)
+    out = action(ALL_QUERIES[name](caller, SF))
+    assert _footprint(caller) == before, f"{name} changed its caller"
+    return out
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, name):
-    qdf = ALL_QUERIES[name](spark, SF).toPandas()
+def test_query_matches_oracle(caller, name):
+    qdf = _run(caller, name, lambda df: df.toPandas())
     odf = _duck(ORACLES[name])
     assert sorted(qdf.columns) == sorted(odf.columns), \
         f"{name}: columns {sorted(qdf.columns)} vs {sorted(odf.columns)}"
@@ -85,11 +118,56 @@ def test_query_matches_oracle(spark, name):
 
 
 @pytest.mark.parametrize("name", sorted(set(ALL_QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    df = ALL_QUERIES[name](spark, SF)
-    n = df.count()
+def test_rows_only_queries_run(caller, name):
+    n, cols = _run(caller, name, lambda df: (df.count(), df.columns))
     assert n >= 0
-    assert len(df.columns) > 0
+    assert len(cols) > 0
+
+
+def test_registry_queries_on_threads_of_one_caller(spark):
+    """Two registry queries run at once on two threads of one caller (a
+    streaming drain and a batch aggregate) return the rows each returns
+    alone, and leave the caller as they found it."""
+    names = ["streaming_tumbling_events", "datetime_monthly_orders"]
+    c = _caller(spark)
+    before = _footprint(c)
+    alone = {n: _canon(ALL_QUERIES[n](c, SF).toPandas()) for n in names}
+    with ThreadPoolExecutor(len(names)) as pool:
+        futs = {n: pool.submit(lambda n=n: ALL_QUERIES[n](c, SF).toPandas())
+                for n in names}
+        together = {n: _canon(f.result(timeout=600))
+                    for n, f in futs.items()}
+    for n in names:
+        pd.testing.assert_frame_equal(together[n], alone[n])
+    assert _footprint(c) == before
+
+
+@pytest.mark.parametrize("name", ["streaming_tumbling_events",
+                                  "datetime_monthly_orders"])
+def test_query_body_runs_on_child_session(spark, monkeypatch, name):
+    """A query body runs on a child of its caller whose conf is the
+    caller's, with UTC and Arrow pinned and a drain's width (at a caller
+    width of 3, under the drain floor of 8, the caller's width)."""
+    from glcmstream import queries, stream
+
+    c = _caller(spark, width=3)
+    seen = []
+
+    def spy(mod, attr, session_of):
+        real = getattr(mod, attr)
+
+        def wrapped(*args, **kwargs):
+            seen.append(session_of(*args))
+            return real(*args, **kwargs)
+        monkeypatch.setattr(mod, attr, wrapped)
+
+    spy(stream, "drain", lambda sdf, *_: sdf.sparkSession)
+    spy(queries, "_t", lambda s, *_: s)
+    ALL_QUERIES[name](c, SF)
+    assert seen
+    for child in seen:
+        assert not child._jsparkSession.equals(c._jsparkSession)
+        assert child.conf.getAll == {**c.conf.getAll, **queries._PINNED}
 
 
 def test_registry_drain_leaves_no_checkpoint_or_view(spark):

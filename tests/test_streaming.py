@@ -782,29 +782,26 @@ def test_state_width_follows_cores(spark, pages_dir):
 
 def test_drain_width_capped_at_session_width(spark, tmp_path, monkeypatch):
     """queries._drain_width never widens a drain past the session width:
-    floor 8, then capped at the session default, and the default is
-    restored on exit."""
+    floor 8, then capped at the session default. It sets the width on
+    the session it is given (a query's child session) and returns it."""
     from glcmstream import queries
     small = tmp_path / "small.bin"
     small.write_bytes(b"x" * 1024)
     key = "spark.sql.shuffle.partitions"
     s = spark.newSession()
     s.conf.set(key, "4")
-    with queries._drain_width(s, str(small)) as width:
-        assert width <= 4
-        assert s.conf.get(key) == str(width)
-    assert s.conf.get(key) == "4"
+    width = queries._drain_width(s, str(small))
+    assert width <= 4
+    assert s.conf.get(key) == str(width)
     # a backlog far above the per-partition target is still capped
     monkeypatch.setattr(queries, "_DRAIN_TARGET_BYTES", 1)
-    with queries._drain_width(s, str(small)) as width:
-        assert width == 4
-    assert s.conf.get(key) == "4"
+    s.conf.set(key, "4")
+    assert queries._drain_width(s, str(small)) == 4
     # on a wide session a small drain narrows to the floor of 8
     monkeypatch.undo()
     s.conf.set(key, "32")
-    with queries._drain_width(s, str(small)) as width:
-        assert width == 8
-    assert s.conf.get(key) == "32"
+    assert queries._drain_width(s, str(small)) == 8
+    assert s.conf.get(key) == "8"
 
 
 # ---------------------------------------------------------------------------
@@ -1225,8 +1222,11 @@ def test_salted_streaming_agg_exact(spark, pages_dir):
 
 
 def _pane_dirs(tdir):
-    """The emitter's pane dirs under a table dir."""
-    return sorted(n for n in os.listdir(tdir) if n.startswith("_pane"))
+    """The emitter's pane dirs under a table dir: log segments
+    `paneseg_<epoch>`, and `_paneseg_<epoch>` / `_panestore_v<n>` of the
+    earlier layouts."""
+    return sorted(n for n in os.listdir(tdir)
+                  if n.startswith(("paneseg_", "_pane")))
 
 
 def _dir_bytes(d):
@@ -1298,10 +1298,11 @@ def test_continuous_sliding_replayed_epoch_is_noop(spark):
     # leaves the epoch's segment behind, one after it the pruned ones;
     # the next restart removes them and keeps the named ones)
     tdir = rep_table.table_dir
-    stale = os.path.join(tdir, "_paneseg_99")
-    os.makedirs(stale, exist_ok=True)
+    stale = [os.path.join(tdir, n) for n in ("paneseg_99", "_paneseg_98")]
+    for d in stale:
+        os.makedirs(d, exist_ok=True)
     em2 = state.ContinuousSlidingEmitter(rep_table, watermark="5 minutes")
-    assert not os.path.exists(stale)
+    assert not any(os.path.exists(d) for d in stale)
     m = json.load(open(em2._meta_path))
     assert _pane_dirs(tdir) == sorted(m["segments"])
 
@@ -1325,7 +1326,7 @@ def test_continuous_sliding_appends_one_segment_per_epoch(spark):
         em.process(b, eid)
         m = json.load(open(em._meta_path))
         after = _pane_dirs(tdir)
-        seg = f"_paneseg_{eid}"
+        seg = f"paneseg_{eid}"
         assert after == sorted(m["segments"])
         assert set(after) - set(before) == {seg}
         # the new segment holds exactly this epoch's pane rows
@@ -1342,10 +1343,57 @@ def test_continuous_sliding_appends_one_segment_per_epoch(spark):
         for n in after:
             assert bound is None or m["segments"][n] + em.l_us > bound
         before_max = dict(m["segments"])
-    assert pruned == {"_paneseg_0", "_paneseg_1"}
+    assert pruned == {"paneseg_0", "paneseg_1"}
     em.flush(spark)
     assert _pane_dirs(tdir) == []
     assert len(table.read(spark).toPandas()) > 0
+
+
+def test_continuous_sliding_resumes_hidden_segment_names(spark):
+    """Segments are written as `paneseg_<epoch>`: Spark's file source
+    treats a root path with a leading `_` as hidden. A meta that names
+    segments of the earlier `_paneseg_<epoch>` naming still resumes
+    from them, and the resumed run ends with exactly the rows of an
+    uninterrupted one."""
+    import json
+
+    from pane_batches import pane_batches
+
+    batches = pane_batches(spark)
+    tdir = _scratch("tbl_oldnames")
+    old = IcebergLiteTable(tdir)
+    em = state.ContinuousSlidingEmitter(old, watermark="5 minutes")
+    for eid in (0, 1):
+        em.process(batches[eid], eid)
+    assert _pane_dirs(tdir) == ["paneseg_0", "paneseg_1"]
+    # rewrite the log under the earlier names, as that emitter left it
+    m = json.load(open(em._meta_path))
+    for n in list(m["segments"]):
+        os.rename(os.path.join(tdir, n), os.path.join(tdir, "_" + n))
+        m["segments"]["_" + n] = m["segments"].pop(n)
+    with open(em._meta_path, "w") as f:
+        json.dump(m, f)
+
+    em = state.ContinuousSlidingEmitter(old, watermark="5 minutes")
+    assert sorted(em.segments) == ["_paneseg_0", "_paneseg_1"]
+    assert _pane_dirs(tdir) == ["_paneseg_0", "_paneseg_1"]
+    for eid in (2, 3):
+        em.process(batches[eid], eid)
+    em.flush(spark)
+    assert _pane_dirs(tdir) == []
+
+    ref = IcebergLiteTable(_scratch("tbl_oldnames_ref"))
+    em = state.ContinuousSlidingEmitter(ref, watermark="5 minutes")
+    for eid, b in enumerate(batches):
+        em.process(b, eid)
+    em.flush(spark)
+    cols = ["lang", "host", "window_start"]
+    exp = ref.read(spark).toPandas().sort_values(cols) \
+        .reset_index(drop=True)
+    got = old.read(spark).toPandas().sort_values(cols) \
+        .reset_index(drop=True)[exp.columns]
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(got, exp)  # includes the epoch column
 
 
 def test_continuous_sliding_emit_reads_only_window_panes(spark,

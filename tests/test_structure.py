@@ -36,3 +36,54 @@ def test_queries_keeps_no_private_drain_or_source():
     defined = {node.name for node in ast.walk(tree)
                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))}
     assert not defined & {"_run_stream_to_memory", "_derived_pages_stream"}
+
+
+def _by_top_level_def(tree: ast.Module, match) -> dict[str | None, int]:
+    """Count the nodes `match` accepts under each top-level function of
+    `tree` (nested functions count for the def that holds them; None
+    for module-level code)."""
+    out: dict[str | None, int] = {}
+    for top in tree.body:
+        owner = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if match(node):
+                out[owner] = out.get(owner, 0) + 1
+    return out
+
+
+def test_queries_session_policy_only_in_register():
+    """The registry's session policy lives in `register`'s wrapper: it
+    ships the package and sets the child's confs. A body only narrows
+    its own child's width through `_drain_width`."""
+    tree = _trees()["queries.py"]
+
+    def conf_set(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf")
+
+    def pyfiles(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "ensure_pyfiles")
+
+    assert set(_by_top_level_def(tree, conf_set)) == {"register",
+                                                      "_drain_width"}
+    assert _by_top_level_def(tree, pyfiles) == {"register": 1}
+
+
+def test_queries_bodies_do_not_look_up_the_registry():
+    """A query body calls other bodies as plain functions: a
+    `QUERIES[...]` lookup would run the callee in a second child
+    session and build one plan from two sessions."""
+    tree = _trees()["queries.py"]
+
+    def lookup(node):
+        return (isinstance(node, ast.Subscript)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "QUERIES")
+
+    assert set(_by_top_level_def(tree, lookup)) <= {"register",
+                                                    "_reorder_registry"}
