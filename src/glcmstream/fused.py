@@ -41,6 +41,7 @@ over spark.range hand ids (first call in a session: 7.8 s and 0.5 s).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 
@@ -115,12 +116,26 @@ def _hands(spark: SparkSession, n_splits: int,
                       n_splits))
 
 
-def _write_manifests(manifest_dir: str, groups: list[list]) -> str:
+def _write_manifests(manifest_dir: str, groups: list[list],
+                     kind: str) -> str:
     """Write manifest-<i>.parquet holding groups[i]'s split rows (kept
-    in the given order). A dir already holding the last manifest is left
-    as it is: a resumed stream must see the files its WAL tracked. So a
-    drain (hand manifests) and a bounded stream (one per data file) each
-    need their own dir: either keeps a layout the other wrote there."""
+    in the given order) and the layout record `_layout.json`: the kind
+    (`files`, one manifest per data file, or `hands`) and the group
+    count. A dir already holding the same layout is left as it is: a
+    resumed stream must see the files its WAL tracked. Another layout
+    raises ValueError, so a drain (hands) and a bounded stream (files)
+    each need their own dir. A dir written before the record existed
+    is reused if it holds the last manifest. The leading `_` keeps the
+    record out of Spark's file listing."""
+    layout = {"kind": kind, "groups": len(groups)}
+    record = os.path.join(manifest_dir, "_layout.json")
+    if os.path.exists(record):
+        with open(record) as f:
+            held = json.load(f)
+        if held != layout:
+            raise ValueError(f"manifest dir {manifest_dir} holds the "
+                             f"layout {held}, not {layout}")
+        return manifest_dir
     marker = os.path.join(manifest_dir,
                           f"manifest-{len(groups)-1:04d}.parquet")
     if os.path.exists(marker):
@@ -137,6 +152,9 @@ def _write_manifests(manifest_dir: str, groups: list[list]) -> str:
         pq.write_table(tbl, tmp)
         os.replace(tmp, os.path.join(manifest_dir,
                                      f"manifest-{i:04d}.parquet"))
+    with open(record + ".tmp", "w") as f:
+        json.dump(layout, f)
+    os.replace(record + ".tmp", record)
     return manifest_dir
 
 
@@ -149,7 +167,7 @@ def write_split_manifests(pages_dir: str, manifest_dir: str) -> str:
     for s in _splits_by_cost(pages_dir):
         by_file.setdefault(s[0], []).append(s)
     return _write_manifests(manifest_dir,
-                            [by_file[p] for p in sorted(by_file)])
+                            [by_file[p] for p in sorted(by_file)], "files")
 
 
 def write_hand_manifests(pages_dir: str, manifest_dir: str,
@@ -162,8 +180,8 @@ def write_hand_manifests(pages_dir: str, manifest_dir: str,
     the fused stage needs NO repartition exchange: the scan IS the
     balanced fan-out."""
     splits = _splits_by_cost(pages_dir)
-    return _write_manifests(manifest_dir,
-                            [splits[j::hands] for j in range(hands)])
+    return _write_manifests(
+        manifest_dir, [splits[j::hands] for j in range(hands)], "hands")
 
 
 def binary_views(arr: pa.Array) -> list[np.ndarray]:

@@ -111,8 +111,9 @@ class IcebergLiteTable:
         else:
             writer = batch_df.write
         writer.mode("overwrite").parquet(epoch_dir)
-        # absolute data-file paths in the manifest (Iceberg manifests list
-        # their data files): the incremental streaming read consumes these
+        # the manifest lists its data files twice (Iceberg manifests list
+        # their data files): absolute in `files`, and relative to the
+        # table dir in `partitions[].file`, which read_stream resolves
         lineage = []
         for path in _data_files(epoch_dir):
             rows = pq.read_metadata(path).num_rows
@@ -310,12 +311,15 @@ class IcebergLiteTable:
                     for f in schema.fields}
         ts_cols = [f.name for f in schema.fields
                    if f.dataType.simpleString().startswith("timestamp")]
+        table_dir = os.path.abspath(self.table_dir)
 
         def read_rows(it):
             trim_zip_finders()
             for mb in it:
                 for path in mb.column("path").to_pylist():
-                    pf = pq2.ParquetFile(path)
+                    # relative to the table dir; an absolute path (an
+                    # old manifest's `files`) is kept by join
+                    pf = pq2.ParquetFile(os.path.join(table_dir, path))
                     have = set(pf.schema_arrow.names)
                     for batch in pf.iter_batches(use_threads=False):
                         cols = []
@@ -331,7 +335,8 @@ class IcebergLiteTable:
                         yield pa.RecordBatch.from_arrays(cols, names=names)
 
         mdf = (spark.readStream
-               .schema("epoch_id long, kind string, files array<string>")
+               .schema("epoch_id long, kind string, files array<string>, "
+                       "partitions array<struct<file: string>>")
                .option("maxFilesPerTrigger", "1")
                .json(self.manifest_dir))
         # compaction snapshots REWRITE already-streamed rows — a CDC
@@ -340,7 +345,13 @@ class IcebergLiteTable:
         # consumer's contract, as with Iceberg's changelog scan).
         live = mdf.filter(F.col("kind").isNull()
                           | (F.col("kind") != "compaction"))
-        paths = live.select(F.explode("files").alias("path"))
+        # data files relative to the table dir, so a copied or moved
+        # table streams from where it is; manifests from before
+        # `partitions[].file` existed fall back to their absolute `files`
+        rel = F.col("partitions.file")
+        paths = live.select(F.explode(
+            F.when(rel.isNull() | F.exists(rel, lambda f: f.isNull()),
+                   F.col("files")).otherwise(rel)).alias("path"))
         return paths.mapInArrow(read_rows, ddl)
 
     def destroy(self) -> None:

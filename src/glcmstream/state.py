@@ -667,7 +667,7 @@ def batch_glcm_agg_sliding(pages: DataFrame,
     l_us, s_us = _duration_us(length), _duration_us(slide)
     r = l_us // s_us
 
-    def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg_group(key, pdf):
         trim_zip_finders()
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \
@@ -1130,7 +1130,7 @@ def batch_glcm_agg_session(pages: DataFrame,
     and sum the GLCM counts from the raw html per island."""
     gap_us = _duration_us(gap)
 
-    def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg_group(key, pdf):
         trim_zip_finders()
         lang, host = key
         pdf = pdf.sort_values("ts_us", kind="mergesort") \
@@ -1159,7 +1159,7 @@ def batch_glcm_agg(pages: DataFrame) -> DataFrame:
     """Batch oracle for the stateful path: same keys, GLCM summed per key
     with applyInPandas (no state). Must agree exactly with the streaming
     result for the same input (determinism gate, BASELINE.json:14)."""
-    def agg_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg_group(key, pdf):
         trim_zip_finders()
         lang, host, window_start = key
         counts = kernel.glcm_counts_htmls(pdf["html"].tolist()) \

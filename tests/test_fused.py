@@ -59,6 +59,26 @@ def test_plan_splits_covers_all_rows(pages_rg_dir):
     assert sum(s[2] for s in splits) == 660  # 600 + 10% recrawls
 
 
+def test_manifest_dir_keeps_one_layout(pages_rg_dir, tmp_path):
+    """A manifest dir records its layout: the same layout again is a
+    no-op, another kind or group count raises, and a dir from before
+    the record is reused as it is."""
+    mdir = str(tmp_path / "manifests")
+    fused.write_split_manifests(pages_rg_dir, mdir)
+    names = sorted(os.listdir(mdir))
+    mtimes = [os.stat(os.path.join(mdir, n)).st_mtime_ns for n in names]
+    fused.write_split_manifests(pages_rg_dir, mdir)
+    assert [os.stat(os.path.join(mdir, n)).st_mtime_ns
+            for n in names] == mtimes
+    with pytest.raises(ValueError, match="hands"):
+        fused.write_hand_manifests(pages_rg_dir, mdir, 2)
+    old = str(tmp_path / "before_record")
+    fused.write_hand_manifests(pages_rg_dir, old, 2)
+    os.remove(os.path.join(old, "_layout.json"))
+    fused.write_hand_manifests(pages_rg_dir, old, 2)
+    assert not os.path.exists(os.path.join(old, "_layout.json"))
+
+
 def test_fused_batch_equals_classic(spark, pages_rg_dir):
     classic = (plan.featurize(stream.read_pages_batch(spark, pages_rg_dir))
                .select("url", "warc_ts", "lang", *fused._FEATS))

@@ -112,6 +112,30 @@ def test_incremental_stream_read_picks_up_new_commits(spark, table):
         q.awaitTermination()
 
 
+def test_moved_table_streams_from_its_new_place(spark, table, tmp_path):
+    """read_stream resolves data files against the table dir it is
+    given, so a copy of a committed table streams the same rows after
+    the original is gone."""
+    table.commit(_pages(spark, range(0, 6), 1), 0,
+                 partition_days_col="warc_ts")
+    table.commit(_pages(spark, range(6, 10), 2), 1,
+                 partition_days_col="warc_ts")
+    want = sorted(tuple(r) for r in table.read(spark)
+                  .select("url", "doc_id", "warc_ts").collect())
+    moved = IcebergLiteTable(shutil.copytree(table.table_dir,
+                                             str(tmp_path / "moved")))
+    table.destroy()
+    qn = "moved_stream"
+    q = (moved.read_stream(spark).writeStream.format("memory")
+         .queryName(qn).outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck_moved"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    got = sorted(tuple(r) for r in spark.table(qn)
+                 .select("url", "doc_id", "warc_ts").collect())
+    assert got == want
+
+
 def test_lineage_certifies_written_rows(spark, table):
     table.commit(_pages(spark, range(0, 7), 1), 0)
     m = table.manifests()[0]

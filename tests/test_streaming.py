@@ -5,6 +5,7 @@ exactly-once sink, checkpoint resume, late data, stream-stream join
 
 import os
 import shutil
+import warnings
 
 import pandas as pd
 import pyarrow as pa
@@ -132,6 +133,17 @@ def test_stateful_glcm_bucketed_matches_batch(spark, pages_dir):
         .reset_index(drop=True)
     pd.testing.assert_frame_equal(g, e)
     assert g["n_docs"].sum() == 440
+
+
+def test_batch_twins_build_without_warnings(spark, pages_dir):
+    """applyInPandas warns (UserWarning) at every build of a function
+    whose type hints are partial; the twins' functions carry none."""
+    pages = stream.read_pages_batch(spark, pages_dir)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        state.batch_glcm_agg(pages)
+        state.batch_glcm_agg_sliding(pages)
+        state.batch_glcm_agg_session(pages)
 
 
 def test_stateful_glcm_sliding_matches_batch(spark, pages_dir):
