@@ -20,7 +20,6 @@ from .session import trim_zip_finders
 
 MINHASH_PERMS = 32
 LSH_BANDS = 8          # default: 8 bands x 4 rows (parameterizable below)
-LSH_ROWS = MINHASH_PERMS // LSH_BANDS
 SHINGLE_K = 3
 
 _MERSENNE = (1 << 61) - 1
@@ -312,9 +311,16 @@ def _star_labels(canon: DataFrame, max_rounds: int = 64,
                  .dropDuplicates(["u", "v"])
                  .localCheckpoint(eager=True))
         # fixed point iff the edge SET is unchanged (sizes equal and
-        # no new edge) — scalar actions over checkpointed rounds
-        grew = small.subtract(edges).count()
-        n_new = small.count()
+        # no new edge): both scalars from one aggregate over the
+        # checkpointed round left-joined to the previous one (both are
+        # sets), so a round runs two actions, this and the checkpoint
+        seen = (small.join(edges.withColumn("_old", F.lit(True)),
+                           ["u", "v"], "left")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.count(F.when(F.col("_old").isNull(), 1))
+                     .alias("grew"))
+                .collect()[0])
+        grew, n_new = seen["grew"], seen["n"]
         edges = small
         if rounds_out is not None:
             rounds_out.append(n_new)

@@ -26,6 +26,7 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1153,8 +1154,6 @@ def cogrouped_user_funnel(spark, sf_dir):
     unused in round 1): clicks and purchases cogrouped per user; the
     pandas function computes the funnel latency first-click ->
     first-purchase."""
-    import pandas as pd
-
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click") \
         .select("user_id", "ts")
@@ -1861,19 +1860,19 @@ FROM lineitem GROUP BY l_returnflag
 def pandas_udaf_geomean(spark, sf_dir):
     """Grouped-aggregate pandas UDF (Series -> scalar UDAF surface)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import DoubleType
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType, LongType
 
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(DoubleType(), PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    # Series -> scalar type hints make these grouped-aggregate UDFs
+    # (PandasUDFType.GROUPED_AGG warns at every call); the hints resolve
+    # against the module globals, hence the module-level pandas import
+    @pandas_udf(DoubleType())
+    def geomean(v: pd.Series) -> float:
         trim_zip_finders()
         return float(np.exp(np.log(v.to_numpy(dtype=np.float64)).mean()))
 
-    @pandas_udf(LongType(), PandasUDFType.GROUPED_AGG)
-    def ncount(v):
+    @pandas_udf(LongType())
+    def ncount(v: pd.Series) -> int:
         trim_zip_finders()
         return len(v)
 

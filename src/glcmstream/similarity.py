@@ -19,7 +19,6 @@ from .session import trim_zip_finders
 
 EMB_DIM = 64
 ANN_BANDS = 8          # default band count (see lsh_geometry)
-ANN_BAND_BITS = 4      # fallback bits/band for tiny corpora
 
 
 def lsh_geometry(n_vectors: int, bands: int = ANN_BANDS) -> tuple[int, int]:

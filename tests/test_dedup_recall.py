@@ -502,6 +502,40 @@ def test_connected_components_synthetic_graphs(spark):
             assert labels[a] == labels[b]
 
 
+def test_star_round_runs_two_jobs(spark):
+    """A star-contraction round runs two Spark jobs: the eager
+    checkpoint of the new edge set and one aggregate that gives both
+    convergence scalars. Counted on a child session with adaptive
+    execution and broadcast joins off, so that a job is an action (AQE
+    runs each shuffle map stage as a job of its own); the difference
+    between a 3-round and a 6-round chain cancels the jobs outside the
+    rounds."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", "4")
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    counted = []
+    for n in (4, 28):
+        canon = child.createDataFrame([(i + 1, i) for i in range(n)],
+                                      ["u", "v"])
+        rounds: list = []
+        group = f"star_rounds_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            labels = dedup._star_labels(canon, rounds_out=rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        counted.append((len(rounds),
+                        len(sc.statusTracker().getJobIdsForGroup(group))))
+        assert {r.label for r in labels.collect()} == {0}
+    (r1, j1), (r2, j2) = counted
+    assert r2 > r1
+    assert (j2 - j1) == 2 * (r2 - r1), counted
+
+
 def test_ngram_jaccard_exact_vs_minhash_estimate(spark):
     """Cross-evidence: ngram_jaccard_pairs computes the EXACT word-3-gram
     Jaccard that minhash_lsh_pairs ESTIMATES over the same k=3 shingles

@@ -8,6 +8,7 @@ import math
 import os
 import sys
 import tempfile
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
@@ -122,6 +123,17 @@ def test_rows_only_queries_run(caller, name):
     n, cols = _run(caller, name, lambda df: (df.count(), df.columns))
     assert n >= 0
     assert len(cols) > 0
+
+
+def test_pandas_udaf_geomean_raises_no_user_warning(caller):
+    """The grouped-aggregate pandas UDFs are declared by type hints: the
+    deprecated PandasUDFType.GROUPED_AGG form warns at every call."""
+    name = "pandas_udaf_geomean"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        qdf = _run(caller, name, lambda df: df.toPandas())
+    pd.testing.assert_frame_equal(_canon(qdf), _canon(_duck(ORACLES[name])),
+                                  check_dtype=False)
 
 
 def test_registry_queries_on_threads_of_one_caller(spark):

@@ -505,9 +505,10 @@ def test_bucketed_null_host_matches_per_key(spark):
     plain F.parse_url THROWS under Spark 4 ANSI (the engine must use
     try_parse_url so one bad URL can't kill a 100 TB stream), and the
     resulting NULL host must survive the packed-blob state format. The
-    pane/session bucketed paths share _pack_bucket and
-    _batch_key_groups, so the blob roundtrip test above covers their
-    encoding too."""
+    pane and session builders run the same state function
+    (_bucket_merge_fn, whose NULL-safe grouping tests/test_state_props.py
+    drives with None keys) over the same _pack_bucket, so the blob
+    roundtrip test above covers their encoding too."""
     from glcmstream import kernel
     src = _scratch("nullhost_src")
     t0 = pd.Timestamp("2026-01-01 10:00:00")

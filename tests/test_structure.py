@@ -87,3 +87,30 @@ def test_queries_bodies_do_not_look_up_the_registry():
 
     assert set(_by_top_level_def(tree, lookup)) <= {"register",
                                                     "_reorder_registry"}
+
+
+def test_state_hands_one_state_function_factory_to_spark():
+    """Every stateful builder runs the same state function: state.py
+    calls applyInPandasWithState once, with a call of the one factory
+    that defines a GroupState function."""
+    tree = _trees()["state.py"]
+    calls = [node for node in ast.walk(tree)
+             if isinstance(node, ast.Call)
+             and isinstance(node.func, ast.Attribute)
+             and node.func.attr == "applyInPandasWithState"]
+    assert len(calls) == 1, [c.lineno for c in calls]
+    fn = calls[0].args[0]
+    assert isinstance(fn, ast.Call) and isinstance(fn.func, ast.Name), \
+        ast.unparse(fn)
+
+    def takes_group_state(node):
+        return (isinstance(node, ast.FunctionDef)
+                and any(a.annotation is not None
+                        and ast.unparse(a.annotation) == "GroupState"
+                        for a in node.args.args))
+
+    factories = {top.name for top in tree.body
+                 if isinstance(top, ast.FunctionDef)
+                 and any(takes_group_state(n) for n in ast.walk(top)
+                         if n is not top)}
+    assert factories == {fn.func.id}, sorted(factories)
