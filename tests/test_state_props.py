@@ -298,3 +298,133 @@ def test_bucket_merge_fn_confluent_under_order_and_batching(
     # docs are conserved, whatever the merge did
     assert sum(m[1 if kind != "session" else 2]
                for _, _, m, _ in finals[0]) == len(events)
+
+
+# ---------------------------------------------------------------------------
+# Single properties of the merge, each pinned on its own: NULL-safe key
+# grouping, row-order and chunking invariance of one window bucket, and
+# the one-shot session split.
+# ---------------------------------------------------------------------------
+
+_KEY_LANGS = ["en", "de", None, "fr"]
+_KEY_HOSTS = ["a.com", None, "b.org", "c.net", "d.io"]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, len(_KEY_LANGS) - 1),
+                  st.integers(0, len(_KEY_HOSTS) - 1),
+                  st.integers(0, 3)),
+        min_size=1, max_size=60),
+    with_window=st.booleans(),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_batch_key_groups_matches_dict_loop(rows, with_window, seed):
+    """One invocation groups rows exactly as a per-row dict loop over
+    (lang, host[, window start]) does — same groups, same rows in each
+    (every row carries its own count cell), same doc counts — over key
+    pools with None components (try_parse_url yields NULL hosts for
+    malformed URLs; NULL codes colliding across the two columns was the
+    subtle failure mode). Without a window, every row shares one event
+    time, so each (lang, host) is one session."""
+    kind = "tumbling" if with_window else "session"
+    events = [(_KEY_LANGS[li], _KEY_HOSTS[hi],
+               w * _WIN_US if with_window else 0, i)
+              for i, (li, hi, w) in enumerate(rows)]
+    st_ = _FakeState()
+    emitted = list(_fn(kind)((0,), iter(_chunks(
+        kind, events, np.random.default_rng(seed))), st_))
+    ref: dict = {}
+    for lang, host, t, cell in events:
+        fk = (lang, host, t) if with_window else (lang, host)
+        ref.setdefault(fk, []).append(cell)
+    keys, meta, mats = state._unpack_bucket(st_.get[0])
+    got = {((k[0], k[1], int(m[0])) if with_window else tuple(k)):
+           (int(m[1 if with_window else 2]), g.tobytes())
+           for k, m, g in zip(keys, meta, mats)}
+    assert len(got) == len(keys) == len(ref)
+    for fk, cells in ref.items():
+        assert fk in got, fk
+        assert got[fk] == (len(cells),
+                           sum(_vec(c) for c in cells).tobytes())
+    assert len(emitted) == 1 and len(emitted[0]) == len(ref)
+
+
+def _drive_windows(epochs, rng):
+    """Run one tumbling-window bucket through the epochs, each epoch's
+    rows in a random order cut into random chunks; returns every
+    epoch's emission, sorted by key, and the final decoded state."""
+    fn, st_ = _fn("tumbling"), _FakeState()
+    out = []
+    for rows in epochs:
+        events = [(_KEY_LANGS[li], _KEY_HOSTS[hi], w * _WIN_US, cell)
+                  for li, hi, w, cell in rows]
+        emitted = list(fn((0,), iter(_chunks("tumbling", events, rng)),
+                          st_))
+        out.append(_sorted(emitted[0]) if emitted else None)
+    return out, _decoded(st_)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    epochs=st.lists(
+        st.lists(st.tuples(st.integers(0, len(_KEY_LANGS) - 1),
+                           st.integers(0, len(_KEY_HOSTS) - 1),
+                           st.integers(0, 2),
+                           st.integers(0, 4 * state.L2 - 1)),
+                 min_size=1, max_size=30),
+        min_size=1, max_size=3),
+    seeds=st.tuples(st.integers(0, 2**31 - 1), st.integers(0, 2**31 - 1)),
+)
+def test_bucket_window_fn_ignores_row_order_and_chunking(epochs, seeds):
+    """The same bucket rows, in any arrival order and any split into
+    Arrow chunks, give the same emissions and the same state, and
+    n_batches counts invocations (epochs), not chunks."""
+    out_a, state_a = _drive_windows(epochs, np.random.default_rng(seeds[0]))
+    out_b, state_b = _drive_windows(epochs, np.random.default_rng(seeds[1]))
+    for a, b in zip(out_a, out_b):
+        pd.testing.assert_frame_equal(a, b)
+    assert state_a == state_b
+    # every touched key counts one batch per epoch that touched it
+    touched: dict = {}
+    for rows in epochs:
+        for k in {(_KEY_LANGS[r[0]], _KEY_HOSTS[r[1]], r[2] * _WIN_US)
+                  for r in rows}:
+            touched[k] = touched.get(k, 0) + 1
+    last = out_a[-1]
+    for lang, host, ws, n_batches in zip(
+            last["lang"], last["host"], last["window_start"],
+            last["n_batches"]):
+        assert n_batches == touched[(lang, host, ws.value // 1000)]
+
+
+_TINY_GAP_US = 100  # a tiny gap keeps the search space dense
+
+
+@settings(max_examples=100, deadline=None)
+@given(ts=st.lists(st.integers(min_value=0, max_value=500), min_size=1,
+                   max_size=25),
+       seed=st.integers(0, 2**31 - 1))
+def test_merge_frags_matches_gaps_and_islands(ts, seed):
+    """A one-shot session merge of one key's events equals the textbook
+    gaps-and-islands split (sort, break where the gap to the previous
+    event >= the gap) — the definition the DuckDB session oracles use."""
+    fn = state._bucket_merge_fn(_TINY_GAP_US, _TINY_GAP_US, True)
+    st_ = _FakeState()
+    events = [("en", "a.com", t, t) for t in ts]
+    list(fn((0,), iter(_chunks("session", events,
+                               np.random.default_rng(seed))), st_))
+    _, meta, mats = state._unpack_bucket(st_.get[0])
+    order = np.argsort(meta[:, 0])
+    s = sorted(ts)
+    islands = [[s[0]]]
+    for t in s[1:]:
+        if t - islands[-1][-1] < _TINY_GAP_US:
+            islands[-1].append(t)
+        else:
+            islands.append([t])
+    assert len(order) == len(islands)
+    for i, isl in zip(order, islands):
+        assert tuple(meta[i]) == (isl[0], isl[-1], len(isl))
+        np.testing.assert_array_equal(mats[i], sum(_vec(t) for t in isl))
