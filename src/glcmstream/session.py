@@ -15,6 +15,19 @@ launch. The archives live in `${XDG_CACHE_HOME:-~/.cache}/glcmstream/jvm`
 (mode 0700): `<key>.jsa`, its `<key>.json` record (install id, byte
 size), the JVM's `[cds]` log `<key>.log` and, while a recording runs,
 `<key>.jsa.<pid>.tmp`.
+
+Streaming checkpoint files (offset and commit logs, source logs, RocksDB
+changelogs) are written to a temp file and renamed into place by
+Spark's `FileSystemBasedCheckpointFileManager`. The default,
+`FileContextBasedCheckpointFileManager`, asks for the link status of
+both paths in every rename, and without the native Hadoop library the
+local filesystem answers each such call by forking `readlink`, 8 forks
+per atomic file (CLAUDE.md). `FileSystem.rename` is
+`File.renameTo`, which on a local disk replaces the target atomically,
+so nothing is lost for the local checkpoints every session here
+writes; the `.crc` sidecars and the state checksum files are written as
+before. Checkpoints on HDFS would want Spark's default back: an HDFS
+FileSystem rename does not overwrite.
 """
 
 from __future__ import annotations
@@ -78,7 +91,12 @@ def get_spark(app: str = "glcmstream", master: str | None = None,
                  "org.apache.spark.sql.execution.streaming.state."
                  "RocksDBStateStoreProvider")
          .config("spark.sql.streaming.stateStore.rocksdb."
-                 "changelogCheckpointing.enabled", "true"))
+                 "changelogCheckpointing.enabled", "true")
+         # checkpoint files are renamed into place through FileSystem,
+         # not FileContext (module docstring)
+         .config("spark.sql.streaming.checkpointFileManagerClass",
+                 "org.apache.spark.sql.execution.streaming.checkpointing."
+                 "FileSystemBasedCheckpointFileManager"))
     # Only the process's first session starts a JVM; later ones reuse it.
     launch = (SparkContext._gateway is None
               and "PYSPARK_GATEWAY_PORT" not in os.environ)

@@ -75,7 +75,9 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
+import warnings
 import zlib
 from collections.abc import Iterator
 
@@ -426,6 +428,32 @@ def _load_bucket(state: GroupState):
     return [], np.zeros((0, 3), np.int64), np.zeros((0, L2), np.int64)
 
 
+# pyspark's applyInPandasWithState serializer pads an Arrow batch that
+# holds fewer output rows than state rows (a bucket that emits nothing
+# still writes its state row) with an all-None frame, and pandas warns at
+# its pd.concat of that frame; no frame the state function yields is
+# concerned
+_PADDING_MESSAGE = re.escape(
+    "The behavior of DataFrame concatenation with empty or all-NA entries "
+    "is deprecated. In a future version, this will no longer exclude "
+    "empty or all-NA columns when determining the result dtypes. To "
+    "retain the old behavior, exclude the relevant entries before the "
+    "concat operation.") + r"\Z"
+_SERIALIZERS = r"pyspark\.sql\.pandas\.serializers\Z"
+
+
+def _ignore_padding_warning() -> None:
+    """The one warnings filter of a state worker, added once per process:
+    every filterwarnings call resets the worker's record of warnings
+    already shown. Entries of warnings.filters are (action, message,
+    category, module, lineno), the patterns compiled as filterwarnings
+    compiles them."""
+    if ("ignore", re.compile(_PADDING_MESSAGE, re.I), FutureWarning,
+            re.compile(_SERIALIZERS), 0) not in warnings.filters:
+        warnings.filterwarnings("ignore", _PADDING_MESSAGE, FutureWarning,
+                                _SERIALIZERS)
+
+
 def _save_bucket(state: GroupState, keys: list, meta: np.ndarray,
                  mats: np.ndarray, evict_us: np.ndarray) -> None:
     """Write back the fine keys whose eviction instant evict_us still
@@ -486,6 +514,7 @@ def _bucket_merge_fn(gap_us: int, horizon_us: int, session: bool,
     def merge_bucket(key, pdfs: Iterator[pd.DataFrame],
                      state: GroupState) -> Iterator[pd.DataFrame]:
         trim_zip_finders()
+        _ignore_padding_warning()
         keys, blob_meta, mats = _load_bucket(state)
         n_old = len(keys)
         meta = np.zeros((n_old, 4), np.int64)

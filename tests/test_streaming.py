@@ -3,8 +3,11 @@ exactly-once sink, checkpoint resume, late data, stream-stream join
 (SURVEY.md §5.2 rows 6-9).
 """
 
+import io
+import json
 import os
 import shutil
+import subprocess
 import warnings
 
 import pandas as pd
@@ -144,6 +147,38 @@ def test_batch_twins_build_without_warnings(spark, pages_dir):
         state.batch_glcm_agg(pages)
         state.batch_glcm_agg_sliding(pages)
         state.batch_glcm_agg_session(pages)
+
+
+def test_state_output_padding_does_not_warn():
+    """pyspark's applyInPandasWithState serializer pads a batch holding
+    fewer data rows than state rows with an all-None frame, and pandas
+    warns (FutureWarning) at the concat of it. Driven as a python worker
+    does: one bucket emits a window, two timed-out buckets emit nothing
+    but still write a state row; the state function silences exactly
+    that warning, so the batch serializes with FutureWarning an error."""
+    from pyspark.sql.pandas.serializers import \
+        ApplyInPandasWithStateSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.streaming.state import GroupState
+
+    fn = state._bucket_merge_fn(1, 3_600_000_000, False)
+    out_type = to_arrow_type(state.OUTPUT_SCHEMA)
+    row = pd.DataFrame({"lang": ["en"], "host": ["a.com"],
+                        "ws_us": [600_000_000],
+                        "gvec": [bytes(4 * state.L2)]})
+
+    def group(i, pdfs):
+        st = GroupState(None, 0, 0, state.TIMEOUT, not pdfs, True, False,
+                        False, False, GroupState.NO_TIMESTAMP,
+                        b"bucket%d" % i, state.BUCKET_STATE_SCHEMA)
+        return [((fn((i,), iter(pdfs), st), st), out_type)]
+
+    ser = ApplyInPandasWithStateSerializer(
+        "UTC", True, True, state.BUCKET_STATE_SCHEMA, 10_000, False, False)
+    groups = (group(i, pdfs) for i, pdfs in enumerate([[row], [], []]))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        ser.dump_stream(groups, io.BytesIO())
 
 
 def test_stateful_glcm_sliding_matches_batch(spark, pages_dir):
@@ -745,6 +780,53 @@ def test_checkpoint_resume_bucketed_and_session_state(spark, pages_dir):
                      fin_session)
     pd.testing.assert_frame_equal(g, e)
     assert g["n_docs"].sum() == 440
+
+
+def test_checkpoint_files_written_without_readlink(spark, pages_dir):
+    """Checkpoint files are renamed into place through FileSystem: without
+    the native Hadoop library, FileContext's rename forked `readlink` for
+    the link status of both paths, 8 times per atomic checkpoint file.
+    A stateful drain of two epochs, recorded by JFR (jdk.ProcessStart) in
+    the driver JVM, starts no `readlink`, and still writes the offset and
+    commit logs and the state changelogs with their Hadoop `.crc`
+    sidecars and Spark's changelog checksum files."""
+    src = _scratch("forks_src")
+    ckpt = _scratch("forks_ckpt")
+    for f in sorted(os.listdir(pages_dir))[:4]:
+        shutil.copy2(os.path.join(pages_dir, f), src)
+    jvm = spark._jvm.java.lang
+    jdk_bin = os.path.join(jvm.System.getProperty("java.home"), "bin")
+    pid = str(jvm.ProcessHandle.current().pid())
+    rec = os.path.join(_scratch("forks_jfr"), "drain.jfr")
+
+    def jcmd(*args):
+        subprocess.run([os.path.join(jdk_bin, "jcmd"), pid, *args],
+                       check=True, capture_output=True)
+
+    jcmd("JFR.start", "name=ckpt_forks")
+    try:
+        stream.drain(state.stateful_glcm_agg_bucketed(
+            stream.pages_stream(spark, src, max_files_per_trigger=2),
+            buckets=16), "update", ckpt)
+        jcmd("JFR.dump", "name=ckpt_forks", f"filename={rec}")
+    finally:
+        jcmd("JFR.stop", "name=ckpt_forks")
+    out = subprocess.run([os.path.join(jdk_bin, "jfr"), "print", "--json",
+                          "--events", "jdk.ProcessStart", rec],
+                         check=True, capture_output=True, text=True).stdout
+    commands = [e["values"]["command"]
+                for e in json.loads(out)["recording"]["events"]]
+    assert not [c for c in commands if c.startswith("readlink")]
+
+    for log in ("offsets", "commits"):
+        for epoch in ("0", "1"):
+            d = os.path.join(ckpt, log)
+            assert os.path.isfile(os.path.join(d, epoch))
+            assert os.path.isfile(os.path.join(d, f".{epoch}.crc"))
+    part = os.path.join(ckpt, "state", "0", "0")
+    for name in ("1.changelog", "1.changelog.crc"):
+        assert os.path.isfile(os.path.join(part, name))
+        assert os.path.isfile(os.path.join(part, f".{name}.crc"))
 
 
 def test_state_width_follows_cores(spark, pages_dir):
