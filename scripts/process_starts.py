@@ -93,7 +93,7 @@ def main() -> None:
                 spark, src, max_files_per_trigger=FILES_PER_EPOCH))
              .writeStream.outputMode("update")
              .option("checkpointLocation", os.path.join(work, tag, "ckpt"))
-             .foreachBatch(table.foreach_batch())
+             .foreachBatch(table.commit)
              .trigger(availableNow=True).start())
         q.awaitTermination()
         return q.recentProgress

@@ -69,11 +69,7 @@ HASHED = {
 
 def _drain(df, ckpt: str) -> pd.DataFrame:
     rows: list = []
-    q = (df.writeStream.outputMode("update")
-         .foreachBatch(lambda d, eid: rows.append(d.toPandas()))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream.drain(df, "update", ckpt, lambda d, eid: rows.append(d.toPandas()))
     return pd.concat(rows, ignore_index=True)
 
 
@@ -90,11 +86,9 @@ def _emission_hash(spark, fn) -> str:
 
     ckpt = tempfile.mkdtemp(prefix="state_compat_")
     try:
-        q = (fn(stream.pages_stream(spark, PAGES, max_files_per_trigger=2))
-             .writeStream.outputMode("update").foreachBatch(fb)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        stream.drain(fn(stream.pages_stream(spark, PAGES,
+                                            max_files_per_trigger=2)),
+                     "update", ckpt, fb)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return format(acc[0], "016x")

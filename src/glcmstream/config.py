@@ -10,13 +10,10 @@ parameter: session.get_spark sets it to the cluster's core count.
 
 from __future__ import annotations
 
-import math
-
 # --- gray-plane decode -------------------------------------------------
 GRAY_LEVELS: int = 32          # L; GLCM is L x L
 PLANE_W: int = 256             # html bytes are reshaped to H x W
 PLANE_H: int = 256
-QUANT_SHIFT: int = 8 - int(math.log2(GRAY_LEVELS))  # uint8 >> shift -> [0, L)
 
 # --- GLCM displacement (skimage graycomatrix convention) ---------------
 GLCM_DISTANCE: int = 1

@@ -147,12 +147,6 @@ class IcebergLiteTable:
         os.replace(tmp, self._manifest_path(epoch_id))  # atomic commit point
         return True
 
-    def foreach_batch(self):
-        """Binding for ds.writeStream.foreachBatch(...)."""
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.commit(batch_df, epoch_id)
-        return fn
-
     # -- merge / compaction (Iceberg MERGE INTO & rewrite_data_files) ------
 
     def merge_commit(self, batch_df: DataFrame, epoch_id: int,

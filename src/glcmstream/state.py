@@ -42,7 +42,7 @@ raw pane emissions -> latest emission per pane -> window sums and
 features, in one shuffle. The registry query runs it once over a
 drain's emissions; `ContinuousSlidingEmitter` runs it every epoch over
 its pane log. The log is append-only: one parquet segment per epoch
-(`_paneseg_<epoch>` under the table dir) holding that epoch's pane rows,
+(`paneseg_<epoch>` under the table dir) holding that epoch's pane rows,
 named with its max pane_start in the emitter's meta json. Each epoch's
 scan covers every live segment, but only the panes of the windows it
 emits enter the assembly's exchange. A segment is

@@ -165,4 +165,4 @@ def drain(sdf: DataFrame, output_mode: str, checkpoint_dir: str,
 def run_to_sink(sdf: DataFrame, table, checkpoint_dir: str,
                 output_mode: str = "update") -> None:
     """availableNow run of a streaming DF into an IcebergLiteTable."""
-    drain(sdf, output_mode, checkpoint_dir, table.foreach_batch())
+    drain(sdf, output_mode, checkpoint_dir, table.commit)

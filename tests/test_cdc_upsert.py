@@ -13,6 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from glcmstream import queries as qmod
+from glcmstream import stream
 from glcmstream.sink import IcebergLiteTable
 
 SF = "/root/testdata/sf0.001"
@@ -34,11 +35,8 @@ def _run_cdc(spark, cdc_dir, table, ckpt, stop_after=None):
         if stop_after is not None and len(seen) >= stop_after:
             raise RuntimeError("injected crash")
 
-    q = (sdf.writeStream.foreachBatch(fb)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
     try:
-        q.awaitTermination()
+        stream.drain(sdf, "append", ckpt, fb)
     except Exception:
         if stop_after is None:
             raise

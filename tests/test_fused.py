@@ -93,12 +93,7 @@ def test_fused_stream_windowed_equals_classic_stream(spark, pages_rg_dir):
     def run(tag, job):
         ckpt = os.path.join(SCRATCH, f"ckpt_fused_{tag}")
         shutil.rmtree(ckpt, ignore_errors=True)
-        q = (job.writeStream.format("memory").queryName(f"fused_{tag}")
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        pdf = spark.table(f"fused_{tag}").toPandas()
+        pdf = spark.table(stream.drain(job, "complete", ckpt)).toPandas()
         return pdf.sort_values(["lang", "host", "n_docs"]) \
             .reset_index(drop=True)
 
@@ -138,13 +133,10 @@ def test_fused_stateful_glcm_matches_batch(spark, pages_rg_dir):
                                     max_files_per_trigger=2,
                                     parallelism=8)
     out = state.stateful_glcm_agg_fused(gvecs)
-    q = (out.writeStream.format("memory").queryName("fused_stateful")
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    name = stream.drain(out, "update", ckpt)
     w = W.partitionBy("lang", "host", "window_start") \
          .orderBy(F.desc("n_docs"))
-    got = (spark.table("fused_stateful")
+    got = (spark.table(name)
            .withColumn("_rn", F.row_number().over(w))
            .filter(F.col("_rn") == 1).drop("_rn", "n_batches"))
     exp = state.batch_glcm_agg(
@@ -190,10 +182,7 @@ def test_fused_stream_resumes_from_checkpoint(spark, pages_rg_dir):
     n_first = sum(v[0] for v in seen[-1].values())
     assert n_first < 660
 
-    q2 = (mk().writeStream.outputMode("complete").foreachBatch(fb)
-          .option("checkpointLocation", ckpt)
-          .trigger(availableNow=True).start())
-    q2.awaitTermination()
+    stream.drain(mk(), "complete", ckpt, fb)
     final = seen[-1]
     assert sum(v[0] for v in final.values()) == 660
 
@@ -234,10 +223,8 @@ def test_fused_drain_scans_one_balanced_hand_per_task(spark, pages_rg_dir):
                 {"n": [sum(b.num_rows for b in it)]})]),
             "n long").collect())
 
-    (spark.readStream.schema(fused.SPLIT_SCHEMA).parquet(mdir).writeStream
-     .foreachBatch(count_splits).option("checkpointLocation",
-                                        ckpt + "_splits")
-     .trigger(availableNow=True).start().awaitTermination())
+    stream.drain(spark.readStream.schema(fused.SPLIT_SCHEMA).parquet(mdir),
+                 "append", ckpt + "_splits", count_splits)
     assert sum(per_task) == k and len(per_task) == n
     assert set(per_task) <= {k // n, -(-k // n)}, per_task
 

@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from glcmstream import stream
 from glcmstream.sink import IcebergLiteTable
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
@@ -125,13 +126,9 @@ def test_moved_table_streams_from_its_new_place(spark, table, tmp_path):
     moved = IcebergLiteTable(shutil.copytree(table.table_dir,
                                              str(tmp_path / "moved")))
     table.destroy()
-    qn = "moved_stream"
-    q = (moved.read_stream(spark).writeStream.format("memory")
-         .queryName(qn).outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_moved"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.table(qn)
+    name = stream.drain(moved.read_stream(spark), "append",
+                        str(tmp_path / "ck_moved"))
+    got = sorted(tuple(r) for r in spark.table(name)
                  .select("url", "doc_id", "warc_ts").collect())
     assert got == want
 
@@ -209,10 +206,7 @@ def test_compaction_preserves_rows_reduces_files(spark, table):
     def fb(df, eid):
         seen.update(r.doc_id for r in df.collect())
 
-    q = (table.read_stream(spark).writeStream.outputMode("append")
-         .foreachBatch(fb).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream.drain(table.read_stream(spark), "append", ckpt, fb)
     assert seen == set(range(30))
 
 
@@ -281,13 +275,7 @@ def test_schema_evolution_add_and_drop_column(spark, table, tmp_path):
     # the incremental streaming read follows the same contract: latest
     # schema out, NULL backfill for pre-evolution files
     sdf = table.read_stream(spark)
-    qn = "evostream"
-    q = (sdf.writeStream.format("memory").queryName(qn)
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_evo"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table(qn)
+    got = spark.table(stream.drain(sdf, "append", str(tmp_path / "ck_evo")))
     assert set(got.columns) == {"url", "doc_id"}  # latest (narrow) schema
     assert got.count() == 10
 

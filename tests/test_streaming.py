@@ -53,14 +53,8 @@ def _latest_per_key(df, keys, order_col="n_docs"):
 def _run_windowed(spark, pages_dir, tag):
     sdf = stream.pages_stream(spark, pages_dir)
     agg = stream.windowed_feature_agg(sdf)
-    qname = f"winagg_{tag}"
-    ckpt = _scratch(f"ckpt_{qname}")
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(qname).toPandas()
+    name = stream.drain(agg, "complete", _scratch(f"ckpt_winagg_{tag}"))
+    return spark.table(name).toPandas()
 
 
 def _canon_win(pdf):
@@ -113,20 +107,14 @@ def test_stateful_glcm_matches_batch(spark, pages_dir):
 
 
 def test_stateful_glcm_bucketed_matches_batch(spark, pages_dir):
-    """Protocol-amortized bucketed stateful accumulation must produce
-    row-for-row the same final (lang, host, window) features as the
-    per-key path AND the no-state batch oracle (the bucketed path is a
-    pure execution-strategy fork: hash-bucketed state keys, vectorized
-    per-bucket sums/features)."""
+    """Bucket-count invariance of the tumbling state: at 16 buckets (the
+    default is 128) the latest emission per (lang, host, window) must
+    equal the no-state batch oracle row for row (the bucket count is an
+    execution strategy, not a semantic)."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     out = state.stateful_glcm_agg_bucketed(sdf, buckets=16)
-    qname = "bkt_glcm"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update")
-         .option("checkpointLocation", _scratch("ckpt_bkt_glcm"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = _latest_per_key(spark.table(qname),
+    name = stream.drain(out, "update", _scratch("ckpt_bkt_glcm"))
+    got = _latest_per_key(spark.table(name),
                           ["lang", "host", "window_start"])
     exp = state.batch_glcm_agg(stream.read_pages_batch(spark, pages_dir))
     cols = ["lang", "host", "window_start"]
@@ -224,13 +212,8 @@ def test_sliding_from_emissions_matches_batch_html(spark, pages_dir):
     exact, so even the float features match to the last bit."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     panes = state.stateful_glcm_pane_agg_bucketed(sdf, buckets=16)
-    qname = "pane_emis_fused"
-    q = (panes.writeStream.format("memory").queryName(qname)
-         .outputMode("update")
-         .option("checkpointLocation", _scratch("ckpt_pane_emis_fused"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    emis = spark.table(qname)
+    emis = spark.table(stream.drain(panes, "update",
+                                    _scratch("ckpt_pane_emis_fused")))
     # multi-epoch emissions actually present (a pane emitted twice)
     assert (emis.groupBy("lang", "host", "pane_start").count()
             .agg(F.max("count")).collect()[0][0] >= 2)
@@ -358,11 +341,7 @@ def test_continuous_sliding_emitter_resumes(spark, pages_dir):
         sdf = stream.pages_stream(spark, src, max_files_per_trigger=2)
         panes = state.stateful_glcm_pane_agg_bucketed(
             sdf, watermark="5 minutes", buckets=16)
-        q = (panes.writeStream.outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .foreachBatch(em.process)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        stream.drain(panes, "update", ckpt, em.process)
         if flush:
             em.flush(spark)
         return table
@@ -428,12 +407,8 @@ def test_bucketed_panes_match_per_pane(spark, pages_dir):
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
-        q = (fn(sdf).writeStream.format("memory").queryName(tag)
-             .outputMode("update")
-             .option("checkpointLocation", _scratch(f"ckpt_{tag}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return (_latest_per_key(spark.table(tag),
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        return (_latest_per_key(spark.table(name),
                                 ["lang", "host", "pane_start"])
                 .drop("n_batches").toPandas()
                 .sort_values(["lang", "host", "pane_start"])
@@ -454,13 +429,8 @@ def test_stateful_glcm_session_matches_batch(spark, pages_dir):
     close-only emission would lose)."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     sess = state.stateful_glcm_session_agg(sdf)
-    qname = "sess_glcm"
-    q = (sess.writeStream.format("memory").queryName(qname)
-         .outputMode("update")
-         .option("checkpointLocation", _scratch("ckpt_sess_glcm"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got_df = state.final_sessions(spark.table(qname))
+    name = stream.drain(sess, "update", _scratch("ckpt_sess_glcm"))
+    got_df = state.final_sessions(spark.table(name))
     exp_df = state.batch_glcm_agg_session(
         stream.read_pages_batch(spark, pages_dir))
     cols = ["lang", "host", "session_start"]
@@ -479,12 +449,8 @@ def test_bucketed_sessions_match_per_key(spark, pages_dir):
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
-        q = (fn(sdf).writeStream.format("memory").queryName(tag)
-             .outputMode("update")
-             .option("checkpointLocation", _scratch(f"ckpt_{tag}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return (state.final_sessions(spark.table(tag)).toPandas()
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        return (state.final_sessions(spark.table(name)).toPandas()
                 .sort_values(["lang", "host", "session_start"])
                 .reset_index(drop=True))
 
@@ -498,7 +464,8 @@ def test_bucketed_sessions_match_per_key(spark, pages_dir):
 def test_bucket_blob_roundtrips_null_keys():
     """round-4 advice #2: F.parse_url returns NULL for malformed URLs,
     so None must survive the packed-blob state format (length-sentinel
-    encoding) — the per-key paths already handle null grouping keys."""
+    encoding): a None lang, host or both decodes to the key that was
+    packed, next to an ordinary key, with its meta words and counts."""
     import numpy as np
     keys = [("en", None), (None, "h.example.com"), (None, None),
             ("de", "x.example.com")]
@@ -561,12 +528,8 @@ def test_bucketed_null_host_matches_per_key(spark):
 
     def run(fn, tag):
         sdf = stream.pages_stream(spark, src)
-        q = (fn(sdf).writeStream.format("memory").queryName(tag)
-             .outputMode("update")
-             .option("checkpointLocation", _scratch(f"ckpt_{tag}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return (_latest_per_key(spark.table(tag),
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        return (_latest_per_key(spark.table(name),
                                 ["lang", "host", "window_start"])
                 .drop("_rn", "n_batches").toPandas()
                 .sort_values(["lang", "host", "window_start"],
@@ -615,13 +578,8 @@ def test_session_fragments_merge_out_of_order(spark):
            .option("maxFilesPerTrigger", "1").parquet(src)
            .withColumn("warc_ts", F.col("warc_ts").cast("timestamp")))
     sess = state.stateful_glcm_session_agg(sdf)
-    qname = "sess_ooo"
-    q = (sess.writeStream.format("memory").queryName(qname)
-         .outputMode("update")
-         .option("checkpointLocation", _scratch("ckpt_sess_ooo"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = state.final_sessions(spark.table(qname)).toPandas()
+    name = stream.drain(sess, "update", _scratch("ckpt_sess_ooo"))
+    got = state.final_sessions(spark.table(name)).toPandas()
     assert len(got) == 1 and got["n_docs"].iloc[0] == 3
     assert got["session_start"].iloc[0] == t0
     assert got["session_end"].iloc[0] == t0 + pd.Timedelta(minutes=13)
@@ -636,6 +594,27 @@ def test_exactly_once_sink_replay_noop(spark):
     m = table.manifests()[0]
     assert m["epoch_id"] == 7 and m["row_count"] == 100
     assert sum(p["row_count"] for p in m["partitions"]) == 100
+
+
+def test_run_to_sink_commits_each_epoch_once(spark, pages_dir):
+    """run_to_sink feeds a sink through `commit(batch_df, epoch_id)`, the
+    engine interface of sink.py: a sink with no other method gets every
+    epoch the drain commits exactly once, in order, with all its rows."""
+    class CommitOnly:
+        def __init__(self):
+            self.calls = []
+
+        def commit(self, batch_df, epoch_id):
+            self.calls.append((int(epoch_id), batch_df.count()))
+
+    sink = CommitOnly()
+    ckpt = _scratch("ckpt_commit_only")
+    stream.run_to_sink(stream.pages_stream(spark, pages_dir, 4).select("url"),
+                       sink, ckpt, "append")
+    epochs = sorted(int(n) for n in os.listdir(os.path.join(ckpt, "commits"))
+                    if n.isdigit())
+    assert [e for e, _ in sink.calls] == epochs == [0, 1]
+    assert sum(n for _, n in sink.calls) == 440
 
 
 def test_sink_partial_crash_recovery(spark):
@@ -732,12 +711,8 @@ def test_checkpoint_resume_bucketed_and_session_state(spark, pages_dir):
         # memory sink can't recover from a checkpoint; collect
         # update-mode emissions via foreachBatch like the windowed
         # resume test's IcebergLite sink
-        q = (sdf.writeStream.outputMode("update")
-             .foreachBatch(lambda df, eid:
-                           rows.extend(df.toPandas().to_dict("records")))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        stream.drain(sdf, "update", ckpt, lambda df, eid:
+                     rows.extend(df.toPandas().to_dict("records")))
 
     def run_two_leg(fn, tag, finalize):
         src = _scratch(f"res_{tag}_src")
@@ -935,11 +910,7 @@ def test_late_data_dropped(spark):
                .groupBy(F.window("warc_ts", "10 minutes").alias("window"))
                .agg(F.count(F.lit(1)).alias("n")))
         table = IcebergLiteTable(os.path.join(SCRATCH, "late_tbl"))
-        q = (agg.writeStream.outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .foreachBatch(table.foreach_batch())
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        stream.run_to_sink(agg, table, ckpt, "append")
         return table
 
     shutil.rmtree(os.path.join(SCRATCH, "late_tbl"), ignore_errors=True)
@@ -1021,10 +992,7 @@ def test_out_of_order_fixture_late_drops(spark):
             got[r["ws"]] = r["n"]
 
     # update mode — complete mode never evicts state nor drops late rows
-    q = (agg.writeStream.outputMode("update").foreachBatch(fb)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream.drain(agg, "update", ckpt, fb)
     assert got == {k.to_pydatetime(): v for k, v in expected.items()}
 
 
@@ -1265,13 +1233,8 @@ def test_cep_watermark_boundary_ties_match_in_event_time_order(spark):
 def test_recrawl_stream_join_matches_batch(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     j = stream.recrawl_stream_join(sdf)
-    qname = "recrawl_j"
-    q = (j.writeStream.format("memory").queryName(qname)
-         .outputMode("append")
-         .option("checkpointLocation", _scratch("ckpt_recrawl"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table(qname).toPandas().sort_values(
+    name = stream.drain(j, "append", _scratch("ckpt_recrawl"))
+    got = spark.table(name).toPandas().sort_values(
         ["url", "t1", "t2"]).reset_index(drop=True)
 
     batch = stream.read_pages_batch(spark, pages_dir)
@@ -1284,13 +1247,8 @@ def test_recrawl_stream_join_matches_batch(spark, pages_dir):
 def test_dedup_within_watermark(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     d = stream.dedup_stream(sdf, watermark="2 hours")
-    qname = "dedup_s"
-    q = (d.select("url").writeStream.format("memory").queryName(qname)
-         .outputMode("append")
-         .option("checkpointLocation", _scratch("ckpt_dedup"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table(qname).count()
+    name = stream.drain(d.select("url"), "append", _scratch("ckpt_dedup"))
+    got = spark.table(name).count()
     exp = spark.read.parquet(pages_dir).select("url").distinct().count()
     assert got == exp == 400
 
@@ -1298,13 +1256,8 @@ def test_dedup_within_watermark(spark, pages_dir):
 def test_salted_streaming_agg_exact(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=4)
     salted = stream.salted_windowed_doc_counts(sdf)
-    qname = "salted_s"
-    q = (salted.writeStream.format("memory").queryName(qname)
-         .outputMode("complete")
-         .option("checkpointLocation", _scratch("ckpt_salted"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = (stream.finalize_salted(spark.table(qname))
+    name = stream.drain(salted, "complete", _scratch("ckpt_salted"))
+    got = (stream.finalize_salted(spark.table(name))
            .select(F.col("window.start").alias("ws"), "host", "n_docs")
            .toPandas().sort_values(["ws", "host"]).reset_index(drop=True))
     exp = (stream.read_pages_batch(spark, pages_dir)
