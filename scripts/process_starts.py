@@ -12,8 +12,9 @@ tree this script lives in (any streaming test creates it).
 
 The query is the live_tumbling benchmark's: a pages stream through
 state.stateful_glcm_agg_bucketed at its default bucket count into an
-IcebergLiteTable, two fixture files per epoch, as an availableNow
-drain. One untimed warm-up drain of the first two files runs first;
+IcebergLiteTable, two fixture files per epoch, drained by
+`stream.run_to_sink`, whose returned query gives the per-epoch
+progress. One untimed warm-up drain of the first two files runs first;
 then `jcmd <pid> JFR.start` records the measured drain of all eight
 files, and `jfr print --json --events jdk.ProcessStart` reads the
 recording. Without the native Hadoop library, Hadoop's local filesystem
@@ -89,14 +90,10 @@ def main() -> None:
         for f in names:
             shutil.copy2(os.path.join(PAGES, f), src)
         table = IcebergLiteTable(os.path.join(work, tag, "table"))
-        q = (state.stateful_glcm_agg_bucketed(stream.pages_stream(
-                spark, src, max_files_per_trigger=FILES_PER_EPOCH))
-             .writeStream.outputMode("update")
-             .option("checkpointLocation", os.path.join(work, tag, "ckpt"))
-             .foreachBatch(table.commit)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return q.recentProgress
+        return stream.run_to_sink(
+            state.stateful_glcm_agg_bucketed(stream.pages_stream(
+                spark, src, max_files_per_trigger=FILES_PER_EPOCH)),
+            table, os.path.join(work, tag, "ckpt")).recentProgress
 
     try:
         run("warm", files[:FILES_PER_EPOCH])

@@ -1319,7 +1319,7 @@ def _drain_to_memory(spark, sdf, output_mode: str,
         _drain_width(spark, *paths)
     ckpt = tempfile.mkdtemp(prefix="ckpt_q_")
     try:
-        name = stream.drain(sdf, output_mode, ckpt)
+        name = stream.drain(sdf, output_mode, ckpt).name
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     rows = spark.table(name)

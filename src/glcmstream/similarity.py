@@ -267,6 +267,22 @@ def hyperplane_bands_udf(bands: int, band_bits: int):
     return _sig.asNondeterministic()
 
 
+def _bucket_pairs(k: int, chunk: int):
+    """The pairs i < j of a k-row bucket in np.triu_indices(k, 1) order,
+    as (ic, jc) index blocks of at most `chunk` pairs: the blocks of
+    slicing triu_indices every `chunk` pairs, without building it (1.25e9
+    pairs, ~20 GB of indices, for a 50k-row bucket). A block starts
+    and ends anywhere within an anchor row's partners, so one anchor with
+    more than `chunk` partners spans several blocks."""
+    rows = np.arange(k, dtype=np.int64)
+    first = rows * (k - 1) - rows * (rows - 1) // 2  # flat index of (i, i+1)
+    total = k * (k - 1) // 2
+    for p0 in range(0, total, chunk):
+        p = np.arange(p0, min(p0 + chunk, total), dtype=np.int64)
+        ic = np.searchsorted(first, p, side="right") - 1
+        yield ic, ic + 1 + (p - first[ic])
+
+
 def lsh_near_neighbors(emb: DataFrame, min_cosine: float = 0.9,
                        bands: int | None = None,
                        band_bits: int | None = None,
@@ -335,13 +351,7 @@ def lsh_near_neighbors(emb: DataFrame, min_cosine: float = 0.9,
         starts = np.concatenate([[0], chg, [len(pdf)]])
         out_a, out_b, out_d = [], [], []
         for s, t in zip(starts[:-1], starts[1:]):
-            k = t - s
-            if k < 2:
-                continue
-            iu, ju = np.triu_indices(k, 1)
-            for c0 in range(0, len(iu), pair_chunk):
-                ic = iu[c0:c0 + pair_chunk]
-                jc = ju[c0:c0 + pair_chunk]
+            for ic, jc in _bucket_pairs(t - s, pair_chunk):
                 prod = M[s + ic] * M[s + jc]
                 dots = np.add.accumulate(prod, axis=1)[:, -1]
                 keep = dots >= raw_floor

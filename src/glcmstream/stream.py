@@ -9,12 +9,15 @@ Drain contract: `drain` is the one place the engine starts a streaming
 query. It creates the checkpoint dir, runs the query with
 trigger(availableNow=True) — every input file present at start, then
 the trailing no-data epoch that lets the watermark close what is left —
-and returns when the query terminates. Given a foreachBatch function it
-hands each epoch to it (sinks, emitters, MERGE); without one it drains
-into a fresh memory table and returns that table's name. Resuming from
-the same checkpoint dir skips every committed epoch. A new streaming
-path drains through here (or through `run_to_sink`), so anything that
-must see every epoch hooks in at one function.
+and returns the terminated StreamingQuery. Given a foreachBatch function
+it hands each epoch to it (sinks, emitters, MERGE); without one it
+drains into a fresh memory table, named by the query's `name`. The
+returned query carries the per-epoch progress (`recentProgress`) and
+the last executed plan. An exception raised in an epoch re-raises from
+here as a StreamingQueryException. Resuming from the same checkpoint
+dir skips every committed epoch. A new streaming path drains through
+here (or through `run_to_sink`), so anything that must see every epoch
+hooks in at one function.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from . import config, plan
 
@@ -145,24 +149,24 @@ def dedup_stream(sdf: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 def drain(sdf: DataFrame, output_mode: str, checkpoint_dir: str,
           foreach_batch: Callable[[DataFrame, int], None] | None = None
-          ) -> str | None:
+          ) -> StreamingQuery:
     """availableNow run of `sdf` to termination (see the module
-    docstring). Returns the memory table's name when no `foreach_batch`
-    is given, else None."""
+    docstring). Returns the terminated query; without `foreach_batch`
+    its memory table is `spark.table(q.name)`."""
     os.makedirs(checkpoint_dir, exist_ok=True)
     w = (sdf.writeStream.outputMode(output_mode)
          .option("checkpointLocation", checkpoint_dir))
-    name = None
     if foreach_batch is None:
-        name = f"drain_{uuid.uuid4().hex[:12]}"
-        w = w.format("memory").queryName(name)
+        w = w.format("memory").queryName(f"drain_{uuid.uuid4().hex[:12]}")
     else:
         w = w.foreachBatch(foreach_batch)
-    w.trigger(availableNow=True).start().awaitTermination()
-    return name
+    q = w.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def run_to_sink(sdf: DataFrame, table, checkpoint_dir: str,
-                output_mode: str = "update") -> None:
-    """availableNow run of a streaming DF into an IcebergLiteTable."""
-    drain(sdf, output_mode, checkpoint_dir, table.commit)
+                output_mode: str = "update") -> StreamingQuery:
+    """availableNow run of a streaming DF into a sink's
+    `commit(batch_df, epoch_id)`; returns the terminated query."""
+    return drain(sdf, output_mode, checkpoint_dir, table.commit)

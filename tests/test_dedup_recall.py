@@ -257,6 +257,21 @@ def test_ann_lsh_second_geometry(spark):
     assert found >= 9, f"planted recall at 16x8 geometry: {found}/10"
 
 
+@pytest.mark.parametrize("k", [0, 1, 2, 3, 97, 2050])
+def test_bucket_pairs_are_triu_in_bounded_blocks(k):
+    """The re-rank's pair blocks of a k-row bucket, joined, are
+    np.triu_indices(k, 1) in order, and none holds more than `chunk`
+    pairs: chunk 1 and 7 split single anchors, 2**21 cuts the 2050-row
+    bucket's 2.1M pairs inside an anchor's partners."""
+    iu, ju = np.triu_indices(k, 1)
+    for chunk in (1, 7, 2**21):
+        blocks = list(similarity._bucket_pairs(k, chunk))
+        assert all(len(ic) == len(jc) <= chunk for ic, jc in blocks)
+        ic = np.concatenate([ic for ic, _ in blocks] + [iu[:0]])
+        jc = np.concatenate([jc for _, jc in blocks] + [ju[:0]])
+        assert np.array_equal(ic, iu) and np.array_equal(jc, ju), chunk
+
+
 def test_ann_lsh_recall_at_50k(spark):
     """lsh_geometry at a 10x+ fixture (50k vectors): derived geometry is
     8 bands x 12 bits (log2(50k)-4), per-band p = (1-acos(.98)/pi)^12 ~

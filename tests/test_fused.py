@@ -12,6 +12,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from glcmstream import fixtures, fused, kernel, plan, stream
@@ -93,7 +94,7 @@ def test_fused_stream_windowed_equals_classic_stream(spark, pages_rg_dir):
     def run(tag, job):
         ckpt = os.path.join(SCRATCH, f"ckpt_fused_{tag}")
         shutil.rmtree(ckpt, ignore_errors=True)
-        pdf = spark.table(stream.drain(job, "complete", ckpt)).toPandas()
+        pdf = spark.table(stream.drain(job, "complete", ckpt).name).toPandas()
         return pdf.sort_values(["lang", "host", "n_docs"]) \
             .reset_index(drop=True)
 
@@ -133,7 +134,7 @@ def test_fused_stateful_glcm_matches_batch(spark, pages_rg_dir):
                                     max_files_per_trigger=2,
                                     parallelism=8)
     out = state.stateful_glcm_agg_fused(gvecs)
-    name = stream.drain(out, "update", ckpt)
+    name = stream.drain(out, "update", ckpt).name
     w = W.partitionBy("lang", "host", "window_start") \
          .orderBy(F.desc("n_docs"))
     got = (spark.table(name)
@@ -150,8 +151,9 @@ def test_fused_stateful_glcm_matches_batch(spark, pages_rg_dir):
 
 
 def test_fused_stream_resumes_from_checkpoint(spark, pages_rg_dir):
-    """Kill after the first micro-batch; restart must process exactly the
-    remaining manifests (file-source WAL semantics carry over)."""
+    """Crash in the second micro-batch; the resumed drain replays that
+    epoch and processes exactly the remaining manifests (file-source WAL
+    semantics carry over)."""
     mdir = os.path.join(SCRATCH, "pages_fused_600_manifests2")
     shutil.rmtree(mdir, ignore_errors=True)
     ckpt = os.path.join(SCRATCH, "ckpt_fused_resume")
@@ -167,24 +169,22 @@ def test_fused_stream_resumes_from_checkpoint(spark, pages_rg_dir):
 
     seen = []
 
-    def fb(df, eid):
-        seen.append({r["lang"]: (r["n"], r["ts_sum"])
-                     for r in df.collect()})
+    def fb(df, eid, crash_at=None):
+        if eid == crash_at:
+            raise RuntimeError("injected crash")
+        seen.append((eid, {r["lang"]: (r["n"], r["ts_sum"])
+                           for r in df.collect()}))
 
-    q = (mk().writeStream.outputMode("complete").foreachBatch(fb)
-         .option("checkpointLocation", ckpt).start())
-    while not seen:
-        q.processAllAvailable() if False else None
-        import time
-        time.sleep(0.3)
-    q.stop()
-    q.awaitTermination()
-    n_first = sum(v[0] for v in seen[-1].values())
+    with pytest.raises(StreamingQueryException):
+        stream.drain(mk(), "complete", ckpt,
+                     lambda df, eid: fb(df, eid, crash_at=1))
+    assert [eid for eid, _ in seen] == [0]
+    n_first = sum(v[0] for v in seen[-1][1].values())
     assert n_first < 660
 
     stream.drain(mk(), "complete", ckpt, fb)
-    final = seen[-1]
-    assert sum(v[0] for v in final.values()) == 660
+    assert seen[1][0] == 1
+    assert sum(v[0] for v in seen[-1][1].values()) == 660
 
 
 def test_fused_drain_scans_one_balanced_hand_per_task(spark, pages_rg_dir):
@@ -202,11 +202,8 @@ def test_fused_drain_scans_one_balanced_hand_per_task(spark, pages_rg_dir):
 
     feats = fused.fused_features_stream(spark, pages_rg_dir, mdir,
                                         max_files_per_trigger=None)
-    q = (stream.windowed_agg_over_features(feats).writeStream
-         .format("memory").queryName("fused_hands").outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    q = stream.drain(stream.windowed_agg_over_features(feats), "complete",
+                     ckpt)
     # complete mode runs no trailing no-data epoch: the last execution is
     # the one that scanned the manifests
     lines = q._jsq.explainInternal(False).splitlines()
@@ -236,6 +233,6 @@ def test_fused_drain_scans_one_balanced_hand_per_task(spark, pages_rg_dir):
 
     twin = stream.windowed_agg_over_features(
         fused.fused_features_batch(spark, pages_rg_dir)).collect()
-    got = canon(spark.table("fused_hands").collect())
+    got = canon(spark.table(q.name).collect())
     assert got["n_docs"].sum() == 660
     pd.testing.assert_frame_equal(got, canon(twin))

@@ -127,7 +127,7 @@ def test_moved_table_streams_from_its_new_place(spark, table, tmp_path):
                                              str(tmp_path / "moved")))
     table.destroy()
     name = stream.drain(moved.read_stream(spark), "append",
-                        str(tmp_path / "ck_moved"))
+                        str(tmp_path / "ck_moved")).name
     got = sorted(tuple(r) for r in spark.table(name)
                  .select("url", "doc_id", "warc_ts").collect())
     assert got == want
@@ -275,7 +275,8 @@ def test_schema_evolution_add_and_drop_column(spark, table, tmp_path):
     # the incremental streaming read follows the same contract: latest
     # schema out, NULL backfill for pre-evolution files
     sdf = table.read_stream(spark)
-    got = spark.table(stream.drain(sdf, "append", str(tmp_path / "ck_evo")))
+    got = spark.table(
+        stream.drain(sdf, "append", str(tmp_path / "ck_evo")).name)
     assert set(got.columns) == {"url", "doc_id"}  # latest (narrow) schema
     assert got.count() == 10
 

@@ -155,9 +155,9 @@ def test_stateful_state_exchanges_never_carry_html(spark):
     session): the html decodes map-side and only the fixed-size gvec
     crosses the state exchange — a plan whose Exchange carries html
     serializes the whole corpus per window at 10^12 docs. Streaming
-    plans only materialize once started, so each path runs availableNow
-    on the small fixture and the executed plan comes from
-    explainInternal."""
+    plans only materialize once started, so each path drains into a
+    memory table on the small fixture and the executed plan comes from
+    the returned query's explainInternal."""
     import os as _os
     import shutil as _sh
 
@@ -180,11 +180,7 @@ def test_stateful_state_exchanges_never_carry_html(spark):
         ck = _os.path.join(scratch, f"ckpt_plan_{name}")
         _sh.rmtree(ck, ignore_errors=True)
         sdf = stream.pages_stream(spark, d, max_files_per_trigger=None)
-        q = (fn(sdf).writeStream.format("noop").outputMode("update")
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        s = q._jsq.explainInternal(False)
+        s = stream.drain(fn(sdf), "update", ck)._jsq.explainInternal(False)
         assert "FlatMapGroupsInPandasWithState" in s, (name, s[:400])
         for frag in s.split("Exchange")[1:]:
             line = frag.splitlines()[0]

@@ -53,7 +53,7 @@ def _latest_per_key(df, keys, order_col="n_docs"):
 def _run_windowed(spark, pages_dir, tag):
     sdf = stream.pages_stream(spark, pages_dir)
     agg = stream.windowed_feature_agg(sdf)
-    name = stream.drain(agg, "complete", _scratch(f"ckpt_winagg_{tag}"))
+    name = stream.drain(agg, "complete", _scratch(f"ckpt_winagg_{tag}")).name
     return spark.table(name).toPandas()
 
 
@@ -113,7 +113,7 @@ def test_stateful_glcm_bucketed_matches_batch(spark, pages_dir):
     execution strategy, not a semantic)."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     out = state.stateful_glcm_agg_bucketed(sdf, buckets=16)
-    name = stream.drain(out, "update", _scratch("ckpt_bkt_glcm"))
+    name = stream.drain(out, "update", _scratch("ckpt_bkt_glcm")).name
     got = _latest_per_key(spark.table(name),
                           ["lang", "host", "window_start"])
     exp = state.batch_glcm_agg(stream.read_pages_batch(spark, pages_dir))
@@ -213,7 +213,7 @@ def test_sliding_from_emissions_matches_batch_html(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     panes = state.stateful_glcm_pane_agg_bucketed(sdf, buckets=16)
     emis = spark.table(stream.drain(panes, "update",
-                                    _scratch("ckpt_pane_emis_fused")))
+                                    _scratch("ckpt_pane_emis_fused")).name)
     # multi-epoch emissions actually present (a pane emitted twice)
     assert (emis.groupBy("lang", "host", "pane_start").count()
             .agg(F.max("count")).collect()[0][0] >= 2)
@@ -407,7 +407,7 @@ def test_bucketed_panes_match_per_pane(spark, pages_dir):
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
-        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}")).name
         return (_latest_per_key(spark.table(name),
                                 ["lang", "host", "pane_start"])
                 .drop("n_batches").toPandas()
@@ -429,7 +429,7 @@ def test_stateful_glcm_session_matches_batch(spark, pages_dir):
     close-only emission would lose)."""
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     sess = state.stateful_glcm_session_agg(sdf)
-    name = stream.drain(sess, "update", _scratch("ckpt_sess_glcm"))
+    name = stream.drain(sess, "update", _scratch("ckpt_sess_glcm")).name
     got_df = state.final_sessions(spark.table(name))
     exp_df = state.batch_glcm_agg_session(
         stream.read_pages_batch(spark, pages_dir))
@@ -449,7 +449,7 @@ def test_bucketed_sessions_match_per_key(spark, pages_dir):
     def run(fn, tag):
         sdf = stream.pages_stream(spark, pages_dir,
                                   max_files_per_trigger=2)
-        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}")).name
         return (state.final_sessions(spark.table(name)).toPandas()
                 .sort_values(["lang", "host", "session_start"])
                 .reset_index(drop=True))
@@ -528,7 +528,7 @@ def test_bucketed_null_host_matches_per_key(spark):
 
     def run(fn, tag):
         sdf = stream.pages_stream(spark, src)
-        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}"))
+        name = stream.drain(fn(sdf), "update", _scratch(f"ckpt_{tag}")).name
         return (_latest_per_key(spark.table(name),
                                 ["lang", "host", "window_start"])
                 .drop("_rn", "n_batches").toPandas()
@@ -578,7 +578,7 @@ def test_session_fragments_merge_out_of_order(spark):
            .option("maxFilesPerTrigger", "1").parquet(src)
            .withColumn("warc_ts", F.col("warc_ts").cast("timestamp")))
     sess = state.stateful_glcm_session_agg(sdf)
-    name = stream.drain(sess, "update", _scratch("ckpt_sess_ooo"))
+    name = stream.drain(sess, "update", _scratch("ckpt_sess_ooo")).name
     got = state.final_sessions(spark.table(name)).toPandas()
     assert len(got) == 1 and got["n_docs"].iloc[0] == 3
     assert got["session_start"].iloc[0] == t0
@@ -609,11 +609,14 @@ def test_run_to_sink_commits_each_epoch_once(spark, pages_dir):
 
     sink = CommitOnly()
     ckpt = _scratch("ckpt_commit_only")
-    stream.run_to_sink(stream.pages_stream(spark, pages_dir, 4).select("url"),
-                       sink, ckpt, "append")
+    q = stream.run_to_sink(
+        stream.pages_stream(spark, pages_dir, 4).select("url"), sink, ckpt,
+        "append")
+    assert not q.isActive and q.exception() is None
     epochs = sorted(int(n) for n in os.listdir(os.path.join(ckpt, "commits"))
                     if n.isdigit())
     assert [e for e, _ in sink.calls] == epochs == [0, 1]
+    assert [p["batchId"] for p in q.recentProgress] == epochs
     assert sum(n for _, n in sink.calls) == 440
 
 
@@ -811,12 +814,9 @@ def test_state_width_follows_cores(spark, pages_dir):
     state width in its offset log, so a width-32 checkpoint resumes at
     32 on the default session and still matches the batch oracle."""
     def drain(sdf, ckpt, rows):
-        q = (state.stateful_glcm_agg_bucketed(sdf, buckets=16)
-             .writeStream.outputMode("update")
-             .foreachBatch(lambda df, eid: rows.append(df.toPandas()))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        q = stream.drain(state.stateful_glcm_agg_bucketed(sdf, buckets=16),
+                         "update", ckpt,
+                         lambda df, eid: rows.append(df.toPandas()))
         return {p["stateOperators"][0]["numShufflePartitions"]
                 for p in q.recentProgress if p["stateOperators"]}
 
@@ -1031,11 +1031,8 @@ def _cep_run(spark, src, ckpt, watermark="30 minutes"):
         got.extend((r.user_id, r.click_us, r.purchase_us)
                    for r in df.collect())
 
-    q = (cep.cep_click_purchase(sdf, watermark=watermark)
-         .writeStream.outputMode("update")
-         .foreachBatch(fb).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    q = stream.drain(cep.cep_click_purchase(sdf, watermark=watermark),
+                     "update", ckpt, fb)
     state_rows = [(p["stateOperators"][0]["numRowsTotal"],
                    p["stateOperators"][0]["numRowsRemoved"])
                   for p in (q.recentProgress or [])
@@ -1143,18 +1140,12 @@ def test_glcm_state_evicted_after_watermark(spark):
     batch = stream.read_pages_batch(spark, src)
 
     def run(fn, tag):
-        sdf = (spark.readStream.schema(spark.read.parquet(src).schema)
-               .option("maxFilesPerTrigger", "1").parquet(src)
-               .withColumn("warc_ts", F.col("warc_ts").cast("timestamp")))
         ckpt = _scratch(f"ckpt_{tag}")
-        q = (fn(sdf).writeStream.format("memory").queryName(tag)
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        q = stream.drain(fn(stream.pages_stream(spark, src)), "update", ckpt)
         ops = [p["stateOperators"][0] for p in q.recentProgress
                if p.get("stateOperators")]
         left = spark.read.format("statestore").load(ckpt).collect()
-        return spark.table(tag), ops[-1], left
+        return spark.table(q.name), ops[-1], left
 
     def blob_keys(left):
         return sorted((k[0], k[1], int(m[0]))
@@ -1233,7 +1224,7 @@ def test_cep_watermark_boundary_ties_match_in_event_time_order(spark):
 def test_recrawl_stream_join_matches_batch(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     j = stream.recrawl_stream_join(sdf)
-    name = stream.drain(j, "append", _scratch("ckpt_recrawl"))
+    name = stream.drain(j, "append", _scratch("ckpt_recrawl")).name
     got = spark.table(name).toPandas().sort_values(
         ["url", "t1", "t2"]).reset_index(drop=True)
 
@@ -1247,7 +1238,7 @@ def test_recrawl_stream_join_matches_batch(spark, pages_dir):
 def test_dedup_within_watermark(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=2)
     d = stream.dedup_stream(sdf, watermark="2 hours")
-    name = stream.drain(d.select("url"), "append", _scratch("ckpt_dedup"))
+    name = stream.drain(d.select("url"), "append", _scratch("ckpt_dedup")).name
     got = spark.table(name).count()
     exp = spark.read.parquet(pages_dir).select("url").distinct().count()
     assert got == exp == 400
@@ -1256,7 +1247,7 @@ def test_dedup_within_watermark(spark, pages_dir):
 def test_salted_streaming_agg_exact(spark, pages_dir):
     sdf = stream.pages_stream(spark, pages_dir, max_files_per_trigger=4)
     salted = stream.salted_windowed_doc_counts(sdf)
-    name = stream.drain(salted, "complete", _scratch("ckpt_salted"))
+    name = stream.drain(salted, "complete", _scratch("ckpt_salted")).name
     got = (stream.finalize_salted(spark.table(name))
            .select(F.col("window.start").alias("ws"), "host", "n_docs")
            .toPandas().sort_values(["ws", "host"]).reset_index(drop=True))

@@ -2,8 +2,9 @@
 
 Every streaming query the engine starts goes through stream.py
 (`stream.drain` or `stream.run_to_sink`), so a per-epoch hook added
-there sees every drain. The tests and scripts drain through it too,
-except where they need what a drain does not give (OWN_QUERY_START).
+there sees every drain. The tests and scripts drain through it too, and
+read progress and plans off the query it returns, except where they
+need a query a drain does not run (OWN_QUERY_START).
 """
 
 import ast
@@ -14,21 +15,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "src", "glcmstream")
 
 # The top-level functions of tests/ and scripts/ that start a query with
-# their own `writeStream`, by what `stream.drain` does not give them.
+# their own `writeStream`, by what `stream.drain` cannot run.
 OWN_QUERY_START = {
-    # the query handle: recentProgress per epoch
-    ("tests/test_streaming.py", "test_state_width_follows_cores"),
-    ("tests/test_streaming.py", "_cep_run"),
-    ("tests/test_streaming.py", "test_glcm_state_evicted_after_watermark"),
-    ("scripts/process_starts.py", "main"),
-    # the query handle: the executed plan (the first into the noop sink)
-    ("tests/test_plans.py", "test_stateful_state_exchanges_never_carry_html"),
-    ("tests/test_fused.py",
-     "test_fused_drain_scans_one_balanced_hand_per_task"),
-    # a query stopped while it runs, not availableNow
-    ("tests/test_fused.py", "test_fused_stream_resumes_from_checkpoint"),
+    # a query that keeps running while new commits land
     ("tests/test_iceberg.py",
      "test_incremental_stream_read_picks_up_new_commits"),
+    # a query stopped after its first epoch
     ("scripts/cold_start.py", "child"),
     # the noop sink, whose drain it measures
     ("scripts/worker_init.py", "child"),
